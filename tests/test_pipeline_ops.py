@@ -194,20 +194,6 @@ def test_hamming_near_dups_warns_beyond_recall(spark):
     assert any("guarantees recall" in str(x.message) for x in w)
 
 
-def test_hamming_near_dups_plan_no_join(spark):
-    """The 100TB property: banding NEVER becomes an all-pairs join —
-    one bucket shuffle (window cap reuses the groupBy partitioning)
-    plus the final distinct; no Join operator of any kind."""
-    from xmlschema_spark.operators.dedup import hamming_near_dups
-    df = (spark.range(500)
-          .select(F.col("id").cast("string").alias("doc"),
-                  (F.col("id") * 2654435761).cast("long").alias("h")))
-    p = hamming_near_dups(df, "h", "doc") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in p, p[:1500]
-    assert p.count("Exchange") <= 3, p[:1500]
-
-
 def test_simhash64_fast_bitwise_matches_hof(spark):
     """simhash64_fast (mapInArrow + numpy) must be BITWISE-identical to
     the Catalyst HOF fold simhash64_pair on every edge: NULL text,

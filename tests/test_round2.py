@@ -6,14 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from xmlschema_spark import compile_plan
-from xmlschema_spark.operators.dedup import (deduplicate, lsh_bucket_pairs,
-                                             simhash_near_dups)
+from xmlschema_spark.operators.dedup import deduplicate, simhash_near_dups
 from xmlschema_spark.operators.row_checks import row_violations
 from xmlschema_spark.specs import ColumnSpec, TableSpec, UniqueSpec
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 # --------------------------------------------------------------- dedup fixes
@@ -29,29 +24,6 @@ def test_exact_dedup_keeps_null_text_rows(spark):
     got = sorted(r.doc_id for r in
                  deduplicate(df, "text", "doc_id", method="exact").collect())
     assert got == ["a", "c", "d", "e"]
-
-
-def test_lsh_hot_bucket_capped_and_bounded(spark):
-    """Degenerate corpus: 600 identical docs = ONE bucket per band. The
-    pre-aggregation window cap must bound the pair count to
-    C(max_bucket, 2) and keep the lexicographically-first members."""
-    rows = [(f"d{i:04d}", "spam spam spam wonderful spam spam spam")
-            for i in range(600)]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    pairs = lsh_bucket_pairs(df, "text", "doc_id", max_bucket=16)
-    got = pairs.collect()
-    assert len(got) == 16 * 15 // 2
-    members = {r.id_a for r in got} | {r.id_b for r in got}
-    assert members == {f"d{i:04d}" for i in range(16)}   # deterministic
-
-
-def test_lsh_pairs_single_shuffle_before_pairs(spark):
-    """The window cap must REUSE the groupBy's hash partitioning: exactly
-    2 Exchanges in the whole plan (bucket shuffle + final distinct)."""
-    df = spark.createDataFrame([("a", "x y z w"), ("b", "x y z w")],
-                               "doc_id string, text string")
-    p = _plan(lsh_bucket_pairs(df, "text", "doc_id"))
-    assert p.count("Exchange") == 2, p
 
 
 def test_simhash_capped_and_exact_pairs(spark):

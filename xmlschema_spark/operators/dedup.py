@@ -6,16 +6,15 @@ Scale notes (the whole point of these shapes):
   parallelism, never shuffle-order 'first'). NULL-text rows are kept
   unconditionally (no content to compare; a naive equi-join on the
   fingerprint would silently DROP them — null keys never match).
-- MinHash LSH: signatures computed in the scan projection (JVM HOFs);
-  the band -> bucket-join turns an O(n^2) all-pairs problem into
-  per-bucket candidate pairs. Buckets of size 1 are dropped BEFORE the
-  self-join so the shuffle carries only colliding docs.
-- hot buckets are bounded BEFORE materialization: a row_number() window
-  cap keeps only the lexicographically-first max_bucket members per
-  bucket, so a degenerate bucket (boilerplate spam at 100 TB) never
-  reaches a collect_list aggregation buffer. The window and the
-  following groupBy share the same hash partitioning, so the cap costs
-  a sort, not an extra shuffle.
+- near-dup candidates: lsh_bucket_pairs (md5 band keys over a MinHash
+  signature computed by one mapInArrow pass), simhash_near_dups and
+  hamming_near_dups (Hamming slices of a 48- or 64-bit hash, verified by
+  bit_count(xor)) all run ONE banded core, _banded_pairs: explode each
+  doc once per band, one bucket shuffle that first caps hot buckets to
+  their lexicographically-first max_bucket members (a row_number()
+  window, so a degenerate boilerplate bucket never reaches the
+  collect_list buffer), then pairs generated inside each bucket's member
+  array and a final distinct. Never an all-pairs self-join.
 """
 
 from __future__ import annotations
@@ -44,9 +43,10 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .select(id_col, "fp", "group_n")
 
 
-# per-task shingle digest cache bound (entries): each entry holds
-# n_hashes 16-byte digests (~100 B with dict overhead), so 1<<20
-# entries is ~100 MB/worker worst case
+# per-task shingle digest cache bound (entries). One entry at n_hashes=4
+# and a 15-char shingle measures (sys.getsizeof) 64 B key + 72 B tuple +
+# 4 x 49 B digests = 332 B, ~370 B with its dict slot, +57 B per extra
+# hash: 1<<20 entries is ~390 MB/worker worst case
 _MINHASH_SH_CACHE_MAX = 1 << 20
 
 
@@ -125,52 +125,63 @@ def _cap_buckets(df: DataFrame, keys: list[str], order_col,
     parallelism, and BOUNDED BEFORE any
     collect_list/applyInPandas materializes the bucket. The window's
     hash partitioning is reused by a following groupBy on the same keys
-    (no extra Exchange — asserted in tests/test_plan_shapes.py)."""
+    (no extra Exchange — asserted in tests/test_banded_near_dups.py)."""
     w = Window.partitionBy(*keys).orderBy(order_col)
     return (df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= max_bucket).drop("_rn"))
 
 
+def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
+                  carry: tuple = (), verify: str | None = None) -> DataFrame:
+    """The one banded near-dup pipeline: ordered pairs (id_a < id_b
+    [, verify]) of `doc`s that share a bucket in a band, one row per
+    shared band; callers end with the distinct.
+
+    `keys[b]` is band b's bucket key, a Column over df. Each doc is
+    exploded once per band into (doc, carry..., band, key); ONE shuffle
+    on (band, key) feeds both the _cap_buckets window and the
+    collect_list aggregate, so a hot bucket is cut to its first
+    max_bucket docs before any buffer holds it. Singleton buckets die in
+    the HAVING, and pairs are generated inside the sorted member array:
+    never a self-join. `verify` is a SQL field over the two members `a`
+    and `b` (structs of doc and `carry`), e.g. a Hamming distance. With
+    the callers' distinct the plan has exactly two Exchanges (pinned by
+    tests/test_banded_near_dups.py)."""
+    bands = F.array(*(F.struct(F.lit(b).alias("band"), k.alias("key"))
+                      for b, k in enumerate(keys)))
+    # a NULL doc is never paired: pairs satisfy id_a < id_b
+    blocks = (df.where(F.col("doc").isNotNull())
+              .select("doc", *carry, F.explode(bands).alias("bb"))
+              .select("doc", *carry, "bb.band", "bb.key"))
+    capped = _cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
+    grouped = (capped.groupBy("band", "key")
+               .agg(F.array_sort(F.collect_list(F.struct("doc", *carry)))
+                    .alias("ms"),
+                    F.count(F.lit(1)).alias("bn"))
+               .where(F.col("bn") > 1))
+    fields = "a.doc AS id_a, b.doc AS id_b" + (f", {verify}" if verify else "")
+    pairs_arr = F.expr(
+        "flatten(transform(ms, (a, i) -> "
+        f"transform(slice(ms, i + 2, size(ms)), b -> struct({fields}))))")
+    return grouped.select(F.explode(pairs_arr).alias("p")).select("p.*")
+
+
 def lsh_bucket_pairs(df: DataFrame, text_col: str, id_col: str,
                      n_hashes: int = 4, band_size: int = 2,
                      max_bucket: int = 64) -> DataFrame:
-    """Candidate near-dup pairs: band the signature, bucket-join within
-    bands, emit ordered (id_a < id_b) distinct pairs.
-
-    max_bucket caps pathological buckets (all-identical boilerplate) so
-    one hot key can't quadratically explode the pair list; capped
-    buckets keep their lexicographically-first max_bucket members, and
-    the cap is applied by a pre-aggregation window so the aggregation
-    buffer itself is bounded (a post-collect slice() would OOM first)."""
+    """Candidate near-dup pairs (id_a < id_b, distinct) from MinHash
+    LSH: docs whose signatures agree on every hash of at least one band
+    of `band_size` hashes. Candidates only: verify with ngram_jaccard.
+    Physical shape and hot-bucket cap: see _banded_pairs."""
+    if band_size < 1 or n_hashes < band_size or n_hashes % band_size:
+        raise ValueError(f"band_size must be a positive divisor of "
+                         f"n_hashes={n_hashes}, got {band_size!r}")
     sigs = minhash_signatures(df, text_col, id_col, n_hashes)
-    n_bands = n_hashes // band_size
-    # one scan: per doc, an array of (band, bucket) structs -> explode.
-    # Signatures are computed exactly once per document.
-    band_structs = []
-    for b in range(n_bands):
-        cols = [f"h{b * band_size + j}" for j in range(band_size)]
-        band_structs.append(F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *cols)).alias("bucket")))
-    bands = (sigs.select(F.col(id_col).alias("doc"),
-                         F.explode(F.array(*band_structs)).alias("bb"))
-             .select("doc", "bb.band", "bb.bucket"))
-    # ONE shuffle: window-cap then collect member list per bucket;
-    # singleton buckets (the vast majority) die in the HAVING before any
-    # pair generation.
-    capped = _cap_buckets(bands, ["band", "bucket"], "doc", max_bucket)
-    grouped = (capped.groupBy("band", "bucket")
-               .agg(F.array_sort(F.collect_list("doc")).alias("docs"),
-                    F.count(F.lit(1)).alias("bn"))
-               .where(F.col("bn") > 1))
-    # ordered pairs generated INSIDE the array — no self-join:
-    # flatten(transform(docs, (a,i) -> transform(slice(docs, i+2, n), b -> (a,b))))
-    pairs_arr = F.expr(
-        "flatten(transform(docs, (a, i) -> "
-        "transform(slice(docs, i + 2, size(docs)), b -> struct(a AS id_a, b AS id_b))))")
-    return (grouped.select(F.explode(pairs_arr).alias("p"))
-            .select(F.col("p.id_a"), F.col("p.id_b"))
-            .distinct())
+    keys = [F.md5(F.concat_ws("|", *(f"h{b * band_size + j}"
+                                     for j in range(band_size))))
+            for b in range(n_hashes // band_size)]
+    return _banded_pairs(sigs.withColumnRenamed(id_col, "doc"), keys,
+                         max_bucket).distinct()
 
 
 def ngram_jaccard(df: DataFrame, text_col: str, id_col: str,
@@ -192,118 +203,68 @@ def ngram_jaccard(df: DataFrame, text_col: str, id_col: str,
             .where(F.col("jaccard") >= threshold))
 
 
+def _hamming_pairs(h: DataFrame, n_bits: int, bands: int,
+                   max_hamming: int, max_bucket: int) -> DataFrame:
+    """Banded-Hamming near-dups over h = (doc, sh bigint): block on the
+    `bands` equal slices of sh's low n_bits, then verify
+    bit_count(a.sh ^ b.sh) <= max_hamming exactly inside each bucket.
+
+    Recall (pigeonhole): a pair within distance d shares at least one
+    slice iff d <= bands-1, so blocking is exact up to there; beyond it
+    pairs differing in every slice are missed, and this warns."""
+    if bands < 1 or n_bits % bands:
+        raise ValueError(f"bands must be a positive divisor of {n_bits}, "
+                         f"got {bands!r}")
+    if max_hamming >= bands:
+        import warnings
+        warnings.warn(
+            f"{bands}-band hamming blocking guarantees recall only for "
+            f"hamming <= {bands - 1}; pairs at distance {bands}.."
+            f"{max_hamming} that differ in all bands will be missed",
+            stacklevel=3)
+    width = n_bits // bands
+    keys = [F.shiftrightunsigned(F.col("sh"), b * width) for b in range(bands)]
+    if width < 64:
+        keys = [k.bitwiseAND(F.lit((1 << width) - 1)) for k in keys]
+    return (_banded_pairs(h, keys, max_bucket, carry=("sh",),
+                          verify="bit_count(a.sh ^ b.sh) AS hamming")
+            .where(F.col("hamming") <= max_hamming))
+
+
 def simhash_near_dups(df: DataFrame, text_col: str, id_col: str,
                       max_hamming: int = 3,
                       max_bucket: int = 64) -> DataFrame:
-    """SimHash near-dup pairs over the portable 48-bit simhash: block on
-    the four 12-bit bands, then verify Hamming distance exactly via
-    bit_count(xor) inside each block.
+    """SimHash near-dup pairs (id_a, id_b, hamming int) over the portable
+    48-bit simhash (simhash48_fast, bitwise-identical to the simhash48
+    HOF fold), banded into SIMHASH_BANDS 12-bit slices.
 
-    Recall guarantee (pigeonhole): a pair within Hamming distance d
-    shares at least one of the 4 bands iff d <= 3; this is exact for the
-    default max_hamming=3. For max_hamming in 4..7 the blocking is
-    best-effort (pairs differing in all 4 bands are missed) — callers
-    wanting guaranteed recall at larger d must raise the band count.
-
-    Hot bands are capped with the same pre-aggregation window as the
-    MinHash path (bounded before materialization; deterministic
-    lexicographic survivors), and pairs are generated inside the
-    collected array — no self-join, no quadratic hot-key blowup.
-
-    The hash derivation uses the Arrow-vectorized simhash48_fast
-    (bitwise-identical to the simhash48 HOF fold — see
-    text._simhash_fast_frame); at 10^9 documents the per-row Catalyst
-    expression overhead of 48 array-filter folds would dominate the
-    banding itself."""
-    if max_hamming >= SIMHASH_BANDS:
-        import warnings
-        warnings.warn(
-            f"simhash banding guarantees recall only for hamming <= "
-            f"{SIMHASH_BANDS - 1}; pairs at distance {SIMHASH_BANDS}.."
-            f"{max_hamming} that differ in all bands will be missed",
-            stacklevel=2)
+    Recall is exact for max_hamming <= 3 (the default) and best-effort,
+    with a warning, beyond. Banding, verify and physical shape: see
+    _hamming_pairs and _banded_pairs."""
     sh = simhash48_fast(
         df.select(F.col(id_col).alias("doc"), text_col),
         text_col, "doc").withColumnRenamed("sh48", "sh")
-    band_structs = [
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(F.col("sh"), b * 12)
-                  .bitwiseAND(F.lit(0xFFF)).alias("key"))
-        for b in range(SIMHASH_BANDS)]
-    blocks = (sh.select("doc", "sh",
-                        F.explode(F.array(*band_structs)).alias("bb"))
-              .select("doc", "sh", "bb.band", "bb.key"))
-    capped = _cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
-    grouped = (capped.groupBy("band", "key")
-               .agg(F.array_sort(F.collect_list(F.struct("doc", "sh")))
-                    .alias("ms"),
-                    F.count(F.lit(1)).alias("bn"))
-               .where(F.col("bn") > 1))
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        "transform(slice(ms, i + 2, size(ms)), b -> struct("
-        "a.doc AS id_a, b.doc AS id_b, "
-        "bit_count(a.sh ^ b.sh) AS hamming))))")
-    return (grouped.select(F.explode(pairs_arr).alias("p"))
-            .select("p.id_a", "p.id_b", "p.hamming")
-            .where(F.col("hamming") <= max_hamming)
-            .distinct())
+    return _hamming_pairs(sh, SIMHASH_BITS, SIMHASH_BANDS, max_hamming,
+                          max_bucket).distinct()
 
 
 def hamming_near_dups(df: DataFrame, hash_col: str, id_col: str,
                       bands: int = 8, max_hamming: int = 7,
                       max_bucket: int = 64) -> DataFrame:
-    """Banded-Hamming near-duplicate pairs over a 64-bit similarity /
-    perceptual hash column — the IMAGE-DEDUP shape (the input table's
-    `phash int64` per BASELINE.json input_hint; equally a 64-bit
-    SimHash). Signedness is irrelevant: banding and the verify operate
-    on the raw bit pattern.
+    """Banded-Hamming near-dup pairs (id_a, id_b, hamming bigint) over a
+    64-bit similarity or perceptual hash column (the image-dedup
+    shape). Signedness is irrelevant: banding and the verify read the
+    raw bit pattern.
 
-    Recall guarantee (pigeonhole): a pair within Hamming distance d
-    shares at least one of the `bands` equal slices iff d <= bands-1,
-    so blocking is EXACT for max_hamming <= bands-1 (default 8 bands
-    of 8 bits -> exact through distance 7); beyond that it is
-    best-effort and warns.
-
-    Physical shape = simhash_near_dups (the 100 TB path): ONE shuffle
-    (explode the bands, bucket groupBy), deterministic hot-bucket cap
-    BEFORE materialization, in-bucket pair generation, exact
-    bit_count(xor) verify — never an all-pairs join."""
-    if 64 % bands:
-        raise ValueError("bands must divide 64")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    if max_hamming >= bands:
-        import warnings
-        warnings.warn(
-            f"hamming banding guarantees recall only for hamming <= "
-            f"{bands - 1}; pairs at distance {bands}..{max_hamming} "
-            "that differ in all bands will be missed", stacklevel=2)
+    `bands` must divide 64; recall is exact for max_hamming <= bands-1
+    (default 8 bands of 8 bits: through distance 7) and best-effort,
+    with a warning, beyond. bands=1 is exact-match blocking on the
+    whole hash. Banding, verify and physical shape: see _hamming_pairs
+    and _banded_pairs."""
     h = df.select(F.col(id_col).alias("doc"),
                   F.col(hash_col).cast("long").alias("sh"))
-    band_structs = [
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(F.col("sh"), b * width)
-                  .bitwiseAND(F.lit(mask)).alias("key"))
-        for b in range(bands)]
-    blocks = (h.select("doc", "sh",
-                       F.explode(F.array(*band_structs)).alias("bb"))
-              .select("doc", "sh", "bb.band", "bb.key"))
-    capped = _cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
-    grouped = (capped.groupBy("band", "key")
-               .agg(F.array_sort(F.collect_list(F.struct("doc", "sh")))
-                    .alias("ms"),
-                    F.count(F.lit(1)).alias("bn"))
-               .where(F.col("bn") > 1))
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        "transform(slice(ms, i + 2, size(ms)), b -> struct("
-        "a.doc AS id_a, b.doc AS id_b, "
-        "bit_count(a.sh ^ b.sh) AS hamming))))")
-    return (grouped.select(F.explode(pairs_arr).alias("p"))
-            .select("p.id_a", "p.id_b",
-                    F.col("p.hamming").cast("long").alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
+    return (_hamming_pairs(h, 64, bands, max_hamming, max_bucket)
+            .withColumn("hamming", F.col("hamming").cast("long"))
             .distinct())
 
 

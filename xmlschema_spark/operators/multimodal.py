@@ -1,4 +1,4 @@
-"""Multimodal (image/audio/video) column operators.
+"""Multimodal (image) column operators.
 
 Binary payloads are opaque `binary` columns + typed metadata; all
 compute flows through Arrow-batched mapInArrow so executors move whole
@@ -21,7 +21,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -161,45 +160,3 @@ def thumbnails(df: DataFrame, out_w: int = 32, out_h: int = 32,
                 schema=out_schema)
 
     return narrow.mapInArrow(run, schema=schema)
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 30,
-                      bytes_col: str = "bytes",
-                      id_col: str = "video_id") -> DataFrame:
-    """Video frame sampling — pipeline shape only; the frame decoder is
-    NOT implemented in this container (no ffmpeg). The mapInPandas
-    contract (schema, batching, pruning) is the deliverable; production
-    swaps the body for av/ffmpeg iteration."""
-    schema = T.StructType([
-        T.StructField("video_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError(
-            "video decode requires ffmpeg/av — not available in this "
-            "environment; see frame_sample_stub docstring")
-
-    return df.select(id_col, bytes_col).mapInPandas(run, schema=schema)
-
-
-def audio_features_stub(df: DataFrame, every_ms: int = 1000,
-                        bytes_col: str = "bytes",
-                        id_col: str = "audio_id") -> DataFrame:
-    """Audio feature extraction — pipeline shape only; no audio decoder
-    in this container (no soundfile/librosa). Production swaps the body
-    for frame decode + mel features; schema/batching/pruning are real."""
-    schema = T.StructType([
-        T.StructField("audio_id", T.StringType()),
-        T.StructField("window_idx", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("mel", T.ArrayType(T.DoubleType())),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError(
-            "audio decode requires soundfile/librosa — not available in "
-            "this environment; see audio_features_stub docstring")
-
-    return df.select(id_col, bytes_col).mapInPandas(run, schema=schema)

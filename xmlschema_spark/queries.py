@@ -789,7 +789,7 @@ def minhash_signatures_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 """)
 def lsh_candidate_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs: 2 bands x 2 rows, singleton buckets
-    dropped before the self-join, deterministic bucket-size cap."""
+    dropped before pair generation, deterministic bucket-size cap."""
     from .operators.dedup import lsh_bucket_pairs
     d = _load(spark, sf_dir, "documents", fan=True) \
         .withColumn("doc_id", F.col("doc_id").cast("string"))
