@@ -28,6 +28,14 @@ def test_queries_oracle_key_consistency():
         assert len(inspect.signature(fn).parameters) == 2, name
 
 
+def test_registry_holds_the_80_names():
+    """The registry holds all 80 query names, and every oracle
+    belongs to a registered query."""
+    from xmlschema_spark.queries import ORACLES, QUERIES
+    assert len(QUERIES) == 80
+    assert set(ORACLES) <= set(QUERIES)
+
+
 # Queries with NO DuckDB oracle, each with the reason it is not
 # SQL-expressible. Growing this set is a release decision, not a
 # default — the driver's gate records these as weaker rows-only checks.

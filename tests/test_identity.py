@@ -83,3 +83,26 @@ def test_idref_self_reference(spark):
         "k string, id string, ref string")
     out = idref_violations(df, "id", "ref", "k").collect()
     assert {(r.row_key, r.occurs) for r in out} == {("r3", 1)}
+
+
+def test_from_dict_drops_legacy_salt_with_one_warning():
+    """UniqueSpec.salt is retired: a spec dict that still carries it
+    loads, with exactly one DeprecationWarning, and the key is gone."""
+    import warnings
+
+    from xmlschema_spark.specs import TableSpec
+    d = {"name": "t", "key_column": "k",
+         "uniques": [{"name": "u", "columns": ["a"], "salt": 16},
+                     {"name": "v", "columns": ["b"], "salt": None}]}
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        spec = TableSpec.from_dict(d)
+    dep = [x for x in w if issubclass(x.category, DeprecationWarning)]
+    assert len(dep) == 1 and "salt" in str(dep[0].message)
+    assert [(u.name, u.columns) for u in spec.uniques] == \
+        [("u", ["a"]), ("v", ["b"])]
+    assert not hasattr(spec.uniques[0], "salt")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        TableSpec.from_dict({**d, "uniques": [{"name": "u",
+                                               "columns": ["a"]}]})

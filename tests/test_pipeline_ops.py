@@ -200,8 +200,8 @@ def test_simhash64_fast_bitwise_matches_hof(spark):
     empty string, whitespace-only, multi-token, unicode, and every
     Java \\s class member (space/tab/NL/VT/FF/CR — NOT unicode NBSP,
     which both sides must treat as a token character)."""
-    from xmlschema_spark.operators.text import (simhash64_fast,
-                                                simhash64_pair)
+    from text_hash_reference import simhash64_pair
+    from xmlschema_spark.operators.text import simhash64_fast
     rows = [
         ("n", None), ("e", ""), ("w", "   "), ("t", "\t\n\x0b\f\r"),
         ("a", "the quick brown fox"), ("b", "the  quick\tbrown\nfox"),
@@ -235,7 +235,8 @@ def test_simhash64_fast_plan_no_shuffle(spark):
 def test_simhash48_fast_bitwise_matches_hof(spark):
     """simhash48_fast must be BITWISE-identical to the Catalyst HOF
     fold simhash48 on the same edge inventory as the 64-bit twin."""
-    from xmlschema_spark.operators.text import simhash48, simhash48_fast
+    from text_hash_reference import simhash48
+    from xmlschema_spark.operators.text import simhash48_fast
     rows = [
         ("n", None), ("e", ""), ("w", "   "), ("t", "\t\n\x0b\f\r"),
         ("a", "the quick brown fox"), ("b", "the  quick\tbrown\nfox"),
@@ -253,10 +254,10 @@ def test_simhash48_fast_bitwise_matches_hof(spark):
 
 def test_minhash_kernel_bitwise_matches_hof(spark):
     """The r8 mapInArrow MinHash kernel must be BITWISE-identical to
-    the Catalyst HOF derivation text.minhash_signature on every edge:
+    the Catalyst HOF derivation minhash_signature on every edge:
     NULL text, empty, whitespace-only, < k tokens, exactly k tokens,
     repeated shingles, unicode, and every Java \\s class member."""
-    from xmlschema_spark.operators.text import minhash_signature
+    from text_hash_reference import minhash_signature
     rows = [
         ("n", None), ("e", ""), ("w", "   "), ("t", "\t\n\x0b\f\r"),
         ("k2", "two words"), ("k3", "three words here"),

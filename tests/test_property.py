@@ -126,19 +126,10 @@ TEXTS = st.text(
 @settings(max_examples=120, deadline=None)
 @given(s=TEXTS, n_bits=st.sampled_from([48, 64]))
 def test_simhash_bits_match_spec(s, n_bits):
-    """The vectorized SimHash kernel (operators/text._simhash_bits)
+    """The shipped SimHash bit expansion (operators/text.simhash_bits)
     must match a naive reading of the documented spec: tokenize on
     Java \\s runs (trim spaces; [''] for empty), bit b of token t =
     bit (b % 4) of hex digit (b // 4) of md5(t), per-bit majority."""
-    import hashlib
-    import re
-    from xmlschema_spark.operators.text import _simhash_bits
-    toks = re.sub("[ \t\n\x0b\f\r]+", " ", s).strip(" ").split(" ")
-    votes = []
-    for b in range(n_bits):
-        ones = sum(
-            1 for t in toks
-            if (int(hashlib.md5(t.encode()).hexdigest()[b // 4], 16)
-                >> (b % 4)) & 1)
-        votes.append(ones * 2 > len(toks))
-    assert list(_simhash_bits(s, n_bits)) == votes
+    from text_hash_reference import spec_simhash_votes
+    from xmlschema_spark.operators.text import simhash_bits
+    assert list(simhash_bits([s], n_bits)[0]) == spec_simhash_votes(s, n_bits)

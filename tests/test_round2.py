@@ -39,15 +39,16 @@ def test_simhash_capped_and_exact_pairs(spark):
 
 
 def test_simhash_matches_duckdb_oracle(spark):
-    """The 48-bit simhash must be bit-identical to the portable md5-digit
-    construction in any engine (here: DuckDB)."""
+    """The shipped 48-bit simhash (simhash48_fast) must be bit-identical
+    to the portable md5-digit construction in any engine (here:
+    DuckDB)."""
     import duckdb
     texts = ["the quick brown fox", "hello world", "a", "x y z w"]
     df = spark.createDataFrame([(str(i), t) for i, t in enumerate(texts)],
                                "doc_id string, text string")
-    from xmlschema_spark.operators.text import simhash48
-    got = {r.doc_id: r.sh for r in
-           df.select("doc_id", simhash48(F.col("text")).alias("sh")).collect()}
+    from xmlschema_spark.operators.text import simhash48_fast
+    got = {r.doc_id: r.sh48 for r in
+           simhash48_fast(df, "text", "doc_id").collect()}
     from xmlschema_spark.queries import _SIMHASH_TERMS
     con = duckdb.connect()
     for i, t in enumerate(texts):

@@ -1,4 +1,4 @@
-"""F4 skew fixture (salted aggregation correctness under a hot key) and
+"""F4 skew fixture (unique-aggregate correctness under a hot key) and
 F5 drift fixture (KL detects the shifted column, not the stable one)."""
 
 import pytest
@@ -10,14 +10,14 @@ from xmlschema_spark.sources.fixtures import make_images
 from xmlschema_spark.specs import UniqueSpec
 
 
-def test_salted_unique_correct_under_skew(spark):
-    """30% of rows share one phash (F4). The salted two-level aggregate
-    must produce the same violation set as a straight groupBy."""
+def test_unique_correct_under_skew(spark):
+    """30% of rows share one phash (F4). The unique aggregate must
+    produce the same violation set as a straight groupBy."""
     df = make_images(spark, 5000, dirty=False, skew_phash=True,
                      with_bytes=False).cache()
     hot = df.groupBy("phash").count().where(F.col("count") > 1).collect()
     hot_sizes = {r.phash: r["count"] for r in hot}
-    out = unique_violations(df, UniqueSpec("phash", ["phash"], salt=32),
+    out = unique_violations(df, UniqueSpec("phash", ["phash"]),
                             "image_id").collect()
     # every row in a hot group flagged, carrying the exact group size
     assert len(out) == sum(hot_sizes.values())
@@ -27,12 +27,15 @@ def test_salted_unique_correct_under_skew(spark):
 
 
 def test_skewed_vs_unskewed_same_plan_shape(spark):
-    """Salting must not change results for uniform keys either."""
+    """Uniform keys: the unique aggregate flags exactly the rows whose
+    phash a straight groupBy counts more than once, with that count."""
     df = make_images(spark, 2000, dirty=True, with_bytes=False)
-    a = unique_violations(df, UniqueSpec("phash", ["phash"], salt=64),
-                          "image_id")
-    b = unique_violations(df, UniqueSpec("phash", ["phash"], salt=2),
-                          "image_id")
+    a = unique_violations(df, UniqueSpec("phash", ["phash"]), "image_id")
+    n = df.groupBy("phash").agg(F.count(F.lit(1)).alias("occurs"))
+    b = (df.where(F.col("phash").isNotNull()).join(n, "phash")
+         .where(F.col("occurs") > 1)
+         .select(F.col("image_id").cast("string").alias("row_key"),
+                 "occurs"))
     assert sorted((r.row_key, r.occurs) for r in a.collect()) == \
            sorted((r.row_key, r.occurs) for r in b.collect())
 

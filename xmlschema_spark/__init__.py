@@ -4,7 +4,7 @@ A from-scratch rebuild of sissaschool/xmlschema's validator semantics
 (types + facets, identity constraints, referential integrity, assertions,
 strict/lax/skip modes) as Catalyst column expressions and Arrow-batched
 UDFs over DataFrames, plus the Spark-scale additions the reference never
-needed: salted aggregates, anti-join referential checks, drift sketches,
+needed: skew-safe aggregates, anti-join referential checks, drift sketches,
 per-partition lineage manifests, and training-data pipeline operators.
 """
 

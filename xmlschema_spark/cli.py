@@ -5,8 +5,8 @@ per-file loop, exit code = invalid count) at cluster scale: args are a
 table path, a spec JSON, mode, checkpoint and output dirs; verdicts are
 per data-derived partition; exit code = number of failing partitions.
 
-Usage:
-  spark-submit --py-files /tmp/xmlschema_spark_pkg.zip \
+Usage (the zip is distribute.package_zip's output):
+  spark-submit --py-files xmlschema_spark_pkg_<hash>.zip \
       -m xmlschema_spark.cli --table s3://.../images --spec spec.json \
       --checkpoint /chk --output /out --mode lax
   (local dev: python -m xmlschema_spark.cli ...)

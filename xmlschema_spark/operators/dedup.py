@@ -26,7 +26,8 @@ import zlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import fingerprint, shingles, simhash48_fast
+from .text import (fingerprint, minhash_signatures, shingles,
+                   simhash48_fast)
 
 SIMHASH_BITS = 48
 SIMHASH_BANDS = 4          # 4 x 12-bit bands: pigeonhole-safe for d <= 3
@@ -41,81 +42,6 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
               .where(F.col("group_n") > 1))
     return with_fp.join(groups, on="fp", how="inner") \
         .select(id_col, "fp", "group_n")
-
-
-# per-task shingle digest cache bound (entries). One entry at n_hashes=4
-# and a 15-char shingle measures (sys.getsizeof) 64 B key + 72 B tuple +
-# 4 x 49 B digests = 332 B, ~370 B with its dict slot, +57 B per extra
-# hash: 1<<20 entries is ~390 MB/worker worst case
-_MINHASH_SH_CACHE_MAX = 1 << 20
-
-
-def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       n_hashes: int = 4, k: int = 3) -> DataFrame:
-    """(id, h0..h{n-1}) MinHash signature table.
-
-    r8: one mapInArrow pass (guide §4.2) replacing the Catalyst HOF
-    derivation — the HOF path paid per-shingle expression overhead
-    (transform + concat + md5 + array_min object churn, ~3x the raw
-    hash cost). The math is UNCHANGED and engine-portable, and the
-    DuckDB oracle replays it verbatim: h_s = min over word-k-shingles
-    of md5('{s}|' || shingle), where the lexicographic min of the
-    lowercase-hex digest equals the byte-wise min of the raw digest
-    (hex encoding is order-preserving), tokenization is tokens()'s
-    Java-\\s split, and texts with fewer than k tokens (or NULL text)
-    yield NULL signatures exactly like array_min over an empty
-    shingle set. Shingle digests are cached across batches per task
-    (bounded) — natural-language shingle streams repeat. The HOF
-    expression stays available as text.minhash_signature (the
-    pure-Catalyst derivation; equality-tested against this kernel)."""
-    from ..distribute import ensure_distributed
-    ensure_distributed(df.sparkSession)
-    narrow = df.select(*dict.fromkeys([id_col, text_col]))
-    id_type = next(f.dataType.simpleString()
-                   for f in narrow.schema.fields if f.name == id_col)
-    out_names = [f"h{s}" for s in range(n_hashes)]
-    out_schema = f"`{id_col}` {id_type}, " + \
-        ", ".join(f"{n} string" for n in out_names)
-    prefixes = [f"{s}|".encode("utf-8") for s in range(n_hashes)]
-
-    def run(batches):
-        import hashlib
-        import re
-
-        import pyarrow as pa
-        ws = re.compile("[ \t\n\x0b\f\r]+")
-        cache: dict = {}              # shingle -> tuple of digests
-
-        def digests(sh: str):
-            got = cache.get(sh)
-            if got is None:
-                if len(cache) > _MINHASH_SH_CACHE_MAX:
-                    cache.clear()
-                e = sh.encode("utf-8")
-                got = cache[sh] = tuple(
-                    hashlib.md5(p + e).digest() for p in prefixes)
-            return got
-
-        for b in batches:
-            texts = b.column(text_col).to_pylist()
-            outs: list = [[] for _ in out_names]
-            for s in texts:
-                toks = (ws.sub(" ", s).strip(" ").split(" ")
-                        if s is not None else [])
-                if len(toks) < k:
-                    for o in outs:
-                        o.append(None)   # empty shingle set -> NULL
-                    continue
-                dgs = [digests(" ".join(toks[i:i + k]))
-                       for i in range(len(toks) - k + 1)]
-                for fam, o in enumerate(outs):
-                    o.append(min(d[fam] for d in dgs).hex())
-            yield pa.record_batch(
-                [b.column(id_col)] + [pa.array(o, pa.string())
-                                      for o in outs],
-                names=[id_col] + out_names)
-
-    return narrow.mapInArrow(run, out_schema)
 
 
 def _cap_buckets(df: DataFrame, keys: list[str], order_col,
@@ -235,8 +161,8 @@ def simhash_near_dups(df: DataFrame, text_col: str, id_col: str,
                       max_hamming: int = 3,
                       max_bucket: int = 64) -> DataFrame:
     """SimHash near-dup pairs (id_a, id_b, hamming int) over the portable
-    48-bit simhash (simhash48_fast, bitwise-identical to the simhash48
-    HOF fold), banded into SIMHASH_BANDS 12-bit slices.
+    48-bit simhash (simhash48_fast), banded into SIMHASH_BANDS 12-bit
+    slices.
 
     Recall is exact for max_hamming <= 3 (the default) and best-effort,
     with a warning, beyond. Banding, verify and physical shape: see

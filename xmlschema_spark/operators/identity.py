@@ -123,9 +123,8 @@ def unique_violations(df: DataFrame, spec: UniqueSpec, key_column: str,
     # collect_list — those paths use pre-aggregation window caps
     # instead, see operators/dedup._cap_buckets). Measured sf1.0
     # local[32]: orders.o_custkey 1.79s -> 0.87s, images.phash
-    # 0.76s -> 0.68s, bitwise-identical output. UniqueSpec.salt is
-    # retained for API compatibility and ignored.
-    salted = (
+    # 0.76s -> 0.68s, bitwise-identical output.
+    dup_tuples = (
         present
         .groupBy(*cols).agg(F.count(F.lit(1)).alias("occurs"))
         .where(F.col("occurs") > 1)
@@ -133,7 +132,7 @@ def unique_violations(df: DataFrame, spec: UniqueSpec, key_column: str,
     # dup tuple set is usually tiny; AQE converts this join to broadcast
     # at runtime when it is — no forced hint (could be huge in bad data)
     dups = (
-        present.join(salted, on=cols, how="inner")
+        present.join(dup_tuples, on=cols, how="inner")
         .select(
             F.col(key_column).cast("string").alias("row_key"),
             _part(part_key),

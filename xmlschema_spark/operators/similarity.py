@@ -65,7 +65,7 @@ def plane_weight(plane: int, dim: int) -> float:
     xxhash64) so the exact same weights are computable by any engine —
     the DuckDB oracles replicate buckets bit-for-bit via
     strpos('13579bdf', substr(md5(key), 2, 1)) (same portability move
-    as simhash48 in operators/text.py). No RNG state anywhere."""
+    as the SimHash bits in operators/text.py). No RNG state anywhere."""
     import hashlib
     h = hashlib.md5(f"p{plane}|d{dim}".encode()).digest()[0]
     return -1.0 if h % 2 else 1.0

@@ -1,11 +1,18 @@
 """Text-analysis operators for training-data pipelines (SURVEY.md scope
 extension): token counting, quality scoring, language-ID heuristic,
-document fingerprinting. All JVM-side Catalyst expressions — no Python
-in the hot path; at 100 TB these run inside whole-stage codegen on the
-scan projection."""
+shingling and whole-document fingerprints as Catalyst expressions, plus
+the one Arrow text-hashing core that SimHash and MinHash run on
+(simhash48_fast, simhash64_fast, minhash_signatures)."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+import sys
+from functools import partial
+
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -130,272 +137,253 @@ def shingles(col: Column, k: int = 3) -> Column:
     return bind1(tokens(col), lambda t: shingles_from_tokens(t, k))
 
 
-def minhash_signature(col: Column, n_hashes: int = 4, k: int = 3) -> Column:
-    """MinHash over word k-shingles, as a STRUCT column (h0..h{n-1}).
-    Each hash family h_s(x) = md5(s || '|' || x); the signature element
-    is the lexicographic MIN digest — identical math is expressible in
-    any SQL engine (portable oracle), and md5 is uniform enough for
-    Jaccard estimation. Extract fields through a Generate barrier
-    (F.inline(F.array(sig))) — plain field selects re-inline the tree."""
-    def hasher(prefix: str):
-        def h(x):
-            return F.md5(F.concat(F.lit(prefix), x))
-        return h
+# ---------------------------------------------------------------------------
+# The Arrow text-hashing core. simhash48_fast, simhash64_fast and
+# minhash_signatures run one mapInArrow scaffold (_text_hash_frame) over
+# one tokenizer (split_tokens) and one bounded per-task digest cache
+# (_DigestCache). This module pickles by value, so the Python workers run
+# the kernels without importing the package.
+# ---------------------------------------------------------------------------
 
-    def sig_from(sh):
-        return F.struct(*[
-            F.array_min(F.transform(sh, hasher(f"{s}|"))).alias(f"h{s}")
-            for s in range(n_hashes)])
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
-    # bind shingles once; the n_hashes families share the evaluation
-    return bind1(shingles(col, k), sig_from)
+# per-task digest cache bound (keys), both kernels. An entry is one table
+# row (64 B: 64 bit bytes, or 4 x 16 digest bytes at n_hashes=4) plus its
+# key string and dict slot: ~220 B with a 15-char key (tracemalloc, 200k
+# entries, table slack included), so ~230 MB per worker at the cap
+_TEXT_HASH_CACHE_MAX = 1 << 20
+
+_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
 
 
-def _hex_digits(m: Column, n_digits: int) -> Column:
-    """First n_digits hex digits of a (lowercase-hex) digest string as an
-    array<int> — the PORTABLE bit source for simhash: md5 is identical in
-    every engine, and digit extraction is plain substring+base-16 parse
-    (DuckDB: strpos('0123456789abcdef', substr(m, p, 1)) - 1)."""
-    return F.array(*[F.conv(F.substring(m, p + 1, 1), 16, 10).cast("int")
-                     for p in range(n_digits)])
+def split_tokens(s: str) -> list:
+    """Python twin of tokens(). Java \\s is [ \\t\\n\\x0B\\f\\r], not
+    unicode-aware (NBSP is a token character); runs collapse to one
+    space, trim strips spaces only, and the split on one space keeps
+    empty strings ([''] for empty input)."""
+    return _JAVA_WS.sub(" ", s).strip(" ").split(" ")
 
 
-def _band_bit_pred(c: int, mask: int):
-    # NOTE: never use default-arg lambdas (see _isin_pred) — bind c/mask
-    # through a closure factory instead.
-    def pred(d):
-        return d.getItem(c).bitwiseAND(mask) != 0
-    return pred
+def _md5_rows(keys: list, prefixes=(b"",)):
+    """(len(keys), len(prefixes), 16) uint8: md5(prefix || utf-8 key)."""
+    raw = b"".join(hashlib.md5(p + k.encode("utf-8")).digest()
+                   for k in keys for p in prefixes)
+    return np.frombuffer(raw, np.uint8).reshape(len(keys), len(prefixes), 16)
 
 
-def _simhash_fold(col: Column, n_bits: int, pack) -> Column:
-    """Shared SimHash pipeline: tokens -> per-token md5 hex-digit arrays
-    (bound ONCE - the per-bit folds share the evaluation) -> per-bit
-    majority vote. Bit b of token t is bit (b % 4) of hex digit (b // 4)
-    of md5(t) - exactly reproducible in any SQL engine (the DuckDB
-    oracles replicate it with list comprehensions), unlike xxhash64.
-    `pack(bit_cols)` shapes the n_bits majority-vote booleans into the
-    output column; both oracles' SQL generators mirror THIS bit
-    derivation, so any change here must update them together."""
-    def fold(dgs):                       # array<array<int>>, one per token
-        n = F.size(dgs)
-        bits = []
-        for b in range(n_bits):
-            c, mask = b // 4, 1 << (b % 4)
-            ones = F.size(F.filter(dgs, _band_bit_pred(c, mask)))
-            bits.append(ones * 2 > n)
-        return pack(bits)
+class _DigestCache:
+    """Bounded per-task cache, key -> row of one digest table. Token and
+    shingle streams repeat heavily, so a kernel derives rows only for
+    the keys it has not seen.
 
-    return bind1(
-        bind1(tokens(col),
-              lambda t: F.transform(
-                  t, lambda x: bind1(F.md5(x),
-                                     lambda m: _hex_digits(m,
-                                                           n_bits // 4)))),
-        fold)
+    Two generations of at most cap // 2 keys each. lookup() makes every
+    key of a batch resident in the young generation (rows of old-
+    generation hits are copied, the rest derived), so one gather
+    table[idx] serves the batch. When the young generation would
+    overflow, the old one is dropped and the young one ages into its
+    place, so hot keys survive. The young table grows by doubling. A
+    batch with more than cap // 2 distinct keys is derived whole,
+    without caching."""
 
+    def __init__(self, derive, cap: int = _TEXT_HASH_CACHE_MAX):
+        self.derive, self.half = derive, max(1, cap // 2)
+        self.young: dict = {}
+        self.old: dict = {}
+        self.table = self.old_table = None
 
-def simhash48(col: Column) -> Column:
-    """48-bit SimHash over whitespace tokens (portable md5 bit source -
-    see _simhash_fold). 48 bits (12 hex digits) keeps every
-    intermediate in positive bigint range on both sides (no
-    signed-overflow edge at bit 63)."""
-    def pack(bits):
-        out = F.lit(0).cast("bigint")
-        for b, is_one in enumerate(bits):
-            out = out.bitwiseOR(
-                F.when(is_one, F.lit(1 << b).cast("bigint"))
-                 .otherwise(F.lit(0).cast("bigint")))
-        return out
+    def __len__(self) -> int:
+        return len(self.young) + len(self.old)
 
-    return _simhash_fold(col, 48, pack)
+    def lookup(self, keys: list):
+        """(table, idx) with table[idx[i]] the digest row of keys[i]."""
+        uniq = list(dict.fromkeys(keys))
+        if len(uniq) > self.half:
+            pos = dict(zip(uniq, range(len(uniq))))
+            return self.derive(uniq), np.fromiter(
+                map(pos.__getitem__, keys), np.int64, len(keys))
+        miss = [k for k in uniq if k not in self.young]
+        if len(self.young) + len(miss) > self.half:
+            self.old, self.old_table = self.young, self.table
+            self.young, self.table = {}, None
+            miss = uniq
+        if miss:
+            hits = [k for k in miss if k in self.old]
+            fresh = [k for k in miss if k not in self.old]
+            rows = self.derive(fresh)
+            if hits:
+                rows = np.concatenate(
+                    [self.old_table[[self.old[k] for k in hits]], rows])
+            self._append(hits + fresh, rows)
+        return self.table, np.fromiter(
+            map(self.young.__getitem__, keys), np.int64, len(keys))
 
-
-def simhash64_pair(col: Column) -> Column:
-    """64-bit SimHash as a (hi32, lo32) struct - for parity with
-    external 64-bit SimHash systems while keeping every intermediate in
-    positive-bigint range on ANY engine (a single signed 64-bit value
-    can't carry bit 63 portably; the two-column split can, and users
-    reassemble hi*2^32 + lo where their engine allows it).
-    hi32 = bits 32..63, lo32 = bits 0..31, both non-negative bigint."""
-    def pack(bits):
-        lo = F.lit(0).cast("bigint")
-        hi = F.lit(0).cast("bigint")
-        for b, is_one in enumerate(bits):
-            bit = F.when(is_one, F.lit(1 << (b % 32)).cast("bigint")) \
-                   .otherwise(F.lit(0).cast("bigint"))
-            if b < 32:
-                lo = lo.bitwiseOR(bit)
-            else:
-                hi = hi.bitwiseOR(bit)
-        return F.struct(hi.alias("hi32"), lo.alias("lo32"))
-
-    return _simhash_fold(col, 64, pack)
+    def _append(self, keys: list, rows) -> None:
+        n, need = len(self.young), len(self.young) + len(keys)
+        if self.table is None or need > len(self.table):
+            size = 1024 if self.table is None else len(self.table)
+            while size < need:
+                size *= 2
+            grown = np.empty((min(size, self.half),) + rows.shape[1:],
+                             rows.dtype)
+            if n:
+                grown[:n] = self.table[:n]
+            self.table = grown
+        self.table[n:need] = rows
+        self.young.update(zip(keys, range(n, need)))
 
 
-# per-task unique-token digest cache bound (tokens): 1<<20 entries of
-# n_bits uint8 bit-rows is 64 MB/worker at 64 bits — sized so a reused
-# worker keeps a full corpus vocabulary without unbounded growth
-_SIMHASH_TOK_CACHE_MAX = 1 << 20
+def _key_stream(texts: list, keys_of):
+    """A batch as one key stream (keys, ptr, live): keys_of(tokens) of
+    the r-th text that has any keys is keys[ptr[r]:ptr[r + 1]], and
+    live[r] is its batch row. NULL texts have no keys."""
+    keys: list = []
+    ptr, live = [0], []
+    for j, s in enumerate(texts):
+        if s is not None:
+            ks = keys_of(split_tokens(s))
+            if ks:
+                keys += ks
+                ptr.append(len(keys))
+                live.append(j)
+    return keys, np.asarray(ptr, np.int64), live
 
 
-def _simhash_fast_frame(df: DataFrame, text_col: str, keep_cols,
-                        n_bits: int, out_names: list,
-                        pack_batch) -> DataFrame:
-    """Shared Arrow core for the vectorized SimHash twins: same bit
-    derivation as _simhash_fold (bit b of token t = bit (b % 4) of hex
-    digit (b // 4) of md5(t), per-bit majority vote over whitespace
-    tokens), computed in one mapInArrow pass instead of n_bits
-    Catalyst array-filter folds (~0.5 ms/doc of expression overhead).
-    NULL text -> all-zero outputs and empty/whitespace-only text ->
-    the hash of [''] — both matching the HOF folds exactly
-    (equality-tested in tests/test_pipeline_ops.py).
+def _simhash_rows(keys: list, n_bits: int):
+    """(len(keys), n_bits) uint8 bit rows: bit b of key t is bit (b % 4)
+    of hex digit (b // 4) of md5(t)."""
+    by = _md5_rows(keys)[:, 0, :n_bits // 8]
+    digits = np.empty((len(keys), n_bits // 4), np.uint8)
+    digits[:, 0::2] = by >> 4
+    digits[:, 1::2] = by & 15
+    return ((digits[:, :, None] >> np.arange(4, dtype=np.uint8)) & 1) \
+        .reshape(len(keys), n_bits)
 
-    r8 kernel (guide §4.2 — hand whole batches to vectorized numpy,
-    keep per-row Python minimal): md5 runs ONCE per UNIQUE token (the
-    digest bit-rows are cached across batches in the reused worker,
-    bounded by _SIMHASH_TOK_CACHE_MAX), and the per-bit majority vote
-    is one np.add.reduceat segmented sum over the whole batch's token
-    stream instead of a per-row reshape/sum — natural-language token
-    streams repeat heavily (stopwords), so the interpreter-bound
-    md5-per-token loop of r7 collapses to the unique-token tail. The
-    bit semantics, tokenization and packing are unchanged and remain
-    property-tested via _simhash_bits.
 
-    Tokenization mirrors tokens(): Java \\s is [ \\t\\n\\x0B\\f\\r]
-    (NOT unicode-aware), so the Python regex is spelled with that
-    class explicitly; trim strips spaces only; split on a single
-    space keeps empty strings ([''] for empty input). md5 runs over
-    UTF-8 bytes on both sides. pack_batch(setb) maps the (rows,
-    n_bits) majority-vote boolean matrix to one int64 array per
-    output column."""
+def simhash_bits(texts: list, n_bits: int, cache=None):
+    """The SimHash bit expansion of one batch: a (len(texts), n_bits)
+    bool matrix of per-bit majority votes over each text's
+    split_tokens, where bit b of token t is bit (b % 4) of hex digit
+    (b // 4) of md5(t). The math is engine-portable (the DuckDB oracles
+    replay it). NULL text votes all False (hash 0); empty or
+    whitespace-only text is the hash of ['']."""
+    if cache is None:
+        cache = _DigestCache(partial(_simhash_rows, n_bits=n_bits))
+    keys, ptr, live = _key_stream(texts, lambda t: t)
+    out = np.zeros((len(texts), n_bits), bool)
+    if keys:
+        table, idx = cache.lookup(keys)
+        ones = np.add.reduceat(table[idx], ptr[:-1], axis=0, dtype=np.int64)
+        out[live] = ones * 2 > np.diff(ptr)[:, None]
+    return out
+
+
+def _minhash_rows(keys: list, n_hashes: int):
+    """(len(keys), n_hashes, 2) uint64: the big-endian halves of
+    md5('{s}|' || key), so (hi, lo) order is the digest's byte order."""
+    prefixes = [f"{s}|".encode("utf-8") for s in range(n_hashes)]
+    return _md5_rows(keys, prefixes).view(">u8").astype(np.uint64)
+
+
+def minhash_hex(texts: list, n_hashes: int, k: int, cache) -> list:
+    """MinHash of one batch, one list per hash family s: the lowercase
+    hex of the min over the text's word k-shingles of md5('{s}|' ||
+    shingle). The hex min is the byte-wise digest min (hex encoding
+    preserves order). NULL text, or fewer than k tokens, is None, like
+    array_min over an empty shingle set. `cache` is a _DigestCache of
+    _minhash_rows at n_hashes."""
+    keys, ptr, live = _key_stream(
+        texts, lambda t: [" ".join(t[i:i + k]) for i in range(len(t) - k + 1)])
+    out = [[None] * len(texts) for _ in range(n_hashes)]
+    if keys:
+        table, idx = cache.lookup(keys)
+        d = table[idx]
+        starts, counts = ptr[:-1], np.diff(ptr)
+        hi = np.minimum.reduceat(d[..., 0], starts)
+        tie = d[..., 0] == np.repeat(hi, counts, axis=0)
+        lo = np.minimum.reduceat(
+            np.where(tie, d[..., 1], np.iinfo(np.uint64).max), starts)
+        hexes = np.stack([hi, lo], -1).astype(">u8").tobytes().hex()
+        for r, j in enumerate(live):
+            for s in range(n_hashes):
+                o = (r * n_hashes + s) * 32
+                out[s][j] = hexes[o:o + 32]
+    return out
+
+
+def _text_hash_frame(df: DataFrame, text_col: str, keep_cols,
+                     out_types: dict, derive, kernel) -> DataFrame:
+    """The one scaffold of the text-hash kernels: a mapInArrow over the
+    narrow (keep_cols, text_col) projection that passes keep_cols
+    through and appends the out_types columns (name -> Spark type).
+    kernel(texts, cache) maps a batch's texts (str or None) to one Arrow
+    array per output column; cache is the task's _DigestCache of
+    derive, kept across the task's batches."""
     from ..distribute import ensure_distributed
     ensure_distributed(df.sparkSession)
     keep = list(keep_cols)
     narrow = df.select(*dict.fromkeys(keep + [text_col]))
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in narrow.schema.fields if f.name in keep)
-    out_schema = (fields + ", " if fields else "") + \
-        ", ".join(f"{n} bigint" for n in out_names)
-    nbytes = n_bits // 8
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}"
+         for f in narrow.schema.fields if f.name in keep]
+        + [f"{n} {t}" for n, t in out_types.items()])
 
     def run(batches):
-        import hashlib
-        import re
-
-        import numpy as np
         import pyarrow as pa
-        ws = re.compile("[ \t\n\x0b\f\r]+")
-        nib = np.arange(4, dtype=np.uint8)
-        tok_idx: dict = {}            # token -> row in bit_table
-        bit_table = np.empty((0, n_bits), np.uint8)
-
-        def digest_rows(toks: list):
-            """(len(toks), n_bits) uint8 bit matrix — the exact digit
-            expansion of _simhash_bits, over unique tokens only."""
-            raw = b"".join(hashlib.md5(t.encode("utf-8")).digest()[:nbytes]
-                           for t in toks)
-            by = np.frombuffer(raw, np.uint8).reshape(len(toks), nbytes)
-            digits = np.empty((len(toks), nbytes * 2), np.uint8)
-            digits[:, 0::2] = by >> 4
-            digits[:, 1::2] = by & 15
-            return ((digits[:, :, None] >> nib) & 1) \
-                .reshape(len(toks), n_bits)
-
+        cache = _DigestCache(derive)
         for b in batches:
-            texts = b.column(text_col).to_pylist()
-            m = len(texts)
-            outs = [np.zeros(m, np.int64) for _ in out_names]
-            flat: list = []           # token stream over non-null rows
-            ptr = [0]                 # row boundaries into flat
-            live: list = []           # row index per non-null row
-            for j, s in enumerate(texts):
-                if s is None:
-                    continue          # HOF folds yield zeros
-                flat.extend(ws.sub(" ", s).strip(" ").split(" "))
-                ptr.append(len(flat))
-                live.append(j)
-            if flat:
-                if len(tok_idx) > _SIMHASH_TOK_CACHE_MAX:
-                    tok_idx.clear()
-                    bit_table = np.empty((0, n_bits), np.uint8)
-                miss = [t for t in dict.fromkeys(flat)
-                        if t not in tok_idx]
-                if miss:
-                    base = len(tok_idx)
-                    for k, t in enumerate(miss):
-                        tok_idx[t] = base + k
-                    bit_table = np.concatenate(
-                        [bit_table, digest_rows(miss)])
-                idx = np.fromiter(map(tok_idx.__getitem__, flat),
-                                  np.int64, len(flat))
-                sums = np.add.reduceat(
-                    bit_table[idx], np.asarray(ptr[:-1], np.int64),
-                    axis=0, dtype=np.int64)
-                ntoks = np.diff(np.asarray(ptr, np.int64))
-                setb = sums * 2 > ntoks[:, None]
-                for o, packed in zip(outs, pack_batch(setb)):
-                    o[live] = packed
-            cols = [b.column(k) for k in keep]
-            yield pa.record_batch(
-                cols + [pa.array(o) for o in outs],
-                names=keep + out_names)
+            outs = kernel(b.column(text_col).to_pylist(), cache)
+            yield pa.record_batch([b.column(k) for k in keep] + outs,
+                                  names=keep + list(out_types))
 
     return narrow.mapInArrow(run, out_schema)
 
 
-def _simhash_bits(s: str, n_bits: int):
-    """Per-text SimHash majority-vote bits (bool ndarray of n_bits) —
-    the pure-Python/numpy kernel of _simhash_fast_frame, module-level
-    so it is property-testable without Spark against the documented
-    spec (bit b of token t = bit (b % 4) of hex digit (b // 4) of
-    md5(t); Java-\\s tokenization; [''] for empty input)."""
-    import hashlib
-    import re
+def _simhash_frame(df: DataFrame, text_col: str, keep_cols, n_bits: int,
+                   names: list) -> DataFrame:
+    """SimHash kernel: `names` split the n_bits vote bits into equal
+    non-negative bigint chunks, most significant first."""
+    width = n_bits // len(names)
+    shifts = np.int64(1) << np.arange(width, dtype=np.int64)
 
-    import numpy as np
-    toks = re.sub("[ \t\n\x0b\f\r]+", " ", s).strip(" ").split(" ")
-    n = len(toks)
-    nbytes = n_bits // 8
-    raw = b"".join(hashlib.md5(t.encode("utf-8")).digest()[:nbytes]
-                   for t in toks)
-    by = np.frombuffer(raw, np.uint8).reshape(n, nbytes)
-    digits = np.empty((n, nbytes * 2), np.uint8)
-    digits[:, 0::2] = by >> 4
-    digits[:, 1::2] = by & 15
-    nib = np.arange(4, dtype=np.uint8)
-    ones = ((digits[:, :, None] >> nib) & 1) \
-        .reshape(n, n_bits).sum(axis=0, dtype=np.int64)
-    return ones * 2 > n
+    def kernel(texts, cache):
+        import pyarrow as pa
+        w = simhash_bits(texts, n_bits, cache).astype(np.int64)
+        return [pa.array(w[:, lo:lo + width] @ shifts)
+                for lo in range(n_bits - width, -1, -width)]
+
+    return _text_hash_frame(df, text_col, keep_cols,
+                            dict.fromkeys(names, "bigint"),
+                            partial(_simhash_rows, n_bits=n_bits), kernel)
 
 
 def simhash64_fast(df: DataFrame, text_col: str,
                    *keep_cols: str) -> DataFrame:
-    """Vectorized Arrow twin of `simhash64_pair` (see
-    _simhash_fast_frame): BITWISE-identical `keep_cols + (hi32, lo32)`
-    at a multiple of the HOF fold's throughput."""
-    import numpy as np
-    shifts = (np.int64(1) << np.arange(32, dtype=np.int64))
-
-    def pack(setb):
-        w = setb.astype(np.int64)
-        return (w[:, 32:] @ shifts, w[:, :32] @ shifts)   # hi32, lo32
-
-    return _simhash_fast_frame(df, text_col, keep_cols, 64,
-                               ["hi32", "lo32"], pack)
+    """64-bit SimHash (simhash_bits) as `keep_cols + (hi32, lo32)`:
+    hi32 = bits 32..63, lo32 = bits 0..31, both non-negative bigint, so
+    every value stays in positive range on any engine (reassemble
+    hi32 * 2^32 + lo32 where the engine allows it)."""
+    return _simhash_frame(df, text_col, keep_cols, 64, ["hi32", "lo32"])
 
 
 def simhash48_fast(df: DataFrame, text_col: str,
                    *keep_cols: str) -> DataFrame:
-    """Vectorized Arrow twin of `simhash48` (see _simhash_fast_frame):
-    BITWISE-identical `keep_cols + sh48` single non-negative bigint
-    (48 bits keep every value in positive range, as the HOF packer
-    documents)."""
-    import numpy as np
-    shifts = (np.int64(1) << np.arange(48, dtype=np.int64))
+    """48-bit SimHash (simhash_bits) as `keep_cols + sh48`, one
+    non-negative bigint: 48 bits keep every intermediate in positive
+    range on any engine."""
+    return _simhash_frame(df, text_col, keep_cols, 48, ["sh48"])
 
-    def pack(setb):
-        return (setb.astype(np.int64) @ shifts,)
 
-    return _simhash_fast_frame(df, text_col, keep_cols, 48,
-                               ["sh48"], pack)
+def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
+                       n_hashes: int = 4, k: int = 3) -> DataFrame:
+    """(id, h0..h{n-1}) MinHash signature table (minhash_hex): h_s =
+    min over word k-shingles of md5('{s}|' || shingle), lowercase hex;
+    NULL for NULL text or fewer than k tokens. The DuckDB oracle replays
+    it verbatim."""
+    def kernel(texts, cache):
+        import pyarrow as pa
+        return [pa.array(c, pa.string())
+                for c in minhash_hex(texts, n_hashes, k, cache)]
+
+    return _text_hash_frame(df, text_col, [id_col],
+                            {f"h{s}": "string" for s in range(n_hashes)},
+                            partial(_minhash_rows, n_hashes=n_hashes), kernel)

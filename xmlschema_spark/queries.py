@@ -885,7 +885,7 @@ def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # portable simhash oracle: bit b of token t = bit (b%4) of hex digit
 # (b//4) of md5(t); per-bit majority vote — identical math to
-# operators/text.simhash48, generated for all 48 bits
+# operators/text.simhash_bits, generated for all 48 bits
 _SIMHASH_TERMS = " + ".join(
     f"CASE WHEN 2*len([1 for v in dg if (v[{b // 4 + 1}] & {1 << (b % 4)}) <> 0]) > n"
     f" THEN {1 << b}::BIGINT ELSE 0::BIGINT END"
@@ -908,10 +908,11 @@ _SIMHASH_TERMS = " + ".join(
 def simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """48-bit portable SimHash per document (md5-digit bit source —
     bit-identical in any engine; full DuckDB value oracle)."""
-    from .operators.text import simhash48
-    d = _load(spark, sf_dir, "documents", fan=True)
-    return d.select(F.col("doc_id").cast("string").alias("doc_id"),
-                    simhash48(F.col("text")).alias("simhash"))
+    from .operators.text import simhash48_fast
+    d = _load(spark, sf_dir, "documents", fan=True) \
+        .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    return simhash48_fast(d, "text", "doc_id") \
+        .withColumnRenamed("sh48", "simhash")
 
 
 # ---------------------------------------------------------------------------
@@ -2566,7 +2567,7 @@ _SIMHASH64_LO = " + ".join(
     for b in range(32))
 
 
-@register("simhash64_documents", f"""
+_SIMHASH64_ORACLE = f"""
   WITH t AS (
     SELECT doc_id, string_split(trim(regexp_replace(text,'\\s+',' ','g')), ' ') AS w
       FROM documents),
@@ -2579,41 +2580,25 @@ _SIMHASH64_LO = " + ".join(
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
          ({_SIMHASH64_HI}) AS hi32, ({_SIMHASH64_LO}) AS lo32
     FROM d
-""")
+"""
+
+
+@register("simhash64_documents", _SIMHASH64_ORACLE)
 def simhash64_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash as a (hi32, lo32) pair for parity with external
     64-bit systems — each half stays in positive-bigint range on any
-    engine; full DuckDB value oracle over both halves."""
-    from .operators.text import simhash64_pair
-    d = _load(spark, sf_dir, "documents", fan=True)
-    sh = simhash64_pair(F.col("text"))
-    return d.select(F.col("doc_id").cast("string").alias("doc_id"),
-                    F.inline(F.array(sh)))
+    engine; full DuckDB value oracle over both halves. Same kernel as
+    simhash64_fast_documents."""
+    return simhash64_fast_documents(spark, sf_dir)
 
 
-@register("simhash64_fast_documents", f"""
-  WITH t AS (
-    SELECT doc_id, string_split(trim(regexp_replace(text,'\\s+',' ','g')), ' ') AS w
-      FROM documents),
-  d AS (
-    SELECT doc_id,
-           [[strpos('0123456789abcdef', substr(md5(x), p, 1)) - 1
-             for p in generate_series(1, 16)] for x in w] AS dg,
-           len(w) AS n
-      FROM t)
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         ({_SIMHASH64_HI}) AS hi32, ({_SIMHASH64_LO}) AS lo32
-    FROM d
-""")
+@register("simhash64_fast_documents", _SIMHASH64_ORACLE)
 def simhash64_fast_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-vectorized 64-bit SimHash (operators/text.simhash64_fast):
     one mapInArrow pass with numpy bit votes instead of 64 Catalyst
-    array-filter folds — bitwise-identical to simhash64_documents
-    (same DuckDB oracle, plus an in-suite equality test) at ~4.5x the
-    throughput on sf0.1 (0.83s vs 3.71s, warm local[8]). The HOF twin
-    stays registered as the
-    pure-Catalyst derivation; this is the shape you'd ship at 10^9
-    documents where per-row expression overhead dominates."""
+    array-filter folds, at ~4.5x their throughput on sf0.1 (0.83s vs
+    3.71s, warm local[8]) — the shape to ship at 10^9 documents, where
+    per-row expression overhead dominates."""
     from .operators.text import simhash64_fast
     d = _load(spark, sf_dir, "documents", fan=True) \
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
@@ -2650,9 +2635,7 @@ def hamming_near_dups_documents(spark: SparkSession,
     and capped buckets; the oracle is the brute-force all-pairs filter
     over the same hash, summing bit_count(xor) per 32-bit half (a
     combined signed 64-bit value would overflow DuckDB's checked
-    BIGINT arithmetic at reassembly). The hash derivation uses the
-    Arrow-vectorized simhash64_fast (bitwise-identical to the HOF
-    fold, ~4.5x — it was 2/3 of this query's wall)."""
+    BIGINT arithmetic at reassembly). The hash is simhash64_fast."""
     from .operators.dedup import hamming_near_dups
     from .operators.text import simhash64_fast
     d = _load(spark, sf_dir, "documents", fan=True) \
@@ -3143,67 +3126,3 @@ def xsd_double_lexical_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          max_inclusive=500)])
     return row_violations(d, compile_plan(spec)) \
         .select("row_key", "constraint")
-
-
-# ---------------------------------------------------------------------------
-# Registry order. The driver's CORRECTNESS snapshot samples the FIRST 50
-# registered queries (observed across rounds 5-7: each snapshot is
-# exactly the first 50 in registration order). Round 7 rotated the
-# never-sampled 22 + round-7 additions to the front; CORRECTNESS_r07
-# verified those 50, leaving the OTHER 30 outside the driver window
-# (they are gated by the in-repo board, tools/check_oracle.py --emit).
-# Rotate again for round 8: the 30 queries absent from CORRECTNESS_r07
-# go FIRST, so every query is driver-verified at least once every two
-# rounds; the r07-verified 50 fill the remaining 20 sample slots in
-# their prior order.
-# ---------------------------------------------------------------------------
-
-_SAMPLE_FIRST = [
-    # absent from CORRECTNESS_r07 (the r8 blind spots)
-    "lang_id_documents",
-    "fingerprint_documents",
-    "simhash_documents",
-    "ann_topk_bruteforce",
-    "ann_topk_lsh",
-    "embedding_near_dups",
-    "embedding_near_dups_lsh",
-    "conditional_facets_events",
-    "quantiles_lineitem",
-    "topk_orders_per_priority",
-    "orders_by_month",
-    "hex_base64_lexical_documents",
-    "boolean_lexical_events",
-    "decode_to_json_documents",
-    "ngram_jaccard_candidates",
-    "embedding_near_dups_vectorized",
-    "ann_topk_ivf",
-    "profile_lineitem_approx",
-    "profile_lineitem_scale",
-    "nested_record_events",
-    "record_array_events",
-    "quantile_sketch_rank_check",
-    "ann_lsh_recall",
-    "ann_ivf_recall",
-    "ann_ivf_recall_256",
-    "near_dups_lsh_precision",
-    "union_member_facets_events",
-    "lexical_list_items_documents",
-    "global_unique_across_increments",
-    "selector_unique_events",
-]
-
-
-def _reorder_registry() -> None:
-    missing = [n for n in _SAMPLE_FIRST if n not in QUERIES]
-    assert not missing, f"stale _SAMPLE_FIRST entries: {missing}"
-    rest = [n for n in QUERIES if n not in _SAMPLE_FIRST]
-    order = _SAMPLE_FIRST + rest
-    q = {n: QUERIES[n] for n in order}
-    QUERIES.clear()
-    QUERIES.update(q)
-    o = {n: ORACLES[n] for n in order if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(o)
-
-
-_reorder_registry()

@@ -19,6 +19,7 @@ compiled plan's source can be persisted next to checkpoints.
 from __future__ import annotations
 
 import json
+import warnings
 from dataclasses import asdict, dataclass, field
 from typing import Any, Optional
 
@@ -143,16 +144,11 @@ class UniqueSpec:
     is_key=True additionally requires non-null fields
     ("missing key field", identities.py:523-531); unique silently skips
     all-null tuples (elements.py:914-918).
-    salt: retained for API compatibility; ignored since r8 — the
-    count aggregate's map-side partial combine already bounds reducer
-    skew (one partial row per tuple per map task), so the former
-    salted two-level shape only added an Exchange.
     """
 
     name: str
     columns: list[str] = field(default_factory=list)
     is_key: bool = False
-    salt: Optional[int] = None
     # selector-addressed identity over REPEATED content
     # (FieldValueSelector inside repeated elements, identities.py:
     # 461-544): dotted path of a record-array column whose exploded
@@ -161,6 +157,18 @@ class UniqueSpec:
     # row element itself (plain/struct columns). The table is the
     # constraint scope either way (the collection document).
     scope: Optional[str] = None
+
+
+def _uniques_from_dicts(us: list) -> list:
+    """UniqueSpecs from dicts, dropping the retired "salt" key with one
+    DeprecationWarning: the count aggregate's map-side partial combine
+    already bounds reducer skew, so salting only added an Exchange."""
+    us = [dict(u) for u in us]
+    if any("salt" in u for u in us):
+        warnings.warn("UniqueSpec 'salt' is retired and ignored; drop it "
+                      "from the spec", DeprecationWarning, stacklevel=3)
+    return [UniqueSpec(**{k: v for k, v in u.items() if k != "salt"})
+            for u in us]
 
 
 @dataclass
@@ -570,7 +578,7 @@ class TableSpec:
             simple_types={
                 n: col({"name": n, **t})
                 for n, t in d.get("simple_types", {}).items()},
-            uniques=[UniqueSpec(**u) for u in d.get("uniques", [])],
+            uniques=_uniques_from_dicts(d.get("uniques", [])),
             keyrefs=[KeyrefSpec(**k) for k in d.get("keyrefs", [])],
             asserts=[AssertSpec(**a) for a in d.get("asserts", [])],
             occurs=[OccursSpec(**o) for o in d.get("occurs", [])],
