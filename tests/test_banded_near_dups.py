@@ -1,9 +1,11 @@
 """The banded near-dup family (lsh_bucket_pairs, simhash_near_dups,
 hamming_near_dups) runs one core, dedup._banded_pairs: its plan shape,
 hot-bucket cap, NULL ids, output schemas and band validation, once per
-operator."""
+operator, and the Hamming verify against brute force."""
 
+import random
 import warnings
+from collections import Counter
 
 import pytest
 
@@ -50,6 +52,18 @@ def test_banded_plan_one_bucket_shuffle_no_join(spark, op):
     assert len(wgl) == 2, p
     assert "Partial" in lines[max(wgl)] and max(wgl) > bucket, p
     assert "Final" in lines[min(wgl)] and min(wgl) < bucket, p
+    if op == "lsh":
+        return
+    # the Hamming verify runs in the member array, before any pair row:
+    # a filter() inside the pair Generate, no Filter on hamming above it
+    gen = next(i for i, s in enumerate(lines)
+               if "Generate" in s and "flatten(transform(" in s)
+    pair_gen = lines[gen]
+    assert "filter(slice(" in pair_gen, p
+    pred = pair_gen[pair_gen.index("filter(slice("):
+                    pair_gen.index(", lambdafunction(struct(")]
+    assert "bit_count(" in pred, p
+    assert not [s for s in lines[:gen] if "Filter" in s and "hamming" in s], p
 
 
 @pytest.mark.parametrize("op", OPS)
@@ -84,14 +98,28 @@ def test_near_dup_output_schema_pinned(spark, op, hamming_type):
                    f"hamming:{hamming_type}>")
 
 
+DIVISOR = "positive divisor"
+HAMMING = r"max_hamming must be an int in 0\.\.64"
+
+
 @pytest.mark.parametrize("op,kw,want", [
-    pytest.param("hamming", {"bands": 0}, ValueError, id="bands=0"),
-    pytest.param("hamming", {"bands": -2}, ValueError, id="bands=-2"),
-    pytest.param("hamming", {"bands": 3}, ValueError, id="bands=3"),
-    pytest.param("lsh", {"band_size": 0}, ValueError, id="band_size=0"),
+    pytest.param("hamming", {"bands": 0}, DIVISOR, id="bands=0"),
+    pytest.param("hamming", {"bands": -2}, DIVISOR, id="bands=-2"),
+    pytest.param("hamming", {"bands": 3}, DIVISOR, id="bands=3"),
+    pytest.param("lsh", {"band_size": 0}, DIVISOR, id="band_size=0"),
     # 4 % 3 != 0: the trailing hash h3 would be ignored
-    pytest.param("lsh", {"band_size": 3}, ValueError, id="band_size=3"),
-    pytest.param("lsh", {"n_hashes": 0}, ValueError, id="n_hashes=0"),
+    pytest.param("lsh", {"band_size": 3}, DIVISOR, id="band_size=3"),
+    pytest.param("lsh", {"n_hashes": 0}, DIVISOR, id="n_hashes=0"),
+    # max_hamming goes into the verify lambda: a negative value used to
+    # return nothing, silently
+    pytest.param("hamming", {"max_hamming": -1}, HAMMING,
+                 id="max_hamming=-1"),
+    pytest.param("hamming", {"max_hamming": 65}, HAMMING,
+                 id="max_hamming=65"),
+    pytest.param("hamming", {"max_hamming": 2.5}, HAMMING,
+                 id="max_hamming=2.5"),
+    pytest.param("hamming", {"max_hamming": True}, HAMMING,
+                 id="max_hamming=True"),
     # one 64-bit band = exact-match blocking on the whole hash; -1 has
     # every bit set, and -2 is at distance 1 from it but not equal
     pytest.param("hamming", {"bands": 1, "max_hamming": 0},
@@ -100,8 +128,8 @@ def test_near_dup_output_schema_pinned(spark, op, hamming_type):
 def test_band_values_validated(spark, op, kw, want):
     rows = ([("a", -1), ("b", -1), ("c", -2), ("d", 5), ("e", 5)]
             if op == "hamming" else [("a", SPAM), ("b", SPAM)])
-    if want is ValueError:
-        with pytest.raises(ValueError, match="positive divisor"):
+    if isinstance(want, str):
+        with pytest.raises(ValueError, match=want):
             _run(spark, op, rows, **kw)
         return
     with warnings.catch_warnings(record=True) as w:
@@ -119,3 +147,38 @@ def test_simhash_near_dups_warns_beyond_recall(spark):
     assert any("guarantees recall" in str(x.message) for x in w)
     assert all(x.filename == __file__ for x in w
                if "guarantees recall" in str(x.message))
+
+
+def _planted_hashes(seed=7, n_clusters=8, n_random=150):
+    """Unsigned 64-bit hashes: random singletons plus clusters whose
+    members sit at distances 0..9 from their centre."""
+    rng = random.Random(seed)
+    hashes = [rng.getrandbits(64) for _ in range(n_random)]
+    for _ in range(n_clusters):
+        centre = rng.getrandbits(64)
+        hashes.append(centre)
+        for d in range(10):
+            flip = sum(1 << b for b in rng.sample(range(64), d))
+            hashes.append(centre ^ flip)
+    return [(f"d{i:04d}", h) for i, h in enumerate(hashes)]
+
+
+@pytest.mark.parametrize("bands,max_hamming",
+                         [(1, 0), (2, 1), (4, 3), (8, 0), (8, 7)])
+def test_hamming_near_dups_matches_brute_force(spark, bands, max_hamming):
+    """Within the pigeonhole recall bound and with every bucket under
+    max_bucket, the banded pairs are exactly the all-pairs answer."""
+    docs = _planted_hashes()
+    width = 64 // bands
+    sizes = Counter((b, h >> (b * width) & ((1 << width) - 1))
+                    for _, h in docs for b in range(bands))
+    assert max(sizes.values()) < 64            # no bucket is capped
+    want = {(a, b, bin(ha ^ hb).count("1"))
+            for a, ha in docs for b, hb in docs
+            if a < b and bin(ha ^ hb).count("1") <= max_hamming}
+    assert {d for *_, d in want} == set(range(max_hamming + 1))
+    signed = [(d, h - (1 << 64) if h >> 63 else h) for d, h in docs]
+    got = _run(spark, "hamming", signed, bands=bands,
+               max_hamming=max_hamming).collect()
+    assert len(got) == len(want)
+    assert {tuple(r) for r in got} == want

@@ -14,7 +14,9 @@ Scale notes (the whole point of these shapes):
   their lexicographically-first max_bucket members (a row_number()
   window, so a degenerate boilerplate bucket never reaches the
   collect_list buffer), then pairs generated inside each bucket's member
-  array and a final distinct. Never an all-pairs self-join.
+  array and a final distinct. The Hamming verify runs in that member
+  array too: a member pair beyond max_hamming is dropped before any pair
+  row exists. Never an all-pairs self-join.
 """
 
 from __future__ import annotations
@@ -58,10 +60,11 @@ def _cap_buckets(df: DataFrame, keys: list[str], order_col,
 
 
 def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
-                  carry: tuple = (), verify: str | None = None) -> DataFrame:
+                  carry: tuple = (), keep: str | None = None,
+                  verify: str | None = None) -> DataFrame:
     """The one banded near-dup pipeline: ordered pairs (id_a < id_b
-    [, verify]) of `doc`s that share a bucket in a band, one row per
-    shared band; callers end with the distinct.
+    [, verify]) of `doc`s that share a bucket in a band and pass `keep`,
+    one row per shared band; callers end with the distinct.
 
     `keys[b]` is band b's bucket key, a Column over df. Each doc is
     exploded once per band into (doc, carry..., band, key); ONE shuffle
@@ -69,10 +72,12 @@ def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
     collect_list aggregate, so a hot bucket is cut to its first
     max_bucket docs before any buffer holds it. Singleton buckets die in
     the HAVING, and pairs are generated inside the sorted member array:
-    never a self-join. `verify` is a SQL field over the two members `a`
-    and `b` (structs of doc and `carry`), e.g. a Hamming distance. With
-    the callers' distinct the plan has exactly two Exchanges (pinned by
-    tests/test_banded_near_dups.py)."""
+    never a self-join. `keep` and `verify` are SQL over the two members
+    `a` and `b` (structs of doc and `carry`): `keep` is a predicate
+    checked in the member array, so a pair it rejects never becomes a
+    struct or a row, and `verify` is an extra output field, e.g. a
+    Hamming distance. With the callers' distinct the plan has exactly
+    two Exchanges (pinned by tests/test_banded_near_dups.py)."""
     bands = F.array(*(F.struct(F.lit(b).alias("band"), k.alias("key"))
                       for b, k in enumerate(keys)))
     # a NULL doc is never paired: pairs satisfy id_a < id_b
@@ -85,10 +90,13 @@ def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
                     .alias("ms"),
                     F.count(F.lit(1)).alias("bn"))
                .where(F.col("bn") > 1))
+    rest = "slice(ms, i + 2, size(ms))"
+    if keep:
+        rest = f"filter({rest}, b -> {keep})"
     fields = "a.doc AS id_a, b.doc AS id_b" + (f", {verify}" if verify else "")
     pairs_arr = F.expr(
         "flatten(transform(ms, (a, i) -> "
-        f"transform(slice(ms, i + 2, size(ms)), b -> struct({fields}))))")
+        f"transform({rest}, b -> struct({fields}))))")
     return grouped.select(F.explode(pairs_arr).alias("p")).select("p.*")
 
 
@@ -133,7 +141,8 @@ def _hamming_pairs(h: DataFrame, n_bits: int, bands: int,
                    max_hamming: int, max_bucket: int) -> DataFrame:
     """Banded-Hamming near-dups over h = (doc, sh bigint): block on the
     `bands` equal slices of sh's low n_bits, then verify
-    bit_count(a.sh ^ b.sh) <= max_hamming exactly inside each bucket.
+    bit_count(a.sh ^ b.sh) <= max_hamming exactly inside each bucket's
+    member array, before any pair row exists.
 
     Recall (pigeonhole): a pair within distance d shares at least one
     slice iff d <= bands-1, so blocking is exact up to there; beyond it
@@ -141,6 +150,10 @@ def _hamming_pairs(h: DataFrame, n_bits: int, bands: int,
     if bands < 1 or n_bits % bands:
         raise ValueError(f"bands must be a positive divisor of {n_bits}, "
                          f"got {bands!r}")
+    if (isinstance(max_hamming, bool) or not isinstance(max_hamming, int)
+            or not 0 <= max_hamming <= n_bits):
+        raise ValueError(f"max_hamming must be an int in 0..{n_bits}, "
+                         f"got {max_hamming!r}")
     if max_hamming >= bands:
         import warnings
         warnings.warn(
@@ -152,9 +165,10 @@ def _hamming_pairs(h: DataFrame, n_bits: int, bands: int,
     keys = [F.shiftrightunsigned(F.col("sh"), b * width) for b in range(bands)]
     if width < 64:
         keys = [k.bitwiseAND(F.lit((1 << width) - 1)) for k in keys]
-    return (_banded_pairs(h, keys, max_bucket, carry=("sh",),
-                          verify="bit_count(a.sh ^ b.sh) AS hamming")
-            .where(F.col("hamming") <= max_hamming))
+    dist = "bit_count(a.sh ^ b.sh)"
+    return _banded_pairs(h, keys, max_bucket, carry=("sh",),
+                         keep=f"{dist} <= {max_hamming}",
+                         verify=f"{dist} AS hamming")
 
 
 def simhash_near_dups(df: DataFrame, text_col: str, id_col: str,
