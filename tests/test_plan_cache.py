@@ -1,0 +1,157 @@
+"""compile_plan's per-SparkContext plan cache and the prebuilt row-check
+projection: a spec is compiled once and then validates many frames
+(reference: schema reuse across documents, xsd_globals.py:545)."""
+
+from decimal import Decimal
+
+import pytest
+
+from xmlschema_spark import ColumnSpec, TableSpec, compile_plan, validate
+from xmlschema_spark.operators.row_checks import row_violations
+from xmlschema_spark.plans import compiler
+from xmlschema_spark.sources.fixtures import images_spec, make_images
+
+
+def _cache(spark) -> dict:
+    return getattr(spark.sparkContext, compiler._PLANS_ATTR)
+
+
+def _rows(res) -> list:
+    return sorted(tuple(r) for r in res.violations.collect())
+
+
+def test_equal_specs_share_one_plan(spark):
+    a = compile_plan(images_spec(check_phash=True))
+    b = compile_plan(images_spec(check_phash=True))
+    assert a is b
+    assert a.row_projection is not None
+
+
+def test_row_violations_reuses_the_prebuilt_projection(spark, monkeypatch):
+    plan = compile_plan(images_spec(check_phash=True))
+    exploded, flat = plan.row_projection
+    d1 = make_images(spark, 60, dirty=True, with_bytes=False)
+    d2 = make_images(spark, 90, dirty=True, with_bytes=False)
+    cls = type(d1)
+    select = cls.select
+    seen = []
+
+    def spy(self, *cols):
+        seen.append(cols)
+        return select(self, *cols)
+
+    monkeypatch.setattr(cls, "select", spy)
+    for d in (d1, d2):
+        row_violations(d, plan)
+    assert len(seen) == 4
+    for first, second in (seen[0:2], seen[2:4]):
+        assert all(x is y for x, y in zip(first, exploded))
+        assert all(x is y for x, y in zip(second, flat))
+    assert plan.row_projection[0] is exploded
+
+
+def test_in_place_spec_edit_recompiles_and_keeps_old_plan(spark):
+    def too_long(spec):
+        with validate(df, spec) as res:
+            return res.violations.where(
+                "constraint = 'facet:maxLength:caption'").count()
+
+    df = make_images(spark, 200, dirty=True, with_bytes=False)
+    spec = images_spec(with_payload=False)
+    before = too_long(spec)
+    old = compile_plan(spec)
+    cap = next(c for c in spec.columns if c.name == "caption")
+    cap.max_length = 3
+    assert too_long(spec) > before
+    assert compile_plan(spec) is not old
+    old_cap = next(c for c in old.spec.columns if c.name == "caption")
+    assert old_cap.max_length == 512
+
+
+def test_decimal_and_string_literals_get_distinct_plans(spark):
+    def spec(v):
+        return TableSpec(name="t", key_column="k", columns=[
+            ColumnSpec("v", "decimal(10,2)", min_inclusive=v)])
+    a, b = compile_plan(spec(Decimal("5"))), compile_plan(spec("5"))
+    assert a is not b
+    assert a.spec.columns[0].min_inclusive == Decimal("5")
+    assert b.spec.columns[0].min_inclusive == "5"
+
+
+def test_invalid_spec_raises_every_time(spark):
+    spec = TableSpec(name="t", key_column="k", columns=[
+        ColumnSpec("v", "string", whitespace="squash")])
+    for _ in range(2):
+        with pytest.raises(ValueError, match="whitespace"):
+            compile_plan(spec)
+    assert repr(spec) not in _cache(spark)
+
+
+def test_cache_is_bounded(spark):
+    for i in range(compiler._PLANS_MAX + 5):
+        compile_plan(TableSpec(name=f"bound{i}", key_column="k", columns=[
+            ColumnSpec("v", "int", min_inclusive=i)]))
+    assert len(_cache(spark)) <= compiler._PLANS_MAX
+    # the most recent specs are the ones kept
+    last = TableSpec(name=f"bound{compiler._PLANS_MAX + 4}", key_column="k",
+                     columns=[ColumnSpec("v", "int",
+                                         min_inclusive=compiler._PLANS_MAX
+                                         + 4)])
+    assert repr(last) in _cache(spark)
+
+
+def test_cold_and_warm_flagship_violations_are_identical(spark):
+    df = make_images(spark, 300, dirty=True)
+    _cache(spark).clear()
+    with validate(df, images_spec(check_phash=True)) as cold:
+        cold_rows = _rows(cold)
+    assert repr(images_spec(check_phash=True)) in _cache(spark)
+    with validate(df, images_spec(check_phash=True)) as warm:
+        warm_rows = _rows(warm)
+    assert cold_rows and cold_rows == warm_rows
+
+
+def test_shared_projection_in_one_union(spark):
+    """One plan's prebuilt Columns used twice in one query (a union of
+    two frames) keep both sides' rows."""
+    plan = compile_plan(images_spec(with_payload=False))
+    d1 = make_images(spark, 120, dirty=True, with_bytes=False)
+    d2 = d1.where("w > 100")
+    both = row_violations(d1, plan).unionByName(row_violations(d2, plan))
+    assert both.count() == (row_violations(d1, plan).count()
+                            + row_violations(d2, plan).count())
+
+
+def test_concurrent_compiles_keep_the_cache_consistent(spark):
+    """Threads compiling (stream micro-batches, concurrent jobs) share one
+    cache: no lost eviction, no dict error, every result usable."""
+    import sys
+    import threading
+    n = compiler._PLANS_MAX // 2
+    errors, plans = [], {}
+
+    def work(t):
+        try:
+            for i in range(n):
+                spec = TableSpec(name=f"conc{i}", key_column="k", columns=[
+                    ColumnSpec("v", "int", max_inclusive=t * 1000 + i)])
+                plans[(t, i)] = compile_plan(spec)
+        except Exception as e:  # reported below, with the thread's index
+            errors.append((t, e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(plans) == 8 * n
+    assert len(_cache(spark)) <= compiler._PLANS_MAX
+    assert all(p.spec.columns[0].max_inclusive == t * 1000 + i
+               for (t, i), p in plans.items())

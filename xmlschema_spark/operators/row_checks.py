@@ -38,15 +38,11 @@ def _part_col(plan: ValidationPlan) -> Column:
     return F.lit(0).cast("bigint").alias("part_key")
 
 
-def row_violations(df: DataFrame, plan: ValidationPlan) -> DataFrame:
-    """All row-local violations: one scan, one codegen stage, then an
-    explode that keeps only failing (row, constraint) pairs."""
-    if not plan.row_checks:
-        # identity/assert-only spec: an empty F.array() is array<void>
-        # and cannot be exploded into the violation struct
-        return df.sparkSession.createDataFrame(
-            [], "row_key string, part_key bigint, constraint string, "
-                "reason string, value string, occurs bigint")
+def row_projection(plan: ValidationPlan) -> tuple[list[Column], list[Column]]:
+    """row_violations' two select lists. They depend only on the plan, so
+    compile_plan builds them once and keeps them on the (cached) plan:
+    each Column call is several py4j round trips, and a repeated run of
+    one spec would otherwise rebuild every per-check struct."""
     structs = [
         F.when(
             ~F.coalesce(chk.valid, F.lit(False)),
@@ -66,19 +62,30 @@ def row_violations(df: DataFrame, plan: ValidationPlan) -> DataFrame:
     # pushdown inline the alias into its condition, evaluating the
     # whole check array TWICE per row (guide §4.4's duplication
     # pattern, JVM-side). One evaluation, same rows out.
-    out = (
-        df.select(_key_col(plan), _part_col(plan),
-                  F.explode(arr).alias("v"))
-        .select(
-            "row_key",
-            "part_key",
-            F.col("v.constraint").alias("constraint"),
-            F.col("v.reason").alias("reason"),
-            F.col("v.value").alias("value"),
-            F.lit(1).cast("bigint").alias("occurs"),
-        )
-    )
-    return out
+    exploded = [_key_col(plan), _part_col(plan), F.explode(arr).alias("v")]
+    flat = [
+        F.col("row_key"),
+        F.col("part_key"),
+        F.col("v.constraint").alias("constraint"),
+        F.col("v.reason").alias("reason"),
+        F.col("v.value").alias("value"),
+        F.lit(1).cast("bigint").alias("occurs"),
+    ]
+    return exploded, flat
+
+
+def row_violations(df: DataFrame, plan: ValidationPlan) -> DataFrame:
+    """All row-local violations: one scan, one codegen stage, then an
+    explode that keeps only failing (row, constraint) pairs. The
+    projection is the plan's prebuilt row_projection."""
+    if plan.row_projection is None:
+        # identity/assert-only spec: an empty F.array() is array<void>
+        # and cannot be exploded into the violation struct
+        return df.sparkSession.createDataFrame(
+            [], "row_key string, part_key bigint, constraint string, "
+                "reason string, value string, occurs bigint")
+    exploded, flat = plan.row_projection
+    return df.select(*exploded).select(*flat)
 
 
 def row_valid_mask(df: DataFrame, plan: ValidationPlan) -> DataFrame:

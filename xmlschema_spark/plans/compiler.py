@@ -20,10 +20,13 @@ absence is governed solely by nullable/required
 
 from __future__ import annotations
 
+import copy
 import re
+import threading
 from dataclasses import dataclass, field
 from typing import Optional
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -344,7 +347,12 @@ class RowCheck:
 @dataclass
 class ValidationPlan:
     """Compiled plan: reusable across batches (build once, run many —
-    reference: schema reuse across documents, xsd_globals.py:545)."""
+    reference: schema reuse across documents, xsd_globals.py:545).
+
+    compile_plan caches plans per SparkContext and hands the same plan
+    to every caller of an equal spec, so a plan is read-only once
+    compiled: never mutate it, its spec or its lists (edit a spec and
+    compile it again)."""
 
     spec: TableSpec
     row_checks: list[RowCheck] = field(default_factory=list)
@@ -354,6 +362,10 @@ class ValidationPlan:
     # element plan over it; size/occurs bounds live in row_checks
     record_arrays: list[tuple[str, "ValidationPlan"]] = \
         field(default_factory=list)
+    # row_violations' two select lists, built once at compile time
+    # (operators/row_checks.row_projection); None when no row checks
+    row_projection: Optional[tuple[list[Column], list[Column]]] = \
+        field(default=None, repr=False)
 
     @property
     def constraint_ids(self) -> list[str]:
@@ -1405,8 +1417,48 @@ def compile_item_checks(cs: ColumnSpec) -> list[RowCheck]:
     return checks
 
 
+# compiled plans per SparkContext, kept as an attribute of the context:
+# a plan holds Columns, which are JVM objects of the context that built
+# them, so a new context starts with an empty cache
+_PLANS_ATTR = "_xmlschema_spark_plans"
+_PLANS_MAX = 64
+_PLANS_LOCK = threading.Lock()
+
+
 def compile_plan(spec: TableSpec) -> ValidationPlan:
-    """Compile the whole TableSpec once; reuse across any number of runs."""
+    """Compile the whole TableSpec once; reuse across any number of runs.
+
+    Plans are cached per SparkContext, keyed on repr(spec) (type-faithful:
+    Decimal("5") and "5" are different keys), so validating the same spec
+    again — a benchmark iteration, a stream micro-batch, a checkpoint
+    increment, a strict or is_valid probe — skips every Column build on
+    the driver. A miss compiles a deep copy of the spec, so editing the
+    caller's spec afterwards changes the next call's key, never a cached
+    plan. At most _PLANS_MAX plans are kept (least recently used goes
+    first); an invalid spec raises on every call. The returned plan is
+    shared: do not mutate it."""
+    sc = SparkContext._active_spark_context
+    key = repr(spec)
+    with _PLANS_LOCK:
+        plans = getattr(sc, _PLANS_ATTR, None)
+        if plans is None:
+            plans = {}
+            if sc is not None:
+                setattr(sc, _PLANS_ATTR, plans)
+        plan = plans.pop(key, None)
+        if plan is not None:
+            plans[key] = plan
+            return plan
+    plan = _compile(copy.deepcopy(spec))
+    with _PLANS_LOCK:
+        while len(plans) >= _PLANS_MAX:
+            del plans[next(iter(plans))]
+        plans[key] = plan
+    return plan
+
+
+def _compile(spec: TableSpec) -> ValidationPlan:
+    from ..operators.row_checks import row_projection
     from .restriction import flatten_restrictions
     # resolve named-simple-type derivation chains first: step validity
     # is checked and the chain flattened, so everything below sees one
@@ -1503,4 +1555,6 @@ def compile_plan(spec: TableSpec) -> ValidationPlan:
             valid=F.coalesce(F.expr(a.expr), F.lit(False)),
             value_col=F.lit(None).cast("string"),
         ))
+    if plan.row_checks:
+        plan.row_projection = row_projection(plan)
     return plan

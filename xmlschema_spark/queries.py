@@ -2635,7 +2635,13 @@ def hamming_near_dups_documents(spark: SparkSession,
     and capped buckets; the oracle is the brute-force all-pairs filter
     over the same hash, summing bit_count(xor) per 32-bit half (a
     combined signed 64-bit value would overflow DuckDB's checked
-    BIGINT arithmetic at reassembly). The hash is simhash64_fast."""
+    BIGINT arithmetic at reassembly). The hash is simhash64_fast.
+
+    The bucket cap (8192) is above the whole documents table at every
+    scale factor the oracle runs (5000 rows at sf0.1, whose SimHash
+    bands put up to 1338 docs in one bucket), so it never cuts a true
+    pair there; it still bounds a bucket's member array on larger
+    inputs."""
     from .operators.dedup import hamming_near_dups
     from .operators.text import simhash64_fast
     d = _load(spark, sf_dir, "documents", fan=True) \
@@ -2646,7 +2652,7 @@ def hamming_near_dups_documents(spark: SparkSession,
         F.shiftleft(F.col("hi32"), 32)
          .bitwiseOR(F.col("lo32")).alias("sh64"))
     return hamming_near_dups(h, "sh64", "doc", bands=8,
-                             max_hamming=7, max_bucket=256)
+                             max_hamming=7, max_bucket=8192)
 
 
 @register("ncname_lexical_documents", """

@@ -45,6 +45,9 @@ class XmlSchemaSparkValidationError(Exception):
 
 @dataclass
 class ValidationResult:
+    """A lax run's lazy outputs over one persisted violation union.
+    unpersist() releases it; so does leaving `with validate(...) as res:`."""
+
     violations: DataFrame     # canonical order
     verdicts: DataFrame       # (part_key, n_rows, n_violations, pass)
     _cached: DataFrame | None = None
@@ -53,6 +56,12 @@ class ValidationResult:
         if self._cached is not None:
             self._cached.unpersist()
             self._cached = None
+
+    def __enter__(self) -> "ValidationResult":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.unpersist()
 
 
 def _all_record_arrays(spec: TableSpec):
@@ -398,19 +407,30 @@ def apply_defaults(df: DataFrame, spec: TableSpec) -> DataFrame:
     return df
 
 
-def _dtype_at(df: DataFrame, name: str):
-    """DataType at a dotted path, or None. Unlike _has_column this does
-    NOT look through ArrayType at intermediate steps: the only caller,
-    _recursion_cut_parts, evaluates F.col(path) — extraction through an
-    array yields an ARRAY column, so an isNotNull() on it would flag a
-    non-null array whose elements are all NULL at the leaf (false
-    recursion-cut violations). Cuts inside repeated records are owned
-    by the exploded sub-specs' own recursion_cuts
-    (_record_array_parts), so a top-level cut path crossing an array is
-    skipped here (None), never mis-checked (r8, ADVICE)."""
-    from pyspark.sql.types import StructType
+def _cut_dtype(df: DataFrame, spec: TableSpec, path: str):
+    """DataType at a recursion-cut path, or None when the path is absent
+    from the physical schema (vacuously valid). Unlike _has_column this
+    does NOT look through ArrayType at intermediate steps: F.col(path)
+    through an array yields an ARRAY column, so an isNotNull() on it
+    would flag a non-null array whose elements are all NULL at the leaf
+    (false recursion-cut violations). A cut inside a repeated record is
+    owned by the record array's exploded sub-spec (_record_array_parts),
+    so a path crossing an array that one of spec's record arrays covers
+    is None here; one that no record array covers cannot be checked at
+    all and raises ValueError instead of being skipped."""
+    from pyspark.sql.types import ArrayType, StructType
     schema = df.schema
-    for step in name.split("."):
+    steps = path.split(".")
+    for i, step in enumerate(steps):
+        if isinstance(schema, ArrayType):
+            prefix = ".".join(steps[:i])
+            if any(r.name == prefix for r in _all_record_arrays(spec)):
+                return None
+            raise ValueError(
+                f"recursion cut '{path}' crosses the array '{prefix}', "
+                "which no record_arrays entry covers: the cut cannot be "
+                "checked (declare the array as a RecordArraySpec and put "
+                "the cut in its recursion_cuts)")
         if not isinstance(schema, StructType):
             return None
         hit = next((f for f in schema.fields if f.name == step), None)
@@ -433,15 +453,15 @@ def _recursion_cut_parts(df: DataFrame, spec: TableSpec) -> list:
     import pyspark.sql.functions as _F
     from pyspark.sql.types import ArrayType
     out = []
-    key = _F.col(spec.key_column).cast("string").alias("row_key")
-    part = (_F.col(spec.part_key).cast("bigint") if spec.part_key
-            else _F.lit(0).cast("bigint")).alias("part_key")
     for c in spec.recursion_cuts:
-        dt = _dtype_at(df, c)
+        dt = _cut_dtype(df, spec, c)
         if dt is None:
             continue
         deeper = (_F.size(_F.col(c)) > 0 if isinstance(dt, ArrayType)
                   else _F.col(c).isNotNull())
+        key = _F.col(spec.key_column).cast("string").alias("row_key")
+        part = (_F.col(spec.part_key).cast("bigint") if spec.part_key
+                else _F.lit(0).cast("bigint")).alias("part_key")
         out.append(df.where(_F.coalesce(deeper, _F.lit(False))).select(
             key, part,
             _F.lit(f"recursion:depth:{c}").alias("constraint"),
