@@ -1,5 +1,6 @@
 """The shared Arrow text-hashing core without Spark: the bounded
-per-task digest cache under a vocabulary far larger than its cap, and
+per-task digest cache under a vocabulary far larger than its cap (a
+small cap for exactness, the real cap for memory), and
 ensure_distributed's per-tree package zip."""
 
 import os
@@ -64,6 +65,32 @@ def test_digest_cache_table_grows_by_doubling():
     assert sizes == [1024, 2048, 2048, 4096, 4096]
     table, idx = c.lookup(keys)
     assert (table[idx] == derive(keys)).all()
+
+
+def _rss_mb() -> float:
+    with open("/proc/self/statm") as f:
+        pages = int(f.read().split()[1])
+    return pages * os.sysconf("SC_PAGE_SIZE") / 2**20
+
+
+def test_digest_cache_memory_bounded_at_the_real_cap():
+    """2 x 10^6 unique 15-char tokens, about twice _TEXT_HASH_CACHE_MAX,
+    through the SimHash bit expansion with one task's cache at its real
+    cap: the cache never holds more than the cap, and the process grows
+    by less than 300 MB. At the cap the cache is ~230 MB (~220 B per
+    entry); keeping every entry grows the process by ~390 MB."""
+    cap = text._TEXT_HASH_CACHE_MAX
+    sim = text._DigestCache(partial(text._simhash_rows, n_bits=64))
+    base = peak = _rss_mb()
+    most = 0
+    for b in range(200):
+        docs = [" ".join(f"tok{b * 10_000 + d * 10 + i:012d}"
+                         for i in range(10)) for d in range(1000)]
+        text.simhash_bits(docs, 64, sim)
+        most = max(most, len(sim))
+        peak = max(peak, _rss_mb())
+    assert cap // 2 < most <= cap
+    assert peak - base < 300, peak - base
 
 
 def _tree(root, body: bytes):

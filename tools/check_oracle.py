@@ -6,6 +6,9 @@ value hash (columns sorted by name).
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
        python tools/check_oracle.py [sf_dir] --emit CORRECTNESS_local_r5.json
 
+Given query names, runs only those; an unknown name exits 2 before
+Spark starts. The final count is over the queries that ran.
+
 With --emit <path>, writes a CORRECTNESS-shaped JSON artifact (one
 entry per query: rows/schema/hash match flags) so the in-repo gate is
 visible even when the driver's snapshot lags HEAD (round-4 VERDICT
@@ -50,10 +53,19 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    if only:
+        qs = {k: fn for k, fn in qs.items() if k in only}
+    oracles = entrymod.oracle_sql()
+
     import duckdb
     from pyspark.sql import SparkSession
-
-    import __spark_entry__ as entrymod
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -71,13 +83,9 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"create view {t} as select * from read_parquet('{p}')")
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     fails = []
     report: dict[str, dict] = {}
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()

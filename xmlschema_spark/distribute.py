@@ -1,20 +1,52 @@
 """Ship the package to Spark executors (the spark-submit --py-files
 pattern, per the north rule; reference analog: the CLI driver packaging
-at cli.py:234-278).
+at cli.py:234-278), and keep the Python workers from paying for the
+archives they import from.
 
 Python workers resolve cloudpickled UDF module references via their own
 sys.path, not the driver's — so any session whose driver didn't start
 inside the repo needs the package registered with addPyFile. Idempotent
-per SparkContext."""
+per SparkContext.
+
+drop_zip_finders runs first in every engine function that Spark runs in
+a Python worker. PySpark's worker calls importlib.invalidate_caches()
+before every task (worker_util.setup_spark_files), and on CPython 3.11
+and 3.12 each zipimporter in sys.path_importer_cache then re-reads its
+archive's whole central directory. With pyspark.zip, the spark-core jar,
+py4j's zip and this package's zip on the workers' path, that was a
+quarter of a CPU-second per task before any kernel code ran. This
+module pickles by value, so the workers call the helper without
+importing the package."""
 
 from __future__ import annotations
 
 import hashlib
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
+
+from pyspark import cloudpickle
 
 _SENT_ATTR = "_xmlschema_spark_pyfile"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def drop_zip_finders() -> None:
+    """Remove every zipimporter from sys.path_importer_cache, so the
+    worker's next invalidate_caches() finds no archive to re-read. The
+    dict is a cache: an import that needs one of these paths rebuilds
+    its finder through sys.path_hooks, and zipimporter reuses the
+    directory it already read (zipimport._zip_directory_cache).
+    FileFinder and None entries stay: invalidating a directory's finder
+    is cheap and picks up new files. Archives do not change under a
+    running worker."""
+    cache = sys.path_importer_cache
+    for k in list(cache):
+        if isinstance(cache.get(k), zipimport.zipimporter):
+            cache.pop(k, None)
 
 
 def package_zip(pkg_dir: str) -> str:

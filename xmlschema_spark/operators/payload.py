@@ -206,7 +206,7 @@ def payload_violations(
 
     check_phash / phash_col default to the spec's fields
     (PayloadSpec.check_phash et al.); passing them overrides."""
-    from ..distribute import ensure_distributed
+    from ..distribute import drop_zip_finders, ensure_distributed
     ensure_distributed(df.sparkSession)
     if check_phash is None:
         check_phash = getattr(spec, "check_phash", False)
@@ -238,6 +238,7 @@ def payload_violations(
     mse_max = 255.0 * 255.0 * (10.0 ** (-psnr_min / 10.0))
 
     def run(batches: Iterator) -> Iterator:
+        drop_zip_finders()
         import numpy as np
         import pyarrow as pa
         scratch = _Scratch()

@@ -9,6 +9,8 @@ comparison.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,6 +22,9 @@ from .specs import ColumnSpec, KeyrefSpec, OccursSpec, TableSpec, UniqueSpec
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
+
+_log = logging.getLogger(__name__)
+_fan_out_fallback_logged = False
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str,
@@ -48,19 +53,29 @@ def _fan_out(df: DataFrame) -> DataFrame:
     conversion costs ~30 ms per call. Only worth it where downstream
     compute dominates the shuffle cost — scan-bound aggregations
     (lineitem/orders facet suites) measure SLOWER with it and stay
-    un-fanned."""
+    un-fanned. If the size probe (a private API) fails, the split count
+    decides, and the first such fallback in a process is logged."""
+    global _fan_out_fallback_logged
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
-        size = int(df._jdf.queryExecution().analyzed()
-                   .stats().sizeInBytes())
+        size = _size_in_bytes(df)
         max_pb = _parse_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes",
                            "128m"))
         starved = size < target * max_pb
-    except Exception:
+    except Exception as e:
+        if not _fan_out_fallback_logged:
+            _fan_out_fallback_logged = True
+            _log.warning("_fan_out: size-stats probe failed (%r); "
+                         "using df.rdd.getNumPartitions()", e)
         starved = df.rdd.getNumPartitions() < target
     return df.repartition(target) if starved else df
+
+
+def _size_in_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of df's analyzed plan (private API)."""
+    return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
 
 
 _BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,

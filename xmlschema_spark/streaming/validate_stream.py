@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 # type — an unresolvable name degrades to a UserWarning per batch
 from pyspark.sql.streaming.state import GroupState  # noqa: F401
 
+from ..distribute import drop_zip_finders
 from ..operators.row_checks import row_violations
 from ..plans.compiler import ValidationPlan, compile_plan
 from ..specs import TableSpec
@@ -116,6 +117,7 @@ def streaming_global_unique_violations(stream_df: DataFrame,
 
     def track(key: tuple, pdfs: Iterator[pd.DataFrame],
               state: GroupState) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         if state.exists:
             seen, first = state.get
         else:
@@ -228,6 +230,7 @@ def streaming_unique_violations(stream_df: DataFrame, key_cols: list[str],
 
     def track(key: tuple, pdfs: Iterator[pd.DataFrame],
               state: GroupState) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         if state.hasTimedOut:
             state.remove()
             return
@@ -404,6 +407,7 @@ def qdigest_per_window(counts: DataFrame, levels: int,
               "level int, node bigint, cnt bigint")
 
     def compress(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         rows = [(0, (1 << levels) + int(lf), int(c))
                 for lf, c in zip(pdf["leaf"], pdf["cnt"])]
         out = compress_counts(rows, levels, k)
