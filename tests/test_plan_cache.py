@@ -155,3 +155,33 @@ def test_concurrent_compiles_keep_the_cache_consistent(spark):
     assert len(_cache(spark)) <= compiler._PLANS_MAX
     assert all(p.spec.columns[0].max_inclusive == t * 1000 + i
                for (t, i), p in plans.items())
+
+
+def test_warm_flagship_build_py4j_budget(spark):
+    """A warm flagship validate() builds its lazy frames from the plan's
+    prebuilt Columns: counted at the py4j client, one build with no
+    action sends at most 600 commands from the calling thread (py4j's
+    finalizer thread sends object-detach commands for earlier tests'
+    garbage on its own schedule, so those are not counted). Rebuilding
+    the identity and verdict Columns per call measured about 1,370."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+    df = make_images(spark, 60, dirty=True)
+    spec = images_spec(check_phash=True)
+    validate(df, spec).unpersist()
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+    n = [0]
+
+    def counting(self, *args, **kwargs):
+        n[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        res = validate(df, spec)
+    finally:
+        ClientServerConnection.send_command = send
+    res.unpersist()
+    assert 0 < n[0] <= 600, n[0]

@@ -71,10 +71,13 @@ def test_keyref_default_does_not_force_broadcast(spark, sf_dir):
         assert re.search(r"SortMergeJoin.*LeftAnti", p), p
         assert "BroadcastHashJoin" not in p, p
     finally:
-        if old is not None:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        if aqe is not None:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", aqe)
+        for key, val in (("spark.sql.autoBroadcastJoinThreshold", old),
+                         ("spark.sql.adaptive.autoBroadcastJoinThreshold",
+                          aqe)):
+            if val is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, val)
 
 
 def test_row_checks_whole_stage_codegen(spark, sf_dir):
@@ -202,3 +205,35 @@ def test_drift_multi_column_two_scans(spark, sf_dir):
     read_cols = {c.split("#")[0] for s in scans for c in s.split(",") if c}
     assert read_cols == {"l_orderkey", "l_quantity", "l_discount",
                          "l_extendedprice"}, read_cols
+
+
+def test_flagship_plan_one_identity_aggregate(spark, tmp_path):
+    """The flagship's violation union over a parquet table plans four
+    scans — the row pass (with the xs:key missing-field check), the
+    identity aggregate, its join-back and the payload stage — one hash
+    Exchange (the identity aggregate, both uniques in it) and at most one
+    join; only the payload scan reads `bytes`."""
+    from xmlschema_spark.runner import violations_frame
+    from xmlschema_spark.sources.fixtures import images_spec, make_images
+    path = str(tmp_path / "images")
+    make_images(spark, 400, dirty=True).write.parquet(path)
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        # Spark's default thresholds: the small dup-tuple set broadcasts
+        for k in keys:
+            spark.conf.unset(k)
+        p = _plan(violations_frame(
+            spark.read.parquet(path),
+            compile_plan(images_spec(check_phash=True))))
+    finally:
+        for k, val in saved.items():
+            if val is not None:
+                spark.conf.set(k, val)
+    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", p)
+    assert len(scans) == 4, p
+    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1, p
+    assert len(re.findall(r"\w+Join ", p)) <= 1, p
+    reads = [{c.split("#")[0] for c in s.split(",")} for s in scans]
+    assert sum("bytes" in r for r in reads) == 1, reads

@@ -12,7 +12,7 @@ import zipimport
 
 import pytest
 
-from xmlschema_spark.distribute import drop_zip_finders
+from xmlschema_spark.distribute import drop_zip_finders, worker_kernel
 from xmlschema_spark.operators.payload import (default_expected_pixels,
                                                payload_violations)
 from xmlschema_spark.sources.fixtures import images_spec, make_images
@@ -75,6 +75,47 @@ def test_invalidate_caches_reads_no_archive_after_drop(zip_on_path,
     importlib.invalidate_caches()
     assert importlib.import_module(MOD).VALUE == 42
     assert reads == []
+
+
+def test_worker_kernel_drops_the_finders_its_imports_rebuilt(zip_on_path):
+    """A kernel's first-time import rebuilds a zip finder after the entry
+    drop; worker_kernel drops it again once the generator is exhausted,
+    so the worker's next task re-reads no archive."""
+    zpath, _ = zip_on_path
+
+    @worker_kernel
+    def kernel(batches):
+        for b in batches:
+            yield importlib.import_module(MOD).VALUE + b
+
+    gen = kernel(iter([1, 2]))
+    try:
+        assert next(gen) == 43
+        assert isinstance(sys.path_importer_cache[zpath],
+                          zipimport.zipimporter)
+        assert list(gen) == [44]
+    finally:
+        sys.modules.pop(MOD, None)
+    assert not any(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+
+
+def test_worker_kernel_keeps_a_plain_function_and_its_arity(zip_on_path):
+    """An applyInPandas body keeps its signature (PySpark passes the key
+    only to a two-argument function) and drops the finders on return."""
+    import inspect
+
+    @worker_kernel
+    def per_group(key, pdf):
+        return importlib.import_module(MOD).VALUE + key + pdf
+
+    assert inspect.getfullargspec(per_group).args == ["key", "pdf"]
+    try:
+        assert per_group(1, 2) == 45
+    finally:
+        sys.modules.pop(MOD, None)
+    assert not any(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
 
 
 def test_python_workers_hold_no_zipimporter_after_payload(spark, tmp_path):

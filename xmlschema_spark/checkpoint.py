@@ -127,10 +127,10 @@ def global_identity_violations(df: DataFrame, spec: TableSpec,
     bytes), so its scan prunes to the key columns."""
     from functools import reduce
 
-    from .operators.identity import keyref_violations, unique_violations
+    from .operators.identity import identity_violations, keyref_violations
     refs = refs or {}
-    parts = [unique_violations(df, u, spec.key_column, spec.part_key)
-             for u in spec.uniques]
+    ident = compile_plan(spec).identity
+    parts = [identity_violations(df, ident)] if ident is not None else []
     for k in spec.keyrefs:
         if k.ref_table in refs:
             parts.append(keyref_violations(df, refs[k.ref_table], k,

@@ -8,19 +8,24 @@ sys.path, not the driver's — so any session whose driver didn't start
 inside the repo needs the package registered with addPyFile. Idempotent
 per SparkContext.
 
-drop_zip_finders runs first in every engine function that Spark runs in
-a Python worker. PySpark's worker calls importlib.invalidate_caches()
-before every task (worker_util.setup_spark_files), and on CPython 3.11
-and 3.12 each zipimporter in sys.path_importer_cache then re-reads its
-archive's whole central directory. With pyspark.zip, the spark-core jar,
-py4j's zip and this package's zip on the workers' path, that was a
-quarter of a CPU-second per task before any kernel code ran. This
-module pickles by value, so the workers call the helper without
-importing the package."""
+Every engine function that Spark runs in a Python worker is wrapped in
+worker_kernel, which runs drop_zip_finders when the kernel starts and
+again when it finishes. PySpark's worker calls
+importlib.invalidate_caches() before every task
+(worker_util.setup_spark_files), and on CPython 3.11 and 3.12 each
+zipimporter in sys.path_importer_cache then re-reads its archive's whole
+central directory. With pyspark.zip, the spark-core jar, py4j's zip and
+this package's zip on the workers' path, that was a quarter of a
+CPU-second per task before any kernel code ran. A kernel's first-time
+imports can rebuild finders after the entry drop, hence the second drop
+on the way out. This module pickles by value, so the workers call the
+helpers without importing the package."""
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import inspect
 import os
 import sys
 import tempfile
@@ -47,6 +52,31 @@ def drop_zip_finders() -> None:
     for k in list(cache):
         if isinstance(cache.get(k), zipimport.zipimporter):
             cache.pop(k, None)
+
+
+def worker_kernel(fn):
+    """Wrap a function that Spark runs in a Python worker (a mapInArrow /
+    mapInPandas generator, an applyInPandas body) so that the zip finders
+    are dropped when it starts and again when it finishes — for a
+    generator, when it is exhausted or closed. The wrapper reports fn's
+    signature, which PySpark reads to decide what to pass."""
+    if inspect.isgeneratorfunction(fn):
+        def kernel(*args, **kwargs):
+            drop_zip_finders()
+            try:
+                yield from fn(*args, **kwargs)
+            finally:
+                drop_zip_finders()
+    else:
+        def kernel(*args, **kwargs):
+            drop_zip_finders()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                drop_zip_finders()
+    functools.update_wrapper(kernel, fn)
+    kernel.__signature__ = inspect.signature(fn)
+    return kernel
 
 
 def package_zip(pkg_dir: str) -> str:

@@ -72,12 +72,12 @@ def image_features(df: DataFrame, bytes_col: str = "bytes",
     """Decode + feature-extract: channel means, gray stddev, perceptual
     hash, 8x8 thumbnail vector (embedding-ish). Only (id, bytes) columns
     are read — everything else pruned at the scan."""
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(df.sparkSession)
     narrow = df.select(id_col, bytes_col)
 
+    @worker_kernel
     def run(batches: Iterator) -> Iterator:
-        drop_zip_finders()
         import pyarrow as pa
         schema = pa.schema([
             ("image_id", pa.string()), ("ok", pa.bool_()),
@@ -125,7 +125,7 @@ def thumbnails(df: DataFrame, out_w: int = 32, out_h: int = 32,
                fmt: str = "png") -> DataFrame:
     """Decode -> box resize -> re-encode thumbnails (batch transform).
     Returns (image_id, thumb binary, w, h)."""
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(df.sparkSession)
     narrow = df.select(id_col, bytes_col)
     schema = T.StructType([
@@ -135,8 +135,8 @@ def thumbnails(df: DataFrame, out_w: int = 32, out_h: int = 32,
         T.StructField("h", T.IntegerType()),
     ])
 
+    @worker_kernel
     def run(batches: Iterator) -> Iterator:
-        drop_zip_finders()
         import pyarrow as pa
         out_schema = pa.schema([
             ("image_id", pa.string()), ("thumb", pa.binary()),

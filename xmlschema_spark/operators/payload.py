@@ -206,7 +206,7 @@ def payload_violations(
 
     check_phash / phash_col default to the spec's fields
     (PayloadSpec.check_phash et al.); passing them overrides."""
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(df.sparkSession)
     if check_phash is None:
         check_phash = getattr(spec, "check_phash", False)
@@ -237,8 +237,8 @@ def payload_violations(
     # of fakecodec.psnr; the SSE is exact int64, so the comparison is too)
     mse_max = 255.0 * 255.0 * (10.0 ** (-psnr_min / 10.0))
 
+    @worker_kernel
     def run(batches: Iterator) -> Iterator:
-        drop_zip_finders()
         import numpy as np
         import pyarrow as pa
         scratch = _Scratch()

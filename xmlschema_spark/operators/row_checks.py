@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.compiler import ValidationPlan
+from ..plans.compiler import RowCheck, ValidationPlan
 
 VIOLATION_COLUMNS = ["row_key", "part_key", "constraint", "reason", "value", "occurs"]
 
@@ -38,31 +38,29 @@ def _part_col(plan: ValidationPlan) -> Column:
     return F.lit(0).cast("bigint").alias("part_key")
 
 
-def row_projection(plan: ValidationPlan) -> tuple[list[Column], list[Column]]:
-    """row_violations' two select lists. They depend only on the plan, so
-    compile_plan builds them once and keeps them on the (cached) plan:
-    each Column call is several py4j round trips, and a repeated run of
-    one spec would otherwise rebuild every per-check struct."""
-    structs = [
-        F.when(
+def row_projections(plan: ValidationPlan, keys: list[RowCheck] = ()
+                    ) -> tuple[tuple | None, tuple | None]:
+    """(row_violations' two select lists, validate()'s row pass). They
+    depend only on the plan, so compile_plan builds them once and keeps
+    them on the (cached) plan: each Column call is several py4j round
+    trips, and a repeated run of one spec would otherwise rebuild every
+    per-check struct. validate()'s row pass adds `keys`, the unscoped
+    xs:keys' missing-field checks (identity.key_missing), whose value
+    stays the raw field tuple. None where there is nothing to check."""
+    def failing(chk: RowCheck, value: Column) -> Column:
+        return F.when(
             ~F.coalesce(chk.valid, F.lit(False)),
             F.struct(
                 F.lit(chk.constraint).alias("constraint"),
                 F.lit(chk.reason).alias("reason"),
-                F.substring(F.coalesce(chk.value_col, F.lit("")),
-                            1, _MAX_VALUE_REPR).alias("value"),
+                value.alias("value"),
             ),
         )
-        for chk in plan.row_checks
-    ]
-    arr = F.array_compact(F.array(*structs))
-    # explode directly — NO size()>0 pre-filter: Generate(explode,
-    # outer=false) already emits nothing for an empty array, and a
-    # filter between the projection and the explode makes the filter
-    # pushdown inline the alias into its condition, evaluating the
-    # whole check array TWICE per row (guide §4.4's duplication
-    # pattern, JVM-side). One evaluation, same rows out.
-    exploded = [_key_col(plan), _part_col(plan), F.explode(arr).alias("v")]
+
+    checks = [failing(chk, F.substring(F.coalesce(chk.value_col, F.lit("")),
+                                       1, _MAX_VALUE_REPR))
+              for chk in plan.row_checks]
+    key_col, part_col = _key_col(plan), _part_col(plan)
     flat = [
         F.col("row_key"),
         F.col("part_key"),
@@ -71,20 +69,39 @@ def row_projection(plan: ValidationPlan) -> tuple[list[Column], list[Column]]:
         F.col("v.value").alias("value"),
         F.lit(1).cast("bigint").alias("occurs"),
     ]
-    return exploded, flat
+
+    def projection(structs: list[Column]):
+        if not structs:
+            return None
+        # explode directly — NO size()>0 pre-filter: Generate(explode,
+        # outer=false) already emits nothing for an empty array, and a
+        # filter between the projection and the explode makes the filter
+        # pushdown inline the alias into its condition, evaluating the
+        # whole check array TWICE per row (guide §4.4's duplication
+        # pattern, JVM-side). One evaluation, same rows out.
+        arr = F.array_compact(F.array(*structs))
+        return [key_col, part_col, F.explode(arr).alias("v")], flat
+
+    rows = projection(checks)
+    return rows, (projection(checks + [failing(chk, chk.value_col)
+                                       for chk in keys])
+                  if keys else rows)
 
 
-def row_violations(df: DataFrame, plan: ValidationPlan) -> DataFrame:
+def row_violations(df: DataFrame, plan: ValidationPlan,
+                   keys: bool = False) -> DataFrame:
     """All row-local violations: one scan, one codegen stage, then an
     explode that keeps only failing (row, constraint) pairs. The
-    projection is the plan's prebuilt row_projection."""
-    if plan.row_projection is None:
+    projection is the plan's prebuilt row_projection; keys=True adds the
+    unscoped xs:keys' missing-field checks (validate()'s row pass)."""
+    projection = plan.validate_projection if keys else plan.row_projection
+    if projection is None:
         # identity/assert-only spec: an empty F.array() is array<void>
         # and cannot be exploded into the violation struct
         return df.sparkSession.createDataFrame(
             [], "row_key string, part_key bigint, constraint string, "
                 "reason string, value string, occurs bigint")
-    exploded, flat = plan.row_projection
+    exploded, flat = projection
     return df.select(*exploded).select(*flat)
 
 

@@ -202,7 +202,7 @@ def cosine_near_dup_pairs_vectorized(df: DataFrame, vec_col: str,
     import numpy as np
     import pandas as pd
 
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(df.sparkSession)
 
     if dims is None:
@@ -221,8 +221,8 @@ def cosine_near_dup_pairs_vectorized(df: DataFrame, vec_col: str,
 
     out_schema = "id_a string, id_b string, sim double"
 
+    @worker_kernel
     def per_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_zip_finders()
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy()
         m = np.vstack(pdf["u"].to_numpy())          # (n, dims) unit rows

@@ -186,15 +186,15 @@ def qdigest(df: DataFrame, leaf: Column, levels: int,
     """Build the digest over an integer leaf column expression (caller
     guarantees values in [0, 2^levels); NULLs are dropped). Returns
     (level, node, cnt)."""
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(df.sparkSession)   # _compress references this
     # module by name; workers outside the repo need the pkg shipped
     counts = (df.select(leaf.cast("bigint").alias("leaf"))
               .where(F.col("leaf").isNotNull())
               .groupBy("leaf").agg(F.count(F.lit(1)).alias("cnt")))
 
+    @worker_kernel
     def _compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_zip_finders()
         rows = [(0, (1 << levels) + int(lf), int(c))
                 for lf, c in zip(pdf["leaf"], pdf["cnt"])]
         out = compress_counts(rows, levels, k)
@@ -215,14 +215,14 @@ def merge_digests(digests: list[DataFrame], levels: int,
     inputs were partitioned."""
     if not digests:
         raise ValueError("no digests to merge")
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(digests[0].sparkSession)
     u = digests[0]
     for d in digests[1:]:
         u = u.unionByName(d)
 
+    @worker_kernel
     def _compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_zip_finders()
         rows = list(zip(pdf["level"].astype(int), pdf["node"].astype(int),
                         pdf["cnt"].astype(int)))
         out = compress_counts(rows, levels, k)

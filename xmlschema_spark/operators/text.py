@@ -318,7 +318,7 @@ def _text_hash_frame(df: DataFrame, text_col: str, keep_cols,
     kernel(texts, cache) maps a batch's texts (str or None) to one Arrow
     array per output column; cache is the task's _DigestCache of
     derive, kept across the task's batches."""
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(df.sparkSession)
     keep = list(keep_cols)
     narrow = df.select(*dict.fromkeys(keep + [text_col]))
@@ -327,8 +327,8 @@ def _text_hash_frame(df: DataFrame, text_col: str, keep_cols,
          for f in narrow.schema.fields if f.name in keep]
         + [f"{n} {t}" for n, t in out_types.items()])
 
+    @worker_kernel
     def run(batches):
-        drop_zip_finders()
         import pyarrow as pa
         cache = _DigestCache(derive)
         for b in batches:

@@ -24,7 +24,7 @@ import copy
 import re
 import threading
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import TYPE_CHECKING, Optional
 
 from pyspark import SparkContext
 from pyspark.sql import Column
@@ -33,6 +33,10 @@ from pyspark.sql import functions as F
 from ..functions.lexical import normalize_ws, union_matches
 from ..functions.xsd_regex import translate_xsd_pattern
 from ..specs import ColumnSpec, TableSpec
+
+if TYPE_CHECKING:
+    from ..operators.identity import IdentityColumns
+    from ..runner import VerdictColumns
 
 # types whose facet comparisons need a numeric/temporal cast of literals
 _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double", "decimal"}
@@ -363,9 +367,18 @@ class ValidationPlan:
     record_arrays: list[tuple[str, "ValidationPlan"]] = \
         field(default_factory=list)
     # row_violations' two select lists, built once at compile time
-    # (operators/row_checks.row_projection); None when no row checks
+    # (operators/row_checks.row_projections); None when no row checks
     row_projection: Optional[tuple[list[Column], list[Column]]] = \
         field(default=None, repr=False)
+    # validate()'s row pass: row_projection plus the unscoped xs:keys'
+    # missing-field checks; None when it would be empty
+    validate_projection: Optional[tuple[list[Column], list[Column]]] = \
+        field(default=None, repr=False)
+    # every unique in one aggregate (operators/identity.identity_columns);
+    # None when the spec has no uniques
+    identity: Optional[IdentityColumns] = field(default=None, repr=False)
+    # verdicts_frame's Columns (runner.verdict_columns)
+    verdicts: Optional[VerdictColumns] = field(default=None, repr=False)
 
     @property
     def constraint_ids(self) -> list[str]:
@@ -1458,7 +1471,9 @@ def compile_plan(spec: TableSpec) -> ValidationPlan:
 
 
 def _compile(spec: TableSpec) -> ValidationPlan:
-    from ..operators.row_checks import row_projection
+    from ..operators.identity import identity_columns, key_missing
+    from ..operators.row_checks import row_projections
+    from ..runner import verdict_columns
     from .restriction import flatten_restrictions
     # resolve named-simple-type derivation chains first: step validity
     # is checked and the chain flattened, so everything below sees one
@@ -1555,6 +1570,11 @@ def _compile(spec: TableSpec) -> ValidationPlan:
             valid=F.coalesce(F.expr(a.expr), F.lit(False)),
             value_col=F.lit(None).cast("string"),
         ))
-    if plan.row_checks:
-        plan.row_projection = row_projection(plan)
+    plan.row_projection, plan.validate_projection = row_projections(
+        plan, [key_missing(u) for u in spec.uniques
+               if u.is_key and not u.scope])
+    if spec.uniques:
+        plan.identity = identity_columns(spec.uniques, spec.key_column,
+                                         spec.part_key)
+    plan.verdicts = verdict_columns(spec)
     return plan

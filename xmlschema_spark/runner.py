@@ -1,9 +1,11 @@
 """End-to-end validation run: the analog of schema.iter_errors.
 
 Lifecycle (mirrors xmlschema/validators/schemas.py:1285-1405):
-  stage A  row-local checks — one select, whole-stage codegen
-  stage B  identity aggregates — partial+final uniqueness (deferred like the
-           reference's identity-counter merge, schemas.py:1386-1389)
+  stage A  row-local checks — one select, whole-stage codegen; it also
+           holds the unscoped xs:keys' missing-field checks
+  stage B  identity aggregate — every unique in ONE partial+final count
+           aggregate and ONE join-back (deferred like the reference's
+           identity-counter merge, schemas.py:1386-1389)
   stage C  referential anti-joins — keyref/IDREF
            (_validate_references, schemas.py:1393-1405)
   stage D  payload Arrow stage (bytes column read ONLY here)
@@ -21,11 +23,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .operators.identity import (keyref_violations, occurs_violations,
-                                 unique_violations)
+from .operators.identity import (identity_violations, keyref_violations,
+                                 occurs_violations)
 from .operators.payload import payload_violations
 from .operators.row_checks import canonical_violations, row_violations
 from .plans.compiler import ValidationPlan, compile_plan
@@ -519,7 +521,7 @@ def violation_parts(df: DataFrame, plan: ValidationPlan,
         raise KeyError(
             f"declared columns missing from table: {sorted(missing)} "
             "(run schema_violations() for a report instead)")
-    parts = [row_violations(df, plan)]
+    parts = [row_violations(df, plan, keys=True)]
     wc_rows = _attr_wildcard_rows(df, spec)
     if wc_rows:
         # nested attribute-wildcard verdicts are schema-level (struct
@@ -531,8 +533,9 @@ def violation_parts(df: DataFrame, plan: ValidationPlan,
     parts.extend(_required_wildcard_parts(df, spec))
     parts.extend(_recursion_cut_parts(df, spec))
     parts.extend(_record_array_parts(df, plan, spec))
-    for u in spec.uniques:
-        parts.append(unique_violations(df, u, spec.key_column, spec.part_key))
+    if plan.identity is not None:
+        parts.append(identity_violations(df, plan.identity,
+                                         unscoped_missing=False))
     for k in spec.keyrefs:
         if k.ref_table not in refs:
             raise KeyError(f"keyref '{k.name}' needs ref table '{k.ref_table}'")
@@ -562,24 +565,43 @@ def violations_frame(df: DataFrame, plan: ValidationPlan,
                                   extra_validators))
 
 
+@dataclass
+class VerdictColumns:
+    """verdicts_frame's Columns; a ValidationPlan holds them, built once."""
+
+    part_key: Column
+    n_rows: Column
+    n_violations: Column
+    out: list[Column]
+    order: Column
+
+
+def verdict_columns(spec: TableSpec) -> VerdictColumns:
+    pk = F.col(spec.part_key).cast("bigint") if spec.part_key \
+        else F.lit(0).cast("bigint")
+    n = F.count(F.lit(1))
+    nv = F.coalesce("n_violations", F.lit(0)).cast("bigint")
+    return VerdictColumns(
+        part_key=pk.alias("part_key"), n_rows=n.alias("n_rows"),
+        n_violations=n.alias("n_violations"),
+        out=[F.col("part_key"), F.col("n_rows"), nv.alias("n_violations"),
+             (nv == 0).alias("pass")],
+        order=F.col("part_key"))
+
+
+def _verdicts(df: DataFrame, violations: DataFrame,
+              cols: VerdictColumns) -> DataFrame:
+    rows = df.groupBy(cols.part_key).agg(cols.n_rows)
+    viol = violations.groupBy(cols.order).agg(cols.n_violations)
+    return (rows.join(viol, on="part_key", how="left")
+            .select(*cols.out).orderBy(cols.order))
+
+
 def verdicts_frame(df: DataFrame, violations: DataFrame,
                    spec: TableSpec) -> DataFrame:
     """(part_key, n_rows, n_violations, pass) — per-partition verdicts
     (reference: per-document verdict of cli.py:234-278, partitioned)."""
-    pk = F.col(spec.part_key).cast("bigint") if spec.part_key else F.lit(0).cast("bigint")
-    rows = df.groupBy(pk.alias("part_key")).agg(F.count(F.lit(1)).alias("n_rows"))
-    viol = violations.groupBy("part_key").agg(
-        F.count(F.lit(1)).alias("n_violations"))
-    return (
-        rows.join(viol, on="part_key", how="left")
-        .select(
-            "part_key",
-            "n_rows",
-            F.coalesce("n_violations", F.lit(0)).cast("bigint").alias("n_violations"),
-            (F.coalesce("n_violations", F.lit(0)) == 0).alias("pass"),
-        )
-        .orderBy("part_key")
-    )
+    return _verdicts(df, violations, verdict_columns(spec))
 
 
 def validate(df: DataFrame, spec_or_plan: TableSpec | ValidationPlan,
@@ -593,7 +615,7 @@ def validate(df: DataFrame, spec_or_plan: TableSpec | ValidationPlan,
         empty = spark.createDataFrame(
             [], "row_key string, part_key bigint, constraint string, "
                 "reason string, value string, occurs bigint")
-        return ValidationResult(empty, verdicts_frame(df, empty, plan.spec))
+        return ValidationResult(empty, _verdicts(df, empty, plan.verdicts))
     if mode == "strict":
         # STAGED fail-fast (reference: raise on first error,
         # validation.py:216-236): probe each violation source with its
@@ -609,7 +631,7 @@ def validate(df: DataFrame, spec_or_plan: TableSpec | ValidationPlan,
         empty = spark.createDataFrame(
             [], "row_key string, part_key bigint, constraint string, "
                 "reason string, value string, occurs bigint")
-        return ValidationResult(empty, verdicts_frame(df, empty, plan.spec))
+        return ValidationResult(empty, _verdicts(df, empty, plan.verdicts))
     v = violations_frame(df, plan, refs, extra_validators=extra_validators)
     # persist: the violations DAG (payload decode, identity aggs, joins) is
     # the expensive part and is consumed by BOTH the violations output and
@@ -617,7 +639,7 @@ def validate(df: DataFrame, spec_or_plan: TableSpec | ValidationPlan,
     # The persisted set holds only failures (small by construction).
     v = v.persist()
     return ValidationResult(canonical_violations(v),
-                            verdicts_frame(df, v, plan.spec), _cached=v)
+                            _verdicts(df, v, plan.verdicts), _cached=v)
 
 
 def is_valid(df: DataFrame, spec_or_plan: TableSpec | ValidationPlan,

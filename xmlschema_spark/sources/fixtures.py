@@ -54,7 +54,7 @@ def make_images(spark: SparkSession, n_rows: int,
     with a downsampled buffer? No — headers must match buffers, so we cap
     BOTH to keep the invariant real: test fixtures use w,h <= 80.
     """
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(spark)   # mapInPandas closures need the pkg on executors
     base = spark.range(0, n_rows, 1).withColumnRenamed("id", "i")
     m = F.col("i") % MOD
@@ -88,8 +88,8 @@ def make_images(spark: SparkSession, n_rows: int,
     # caption + phash + bytes via one Arrow batch pass (pure f(i))
     dirty_flag, skew_flag, with_b = dirty, skew_phash, with_bytes
 
+    @worker_kernel
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             caps, phs, bufs = [], [], []
             for i, wv, hv, fv in zip(pdf["i"], pdf["w"], pdf["h"], pdf["fmt"]):
@@ -151,7 +151,7 @@ def make_images(spark: SparkSession, n_rows: int,
 def make_captions_ref(spark: SparkSession, n_rows: int) -> DataFrame:
     """F3: all F1 ids except i % 1009 == 13 (keyref misses), with lang and
     the normalized reference caption (caption-equality sidecar)."""
-    from ..distribute import drop_zip_finders, ensure_distributed
+    from ..distribute import ensure_distributed, worker_kernel
     ensure_distributed(spark)
     langs = F.array(F.lit("en"), F.lit("it"), F.lit("de"))
     base = (spark.range(0, n_rows, 1).withColumnRenamed("id", "i")
@@ -159,8 +159,8 @@ def make_captions_ref(spark: SparkSession, n_rows: int) -> DataFrame:
 
     import pandas as pd  # noqa: F811
 
+    @worker_kernel
     def gen(batches):
-        drop_zip_finders()
         for pdf in batches:
             out = pd.DataFrame({
                 "i": pdf["i"],

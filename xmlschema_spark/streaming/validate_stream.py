@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 # type — an unresolvable name degrades to a UserWarning per batch
 from pyspark.sql.streaming.state import GroupState  # noqa: F401
 
-from ..distribute import drop_zip_finders
+from ..distribute import worker_kernel
 from ..operators.row_checks import row_violations
 from ..plans.compiler import ValidationPlan, compile_plan
 from ..specs import TableSpec
@@ -115,9 +115,9 @@ def streaming_global_unique_violations(stream_df: DataFrame,
     state_schema = "seen bigint, first_id string"
     reason_prefix = f"duplicated value for '{constraint}' fields {key_cols}: "
 
+    @worker_kernel
     def track(key: tuple, pdfs: Iterator[pd.DataFrame],
               state: GroupState) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         if state.exists:
             seen, first = state.get
         else:
@@ -228,9 +228,9 @@ def streaming_unique_violations(stream_df: DataFrame, key_cols: list[str],
     state_schema = "seen bigint, first_id string, max_ev bigint"
     reason_prefix = f"duplicated value for '{constraint}' fields {key_cols}: "
 
+    @worker_kernel
     def track(key: tuple, pdfs: Iterator[pd.DataFrame],
               state: GroupState) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         if state.hasTimedOut:
             state.remove()
             return
@@ -406,8 +406,8 @@ def qdigest_per_window(counts: DataFrame, levels: int,
     schema = ("win_start timestamp, win_end timestamp, "
               "level int, node bigint, cnt bigint")
 
+    @worker_kernel
     def compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_zip_finders()
         rows = [(0, (1 << levels) + int(lf), int(c))
                 for lf, c in zip(pdf["leaf"], pdf["cnt"])]
         out = compress_counts(rows, levels, k)
