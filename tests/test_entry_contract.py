@@ -39,10 +39,9 @@ def test_registry_holds_the_80_names():
 # Queries with NO DuckDB oracle, each with the reason it is not
 # SQL-expressible. Growing this set is a release decision, not a
 # default — the driver's gate records these as weaker rows-only checks.
-# (Round 6: empty — quantile_sketch_lineitem was deregistered from
-# QUERIES so the driver board carries no permanent `no_oracle` row; its
-# rank-error gate quantile_sketch_rank_check stays registered and
-# hash-checked, and the function itself stays importable + pytested.)
+# (Empty: every quantile query runs on the canonical q-digest, whose
+# digests and quantiles are hash-checked; quantile_sketch_rank_check
+# gates the digest's rank guarantee against exact ranks.)
 NO_ORACLE_EXCEPTIONS: set[str] = set()
 
 

@@ -1,43 +1,11 @@
-"""Multimodal operators, checkpoint/resume, CLI, streaming."""
+"""Checkpoint/resume, CLI, streaming."""
 
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from xmlschema_spark.operators.multimodal import image_features, thumbnails
 from xmlschema_spark.sources.fixtures import images_spec, make_images
-
-
-@pytest.fixture(scope="module")
-def imgs(spark):
-    return make_images(spark, 300, dirty=False).cache()
-
-
-def test_image_features(imgs):
-    feats = image_features(imgs).collect()
-    assert len(feats) == 300
-    ok = [f for f in feats if f.ok]
-    assert len(ok) == 300
-    f0 = ok[0]
-    assert f0.width > 0 and len(f0.thumb8) == 64
-    assert 0 <= f0.mean_r <= 255
-
-
-def test_image_features_malformed(spark):
-    df = spark.createDataFrame([("x", bytearray(b"garbage"))],
-                               "image_id string, bytes binary")
-    f = image_features(df).collect()[0]
-    assert f.ok is False and f.width is None
-
-
-def test_thumbnails_roundtrip(imgs):
-    from xmlschema_spark import fakecodec
-    t = thumbnails(imgs.limit(5), out_w=16, out_h=16).collect()
-    assert len(t) == 5
-    fmt, w, h, px = fakecodec.decode(bytes(t[0].thumb))
-    assert (w, h) == (16, 16)
 
 
 def test_checkpoint_resume(spark, tmp_path):

@@ -97,28 +97,6 @@ def test_xsd_pattern_literal_is_whole_match_anchored(s):
     assert not re.match(pat, "x" + s)
 
 
-@settings(max_examples=40, deadline=None)
-@given(w=st.integers(min_value=1, max_value=50),
-       h=st.integers(min_value=1, max_value=50),
-       ow=st.integers(min_value=1, max_value=12),
-       oh=st.integers(min_value=1, max_value=12),
-       i=IDX)
-def test_block_mean_resize_matches_loop(w, h, ow, oh, i):
-    """reduceat block-mean resize == per-block np.mean loop, bit for bit
-    (integer block sums are exact in float64)."""
-    from xmlschema_spark.operators.multimodal import _block_mean_resize
-    px = fakecodec.gen_pixels(i, w, h)
-    got = _block_mean_resize(px, ow, oh)
-    ys = (np.arange(oh + 1) * h // oh)
-    xs = (np.arange(ow + 1) * w // ow)
-    want = np.empty((oh, ow, 3), dtype=np.float64)
-    for a in range(oh):
-        for b in range(ow):
-            want[a, b] = px[ys[a]:max(ys[a + 1], ys[a] + 1),
-                            xs[b]:max(xs[b + 1], xs[b] + 1)].mean(axis=(0, 1))
-    assert np.array_equal(got, want)
-
-
 TEXTS = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=80)
 

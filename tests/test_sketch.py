@@ -5,7 +5,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from xmlschema_spark.operators.sketch import (compress_counts, merge_digests,
+from xmlschema_spark.operators.sketch import (compress, compress_counts,
+                                              leaf_rows, merge_digests,
                                               qdigest, qdigest_quantiles)
 
 L, K = 10, 32          # 1024 leaves
@@ -88,6 +89,60 @@ def test_merge_matches_direct_on_counts(spark):
 def test_empty_input(spark):
     df = spark.createDataFrame([], "v long")
     assert qdigest(df, F.col("v"), L, K).count() == 0
+
+
+def test_grouped_compress_matches_per_group_qdigest(spark):
+    """One grouped compression over two groups equals, bitwise, the two
+    ungrouped digests of those groups' rows (each group compresses
+    against its own total)."""
+    rng = random.Random(17)
+    rows = ([("a", rng.randrange(1 << L)) for _ in range(3000)]
+            + [("b", 42)] * 300 + [("b", rng.randrange(64))
+                                   for _ in range(400)])
+    df = spark.createDataFrame(rows, "g string, v long")
+    counts = df.groupBy("g", F.col("v").alias("leaf")) \
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    grouped = {}
+    for r in compress(leaf_rows(counts, L, ("g",)), L, K, ("g",)).collect():
+        grouped.setdefault(r.g, []).append((r.level, r.node, r.cnt))
+    for g in ("a", "b"):
+        single = _digest_rows(qdigest(df.where(F.col("g") == g),
+                                      F.col("v"), L, K))
+        assert sorted(grouped[g]) == single, g
+
+
+def test_rank_check_leaf_space_with_hot_leaf(spark):
+    """quantile_sketch_rank_check's reading at its k: with a hot leaf
+    holding 15 % of the rows, every quantile's exact leaf-space ranks
+    satisfy lo - 1e-2 <= q <= hi + 1e-2."""
+    from xmlschema_spark.queries import _QD_LEVELS, _RANK_K, _leaf_ranks
+    rng = random.Random(13)
+    vals = [2048] * 3000 + [rng.randrange(1 << _QD_LEVELS)
+                            for _ in range(17000)]
+    # lineitem at sf0.001/0.01/0.1, and this input
+    for n in (6000, 60000, 600000, len(vals)):
+        assert _QD_LEVELS * (n // _RANK_K) + 1 <= 0.01 * n
+    df = spark.createDataFrame([(v,) for v in vals], "v long")
+    qs = [0.25, 0.5, 0.75, 0.95]
+    rows = _leaf_ranks(df, {"v": F.col("v")}, qs)
+    assert [q for _, q, _, _ in rows] == qs
+    for _, q, lo, hi in rows:
+        assert lo - 1e-2 <= q <= hi + 1e-2, (q, lo, hi)
+    # the median lands in the hot leaf: its exact ranks straddle 0.5
+    lo, hi = rows[1][2:]
+    assert hi - lo >= 0.15
+
+
+def test_package_has_one_quantile_sketch():
+    """No module under xmlschema_spark/ calls percentile_approx: the
+    canonical q-digest stays the package's only quantile sketch."""
+    import pathlib
+
+    import xmlschema_spark
+    root = pathlib.Path(xmlschema_spark.__file__).parent
+    hits = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+            if "percentile_approx" in p.read_text()]
+    assert hits == []
 
 
 # ----------------------------------------------------- property tests

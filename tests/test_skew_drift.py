@@ -4,8 +4,9 @@ F5 drift fixture (KL detects the shifted column, not the stable one)."""
 import pytest
 from pyspark.sql import functions as F
 
-from xmlschema_spark.operators.drift import drift_report, quantile_sketch
+from xmlschema_spark.operators.drift import drift_report
 from xmlschema_spark.operators.identity import unique_violations
+from xmlschema_spark.operators.sketch import qdigest, qdigest_quantiles
 from xmlschema_spark.sources.fixtures import make_images
 from xmlschema_spark.specs import UniqueSpec
 
@@ -55,8 +56,12 @@ def test_drift_report_detects_shift(spark):
 
 
 def test_quantile_sketch_shape(spark):
+    """The q-digest over w and h (integer pixels are their own leaves)
+    reads one leaf_hi per quantile; the median of w stays in the
+    fixture's width range."""
     df = make_images(spark, 3000, with_bytes=False)
-    out = quantile_sketch(df, ["w", "h"], [0.5, 0.9]).collect()
+    out = {(c, r.quantile): r.leaf_hi for c in ("w", "h")
+           for r in qdigest_quantiles(qdigest(df, F.col(c), 12),
+                                      [0.5, 0.9], 12).collect()}
     assert len(out) == 4
-    med_w = [r.value for r in out if r.col == "w" and r.quantile == 0.5][0]
-    assert 16 <= med_w <= 16 + 65
+    assert 16 <= out[("w", 0.5)] <= 16 + 65

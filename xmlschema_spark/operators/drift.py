@@ -1,4 +1,4 @@
-"""Distribution-drift checks: histograms, KL divergence, quantile sketches.
+"""Distribution-drift checks: histograms, KL and JS divergence.
 
 No reference analog — these are the Spark-scale additions the north rule
 requires (column stats + distribution-drift checks). Everything is
@@ -8,8 +8,9 @@ built-in Catalyst aggregation:
   partial+final combine — one shuffle of at most n_bins rows per column.
 - KL divergence: joined bin tables with Laplace smoothing, a few-row
   computation after the aggregates; deterministic at any parallelism.
-- quantiles: percentile_approx — Spark's built-in distributed quantile
-  sketch (the t-digest role); mergeable across partitions.
+
+Quantiles come from the one quantile sketch, the canonical q-digest in
+operators/sketch.py.
 """
 
 from __future__ import annotations
@@ -66,27 +67,6 @@ def kl_from_counts(bins: DataFrame, pc: DataFrame, qc: DataFrame,
                    n_bins: int, smooth: float = 0.5) -> DataFrame:
     j, p, q = _smoothed_pmfs(bins, pc, qc, n_bins, smooth)
     return j.agg(F.sum(p * F.log(p / q)).alias("kl"))
-
-
-def quantile_sketch(df: DataFrame, cols: list[str],
-                    quantiles: list[float],
-                    accuracy: int = 10000) -> DataFrame:
-    """Distributed quantile sketch per column (percentile_approx — the
-    t-digest role: mergeable per-partition sketches, bounded error
-    1/accuracy). Returns (col, quantile, value)."""
-    aggs = [F.percentile_approx(c, quantiles, accuracy).alias(c) for c in cols]
-    row = df.agg(*aggs)
-    stacked = None
-    for c in cols:
-        qdf = row.select(
-            F.lit(c).alias("col"),
-            F.posexplode(F.col(c)).alias("qi", "value"),
-        )
-        stacked = qdf if stacked is None else stacked.unionByName(qdf)
-    qarr = F.array(*[F.lit(q) for q in quantiles])
-    return stacked.select("col",
-                          F.element_at(qarr, F.col("qi") + 1).alias("quantile"),
-                          "value")
 
 
 def _hist_row_exprs(cols: list[str], bounds: dict, n_bins: int,

@@ -1,11 +1,12 @@
-"""Deterministic mergeable quantile sketch: a canonical q-digest.
+"""Deterministic mergeable quantile sketch: a canonical q-digest, the
+package's one quantile sketch.
 
 Role: the reference pairs its validator with distribution checks the
-north rule asks for (quantile sketches feeding drift verdicts); Spark's
-percentile_approx fills that role fast but its internal t-digest
-clustering is merge-order dependent, so its output can only be gated by
-a rank-guarantee check, never hash-compared against an independent
-oracle. This module is the from-scratch, hash-checkable replacement.
+north rule asks for (quantile sketches feeding drift verdicts). A
+sketch whose output depends on partitioning or merge order could only
+be gated by a rank-guarantee check, never hash-compared against an
+independent oracle; this one is a pure function of the exact leaf
+histogram, so both its digest and its quantiles are hash-checked.
 
 Design (q-digest after Shrivastava et al., "Medians and Beyond:
 New Aggregation Techniques for Sensor Networks", SenSys'04 — built
@@ -20,12 +21,16 @@ histogram, never of partitioning or merge order):
    shuffle; partial+final combine, at most 2^levels result rows — the
    per-partition leaf counts ARE the mergeable partial sketches: counts
    are additive, so partition-level merge is exact);
-3. canonical bottom-up compression in ONE bounded task (applyInPandas
-   over a constant group, input <= 2^levels rows regardless of n):
-   level by level, each sibling family with total mass
-   <= floor(n/k) is pushed into its parent; families that exceed the
-   threshold are emitted into the digest. Heavy hitters therefore stay
-   at leaf resolution while sparse tails collapse upward.
+3. canonical bottom-up compression in ONE bounded task per digest
+   (`compress`: one applyInPandas over (group cols..., level, node,
+   cnt) rows, input <= 2^levels rows per group regardless of n):
+   level by level, each sibling family with total mass <= floor(n/k)
+   is pushed into its parent; families that exceed the threshold are
+   emitted into the digest. Heavy hitters therefore stay at leaf
+   resolution while sparse tails collapse upward. `qdigest` feeds it
+   leaf rows, `merge_digests` the union of digests, and
+   streaming.validate_stream.qdigest_per_window leaf rows grouped by
+   event-time window.
 
 Determinism: step 3's input (the exact leaf histogram) and rule are
 both order-free, so the digest is bitwise identical at any parallelism
@@ -42,26 +47,25 @@ the node-width value quantization. tests/test_sketch.py asserts the
 rank bound property-style; the digest itself is exact by construction.
 
 Scale: the aggregate shuffles at most min(distinct leaves, 2^levels)
-rows per partition (map-side combine); the compression task is O(2^levels)
-independent of n — at 10^12 rows the plan is one exchange plus a
-single bounded reduce, strictly cheaper than percentile_approx's
-per-partition digest merges for the same accuracy class.
+rows per partition (map-side combine); the compression task is
+O(2^levels) independent of n — at 10^12 rows the plan is one exchange
+plus a single bounded reduce.
 
-Reference parity note: percentile_approx remains available via
-drift.quantile_sketch (rank-gated); this module supersedes it wherever
-the oracle gate needs hashes (xmlschema has no sketch analog — its
-numeric facets are exact; file:line cites are therefore design-rule
-cites, not ports).
+xmlschema has no sketch analog — its numeric facets are exact; file:line
+cites here are therefore design-rule cites, not ports.
 """
 
 from __future__ import annotations
 
+import functools
 from collections import defaultdict
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..distribute import ensure_distributed, worker_kernel
 
 DIGEST_SCHEMA = "level int, node bigint, cnt bigint"
 
@@ -181,29 +185,50 @@ def float_leaf_sql(col_sql: str, lo, hi, levels: int,
             f"ELSE CAST({leaf} AS BIGINT) END")
 
 
+def leaf_rows(counts: DataFrame, levels: int,
+              by: tuple[str, ...] = ()) -> DataFrame:
+    """Exact leaf counts (by..., leaf, cnt) as level-0 digest rows
+    (by..., level, node, cnt): leaf ids offset by 2^levels."""
+    return counts.select(*by, F.lit(0).alias("level"),
+                         (F.col("leaf") + (1 << levels)).alias("node"),
+                         "cnt")
+
+
+def compress(rows: DataFrame, levels: int, k: int,
+             by: tuple[str, ...] = ()) -> DataFrame:
+    """The one compression stage: each `by` group of (by..., level,
+    node, cnt) rows — the whole frame, as one group, when `by` is
+    empty — becomes its canonical digest in one bounded task
+    (compress_counts over <= 2^levels rows when the input is a leaf
+    histogram). Returns (by..., level, node, cnt)."""
+    ensure_distributed(rows.sparkSession)   # the kernel references this
+    # module by name; workers outside the repo need the pkg shipped
+    schema = "".join(f"`{c}` {rows.schema[c].dataType.simpleString()}, "
+                     for c in by) + DIGEST_SCHEMA
+
+    @worker_kernel
+    def _compress(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = compress_counts(zip(pdf["level"].tolist(),
+                                  pdf["node"].tolist(),
+                                  pdf["cnt"].tolist()), levels, k)
+        res = pd.DataFrame(out, columns=["level", "node", "cnt"]) \
+            .astype({"level": "int32", "node": "int64", "cnt": "int64"})
+        for i, c in enumerate(by):
+            res.insert(i, c, pdf[c].iloc[0])
+        return res
+
+    return rows.groupBy(*by).applyInPandas(_compress, schema)
+
+
 def qdigest(df: DataFrame, leaf: Column, levels: int,
             k: int = 64) -> DataFrame:
     """Build the digest over an integer leaf column expression (caller
     guarantees values in [0, 2^levels); NULLs are dropped). Returns
     (level, node, cnt)."""
-    from ..distribute import ensure_distributed, worker_kernel
-    ensure_distributed(df.sparkSession)   # _compress references this
-    # module by name; workers outside the repo need the pkg shipped
     counts = (df.select(leaf.cast("bigint").alias("leaf"))
               .where(F.col("leaf").isNotNull())
               .groupBy("leaf").agg(F.count(F.lit(1)).alias("cnt")))
-
-    @worker_kernel
-    def _compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = [(0, (1 << levels) + int(lf), int(c))
-                for lf, c in zip(pdf["leaf"], pdf["cnt"])]
-        out = compress_counts(rows, levels, k)
-        return pd.DataFrame(out, columns=["level", "node", "cnt"]) \
-            .astype({"level": "int32", "node": "int64", "cnt": "int64"})
-
-    # one bounded task: the aggregate above caps input at 2^levels rows
-    return (counts.withColumn("_g", F.lit(1)).groupBy("_g")
-            .applyInPandas(lambda pdf: _compress(pdf), DIGEST_SCHEMA))
+    return compress(leaf_rows(counts, levels), levels, k)
 
 
 def merge_digests(digests: list[DataFrame], levels: int,
@@ -215,22 +240,8 @@ def merge_digests(digests: list[DataFrame], levels: int,
     inputs were partitioned."""
     if not digests:
         raise ValueError("no digests to merge")
-    from ..distribute import ensure_distributed, worker_kernel
-    ensure_distributed(digests[0].sparkSession)
-    u = digests[0]
-    for d in digests[1:]:
-        u = u.unionByName(d)
-
-    @worker_kernel
-    def _compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(zip(pdf["level"].astype(int), pdf["node"].astype(int),
-                        pdf["cnt"].astype(int)))
-        out = compress_counts(rows, levels, k)
-        return pd.DataFrame(out, columns=["level", "node", "cnt"]) \
-            .astype({"level": "int32", "node": "int64", "cnt": "int64"})
-
-    return (u.withColumn("_g", F.lit(1)).groupBy("_g")
-            .applyInPandas(lambda pdf: _compress(pdf), DIGEST_SCHEMA))
+    return compress(functools.reduce(DataFrame.unionByName, digests),
+                    levels, k)
 
 
 def qdigest_quantiles(digest: DataFrame, quantiles: list[float],

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.identity import (keyref_violations, occurs_violations,
@@ -1122,8 +1122,8 @@ def conditional_facets_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 """)
 def quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distributed percentiles (oracle-parity path). The sketch
-    path for 10^12 rows is percentile_approx (t-digest role) — exposed
-    as quantile_sketch_lineitem (unregistered; rank-gated)."""
+    path for 10^12 rows is the canonical q-digest (qdigest_lineitem,
+    qdigest_quantiles_lineitem, quantile_sketch_rank_check)."""
     df = _load(spark, sf_dir, "lineitem")
     qs = [0.25, 0.5, 0.75, 0.95]
     row = df.agg(F.percentile("l_extendedprice", qs).alias("v"))
@@ -1133,20 +1133,6 @@ def quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode("v").alias("qi", "raw")) \
         .select("col", F.element_at(qarr, F.col("qi") + 1).alias("quantile"),
                 F.round("raw", 4).alias("value"))
-
-
-def quantile_sketch_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable quantile sketch (percentile_approx; bounded-error,
-    partition-mergeable — the scale path). Deliberately NOT registered
-    in QUERIES: percentile_approx has no DuckDB-exact oracle, so it
-    would sit on the driver board as a permanent `no_oracle` row. Its
-    correctness is gated by quantile_sketch_rank_check (hash-checked
-    rank-error bound) and superseded by the canonical q-digest queries
-    (qdigest_lineitem / qdigest_events_value, fully hash-checked)."""
-    from .operators.drift import quantile_sketch
-    df = _load(spark, sf_dir, "lineitem")
-    return quantile_sketch(df, ["l_extendedprice", "l_quantity"],
-                           [0.25, 0.5, 0.75, 0.95])
 
 
 @register("topk_orders_per_priority", """
@@ -2050,42 +2036,6 @@ def record_keyref_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("row_key", "constraint", "value")
 
 
-@register("quantile_sketch_rank_check", """
-  WITH qs AS (SELECT unnest([0.25, 0.5, 0.75, 0.95]) AS quantile)
-  SELECT 'l_extendedprice' AS col, CAST(quantile AS DOUBLE) AS quantile,
-         TRUE AS rank_ok FROM qs
-  UNION ALL
-  SELECT 'l_quantity', CAST(quantile AS DOUBLE), TRUE FROM qs
-""")
-def quantile_sketch_rank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-guarantee gate: each percentile_approx output value must sit
-    within rank tolerance of its target quantile (the bounded-error
-    contract of the mergeable sketch; accuracy=10000 => rank error 1e-4,
-    checked at 1e-2 for slack). Exact ranks are computed as conditional
-    sums — one extra pass, test-scale only."""
-    from .operators.drift import quantile_sketch
-    df = _load(spark, sf_dir, "lineitem")
-    qs = [0.25, 0.5, 0.75, 0.95]
-    sk = quantile_sketch(df, ["l_extendedprice", "l_quantity"], qs).collect()
-    checks = []
-    aggs = []
-    for idx, r in enumerate(sk):
-        c, v = r["col"], float(r["value"])
-        aggs.append((F.sum(F.when(F.col(c) < v, 1).otherwise(0))
-                     / F.count(c)).alias(f"lo{idx}"))
-        aggs.append((F.sum(F.when(F.col(c) <= v, 1).otherwise(0))
-                     / F.count(c)).alias(f"hi{idx}"))
-    ranks = df.agg(*aggs).collect()[0]
-    rows = []
-    for idx, r in enumerate(sk):
-        q = float(r["quantile"])
-        ok = (float(ranks[f"lo{idx}"]) - 1e-2 <= q
-              <= float(ranks[f"hi{idx}"]) + 1e-2)
-        rows.append((r["col"], q, ok))
-    return spark.createDataFrame(
-        rows, "col string, quantile double, rank_ok boolean")
-
-
 @register("ann_lsh_recall", """
   SELECT 10 AS k, TRUE AS recall_ok
 """)
@@ -2702,16 +2652,22 @@ def ncname_lexical_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Canonical q-digest (operators/sketch.py): the hash-checkable quantile
+# Canonical q-digest (operators/sketch.py): the package's one quantile
 # sketch. The oracle replays the EXACT construction — leaf histogram +
 # 12 unrolled compression levels as chained CTEs — so the digest itself
-# is rows+schema+hash verified, closing the one correctness row
-# percentile_approx could only rank-gate.
+# is rows+schema+hash verified; quantile_sketch_rank_check gates the
+# quantiles it reads against exact ranks.
 # ---------------------------------------------------------------------------
 
 _QD_LEVELS, _QD_K = 12, 64
 _QD_LEAF_SQL = ("least(4095, greatest(0, "
                 "CAST(round(l_extendedprice * 100) AS BIGINT) // 4096))")
+# the Spark twin of _QD_LEAF_SQL (integer cents, $40.96 leaves)
+_QD_LEAF = ("least(4095, greatest(0, "
+            "cast(round(l_extendedprice * 100) as bigint) div 4096))")
+# the rank gate's k: levels * floor(n/k) + 1 <= 1e-2 * n at every scale
+# factor (12/1536 < 0.8 %)
+_RANK_K = 1536
 
 
 def _qdigest_cte_sql(leaf_sql: str = _QD_LEAF_SQL,
@@ -2757,10 +2713,8 @@ def _qdigest_cte_sql(leaf_sql: str = _QD_LEAF_SQL,
 def _qdigest_lineitem_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketch import qdigest
     df = _load(spark, sf_dir, "lineitem")
-    leaf = F.expr("least(4095, greatest(0, "
-                  "cast(round(l_extendedprice * 100) as bigint) div 4096))")
     return qdigest(df.where(F.col("l_extendedprice").isNotNull()),
-                   leaf, _QD_LEVELS, _QD_K)
+                   F.expr(_QD_LEAF), _QD_LEVELS, _QD_K)
 
 
 @register("qdigest_lineitem",
@@ -2955,6 +2909,59 @@ def qdigest_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest = _qdigest_lineitem_df(spark, sf_dir)
     return qdigest_quantiles(digest, [0.01, 0.25, 0.5, 0.75, 0.99],
                              _QD_LEVELS)
+
+
+def _leaf_ranks(df: DataFrame, leaves: dict[str, Column],
+                quantiles: list[float]
+                ) -> list[tuple[str, float, float, float]]:
+    """Read each quantile off a k=_RANK_K q-digest of each column's
+    integer leaf (NULL values dropped), then the exact rank of the
+    reported leaf_hi in ONE conditional-sum pass over `df`:
+    lo = frac(leaf < leaf_hi), hi = frac(leaf <= leaf_hi). The digest
+    guarantees lo - (levels*floor(n/k) + 1)/n <= q <= hi; ranks are
+    taken in leaf space, so a leaf's value width adds no error. Returns
+    (col, quantile, lo, hi) rows."""
+    from .operators.sketch import qdigest, qdigest_quantiles
+    leaves = {c: F.when(F.col(c).isNotNull(), leaf)
+              for c, leaf in leaves.items()}
+    reads = [(c, r.quantile, r.leaf_hi)
+             for c, leaf in leaves.items()
+             for r in sorted(qdigest_quantiles(
+                 qdigest(df, leaf, _QD_LEVELS, _RANK_K), quantiles,
+                 _QD_LEVELS).collect())]
+    aggs = []
+    for i, (c, _, hi) in enumerate(reads):
+        leaf = leaves[c]
+        aggs.append((F.sum(F.when(leaf < hi, 1).otherwise(0))
+                     / F.count(leaf)).alias(f"lo{i}"))
+        aggs.append((F.sum(F.when(leaf <= hi, 1).otherwise(0))
+                     / F.count(leaf)).alias(f"hi{i}"))
+    ranks = df.agg(*aggs).collect()[0]
+    return [(c, q, ranks[f"lo{i}"], ranks[f"hi{i}"])
+            for i, (c, q, _) in enumerate(reads)]
+
+
+@register("quantile_sketch_rank_check", """
+  WITH qs AS (SELECT unnest([0.25, 0.5, 0.75, 0.95]) AS quantile)
+  SELECT 'l_extendedprice' AS col, CAST(quantile AS DOUBLE) AS quantile,
+         TRUE AS rank_ok FROM qs
+  UNION ALL
+  SELECT 'l_quantity', CAST(quantile AS DOUBLE), TRUE FROM qs
+""")
+def quantile_sketch_rank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch-guarantee gate: each quantile read off a q-digest (k=1536,
+    rank error <= 0.8 %) must sit within 1e-2 of its target's exact
+    leaf-space rank. l_extendedprice uses the integer-cents leaf of
+    qdigest_lineitem; l_quantity (whole numbers 1-50) is its own leaf."""
+    df = _load(spark, sf_dir, "lineitem")
+    rows = _leaf_ranks(
+        df, {"l_extendedprice": F.expr(_QD_LEAF),
+             "l_quantity": F.expr("least(4095, greatest(0, "
+                                  "cast(l_quantity as bigint)))")},
+        [0.25, 0.5, 0.75, 0.95])
+    return spark.createDataFrame(
+        [(c, q, lo - 1e-2 <= q <= hi + 1e-2) for c, q, lo, hi in rows],
+        "col string, quantile double, rank_ok boolean")
 
 
 # ---------------------------------------------------------------------------

@@ -29,6 +29,7 @@ from pyspark.sql.streaming.state import GroupState  # noqa: F401
 
 from ..distribute import worker_kernel
 from ..operators.row_checks import row_violations
+from ..operators.sketch import compress, leaf_rows
 from ..plans.compiler import ValidationPlan, compile_plan
 from ..specs import TableSpec
 
@@ -396,25 +397,5 @@ def qdigest_per_window(counts: DataFrame, levels: int,
     window: (win_start, win_end, level, node, cnt). Batch pass over
     closed windows — one bounded task per window (<= 2^levels input
     rows), windows compress in parallel."""
-    import pandas as pd
-
-    from ..distribute import ensure_distributed
-    from ..operators.sketch import compress_counts
-    ensure_distributed(counts.sparkSession)   # closure references the
-    # sketch module by name — ship the pkg for off-repo drivers
-
-    schema = ("win_start timestamp, win_end timestamp, "
-              "level int, node bigint, cnt bigint")
-
-    @worker_kernel
-    def compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = [(0, (1 << levels) + int(lf), int(c))
-                for lf, c in zip(pdf["leaf"], pdf["cnt"])]
-        out = compress_counts(rows, levels, k)
-        res = pd.DataFrame(out, columns=["level", "node", "cnt"])
-        res.insert(0, "win_end", pdf["win_end"].iloc[0])
-        res.insert(0, "win_start", pdf["win_start"].iloc[0])
-        return res
-
-    return (counts.groupBy("win_start", "win_end")
-            .applyInPandas(lambda pdf: compress(pdf), schema))
+    win = ("win_start", "win_end")
+    return compress(leaf_rows(counts, levels, win), levels, k, win)
