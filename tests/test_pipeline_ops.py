@@ -105,21 +105,88 @@ def test_text_stats(spark):
     assert got[1]["lang"] == "unknown" and got[1]["q"] < got[0]["q"] + 1
 
 
-def test_vectorized_near_dup_matches_hof(spark, sf_dir):
-    from xmlschema_spark.operators.similarity import (
-        cosine_near_dup_pairs, cosine_near_dup_pairs_vectorized)
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    def canon(rows):
-        out = {}
-        for r in rows:
-            a, b = sorted([str(r.id_a), str(r.id_b)])
-            out[(a, b)] = r.sim
-        return out
-    v = canon(cosine_near_dup_pairs_vectorized(
-        e, "embedding", "vec_id", threshold=0.3, n_planes=4).collect())
-    h = canon(cosine_near_dup_pairs(
-        e, "embedding", "vec_id", threshold=0.3, n_planes=4).collect())
-    assert v == h
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_lsh_near_dups_match_brute_in_shared_buckets(spark, sf_dir, id_type):
+    """The one LSH cosine core against the exact reference: its pairs are
+    the brute pairs whose rounded sim reaches the threshold (brute run at
+    threshold - 0.5e-4, the LSH path's rounded-threshold semantics),
+    restricted to pairs sharing an lsh_bucket, with identical sims and
+    id_a < id_b in Spark's order for the id type passed in."""
+    from xmlschema_spark.operators.similarity import lsh_bucket
+    thr, planes = 0.3, 4
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
+        .withColumn("vec_id", F.col("vec_id").cast(id_type))
+    dims = len(e.select("embedding").first()[0])
+    lsh = cosine_near_dup_pairs(e, "embedding", "vec_id", threshold=thr,
+                                n_planes=planes, dims=dims)
+    assert lsh.where(F.col("id_a") >= F.col("id_b")).count() == 0
+    got = {(r.id_a, r.id_b): r.sim for r in lsh.collect()}
+    bucket = {r.vec_id: r.b for r in e.select(
+        "vec_id", lsh_bucket(F.col("embedding"), planes, dims).alias("b"))
+        .collect()}
+    brute = cosine_near_dup_pairs(e, "embedding", "vec_id",
+                                  threshold=thr - 0.5e-4, brute_force=True)
+    want = {(r.id_a, r.id_b): r.sim for r in brute.collect()
+            if r.sim >= thr and bucket[r.id_a] == bucket[r.id_b]}
+    assert want and got == want
+
+
+def test_lsh_near_dups_round_half_up_like_brute(spark):
+    """Spark rounds the LSH sims (HALF_UP, as the oracles' ROUND does),
+    not numpy's half-even: e_k and a 16-dim vector of 0.25s have an
+    exact cosine of 0.25, which is 0.3 at 1 decimal, the same as the
+    brute path gives. k is chosen so both share one 2-plane bucket."""
+    from xmlschema_spark.operators.similarity import plane_weight
+    planes, dims = 2, 16
+    quarter_bits = [sum(plane_weight(p, d) for d in range(dims)) >= 0
+                    for p in range(planes)]
+    k = next(k for k in range(dims)
+             if [plane_weight(p, k) >= 0 for p in range(planes)]
+             == quarter_bits)
+    e = [0.0] * dims
+    e[k] = 1.0
+    df = spark.createDataFrame([(1, e), (2, [0.25] * dims)],
+                               "vec_id bigint, embedding array<double>")
+    kw = dict(threshold=0.2, decimals=1, n_planes=planes)
+    brute = cosine_near_dup_pairs(df, "embedding", "vec_id",
+                                  brute_force=True, **kw).collect()
+    lsh = cosine_near_dup_pairs(df, "embedding", "vec_id", **kw).collect()
+    assert [tuple(r) for r in lsh] == [tuple(r) for r in brute] \
+        == [(1, 2, 0.3)]
+
+
+def test_lsh_near_dups_duplicate_and_null_ids(spark):
+    """Duplicate ids give no self-pair and no repeated pair; a NULL id
+    (and a NULL vector) never pairs."""
+    v = [1.0, 0.5, 0.25, 0.125]
+    df = spark.createDataFrame(
+        [("a", v), ("a", v), ("b", v), (None, v), ("c", None), ("c", v)],
+        "vec_id string, embedding array<double>")
+    got = sorted(tuple(r) for r in cosine_near_dup_pairs(
+        df, "embedding", "vec_id", threshold=0.9, n_planes=4).collect())
+    assert got == [("a", "b", 1.0), ("a", "c", 1.0), ("b", "c", 1.0)]
+
+
+def test_cosine_pair_blocks_bounded_memory():
+    """The per-bucket gemm runs in row blocks: 12,000 unit rows in one
+    bucket stay far below the 1.15 GB one 12,000^2 float64 matrix needs."""
+    import tracemalloc
+
+    import numpy as np
+
+    from xmlschema_spark.operators.similarity import cosine_pair_blocks
+    rng = np.random.default_rng(0)
+    m = rng.standard_normal((12_000, 64))
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    ids = np.arange(12_000, dtype=np.int64)
+    tracemalloc.start()
+    try:
+        a, b, sims = cosine_pair_blocks(ids, m, 1.5)   # keeps nothing
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(a) == len(b) == len(sims) == 0
+    assert peak < 256 * 2 ** 20, peak
 
 
 def test_ivf_ann(spark, sf_dir):

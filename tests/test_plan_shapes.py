@@ -237,3 +237,32 @@ def test_flagship_plan_one_identity_aggregate(spark, tmp_path):
     assert len(re.findall(r"\w+Join ", p)) <= 1, p
     reads = [{c.split("#")[0] for c in s.split(",")} for s in scans]
     assert sum("bytes" in r for r in reads) == 1, reads
+
+
+def test_lsh_cosine_near_dups_one_bucket_exchange_no_join(spark, sf_dir):
+    """The LSH cosine near-dup plan: no join, one FlatMapGroupsInPandas,
+    and the cap window and the group share one hash Exchange on the
+    bucket; the only other Exchange is the final distinct's. Read off
+    the final AQE plan (the executed-plan string of a run query also
+    holds the initial plan)."""
+    from xmlschema_spark.operators.similarity import cosine_near_dup_pairs
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = cosine_near_dup_pairs(e, "embedding", "vec_id", threshold=0.3,
+                               n_planes=4, dims=64)
+    df.collect()
+    p = _plan(df)
+    assert "isFinalPlan=true" in p, p[:2000]
+    final = p.split("== Initial Plan ==")[0]
+    assert "Join" not in final, final
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+    assert final.count("Exchange") == 2, final
+    lines = final.splitlines()
+
+    def at(pattern):
+        return next(i for i, s in enumerate(lines) if re.search(pattern, s))
+
+    distinct = at(r"Exchange hashpartitioning\(id_a#")
+    group = at(r"FlatMapGroupsInPandas \[b#")
+    window = at(r"Window \[row_number\(\)")
+    bucket = at(r"Exchange hashpartitioning\(b#\d+L, \d+\)")
+    assert distinct < group < window < bucket, final

@@ -126,8 +126,8 @@ def test_nonexistent_date_fails_lexical_not_ordered(spark):
 
 def test_hof_lsh_near_dup_path_capped(spark):
     """Degenerate corpus: 300 identical embeddings = one LSH bucket. The
-    HOF path must cap the bucket BEFORE the self-join (round-2 fixed the
-    vectorized path; this pins the legacy path too)."""
+    LSH path must cap the bucket BEFORE the groupBy ships it to the
+    per-bucket kernel, keeping the smallest string-cast ids."""
     from xmlschema_spark.operators.similarity import cosine_near_dup_pairs
     rows = [(f"v{i:04d}", [1.0, 0.5, 0.25, 0.125]) for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
@@ -356,9 +356,9 @@ def test_dup_clusters_transitive_closure(spark):
 
 
 def test_dup_clusters_long_chain_converges(spark):
-    """A 40-node path graph must converge in ~log2(40) rounds thanks to
-    pointer jumping — max_iters=10 would take 39 rounds under plain
-    neighbor-min propagation."""
+    """A 40-node path graph must converge within max_iters=10 rounds
+    (large-star/small-star takes 7) — plain neighbor-min propagation
+    would take 39."""
     from xmlschema_spark.operators.dedup import dup_clusters
     n = 40
     pairs = spark.createDataFrame(
@@ -367,6 +367,20 @@ def test_dup_clusters_long_chain_converges(spark):
     got = {(r.member, r.cluster) for r in
            dup_clusters(pairs, max_iters=10).collect()}
     assert got == {(f"n{i:02d}", "n00") for i in range(n)}
+
+
+def test_dup_clusters_shuffled_path_converges(spark):
+    """A 256-node path whose ids are shuffled along it (min-label
+    propagation with pointer jumping did not converge on it in 20
+    rounds) closes to one component at the default max_iters."""
+    import random
+    from xmlschema_spark.operators.dedup import dup_clusters
+    ids = [f"p{i:03d}" for i in range(256)]
+    random.Random(7).shuffle(ids)
+    pairs = spark.createDataFrame(list(zip(ids, ids[1:])),
+                                  "id_a string, id_b string")
+    got = {(r.member, r.cluster) for r in dup_clusters(pairs).collect()}
+    assert got == {(i, "p000") for i in ids}
 
 
 def test_dup_clusters_raises_on_nonconvergence(spark):

@@ -239,38 +239,34 @@ def test_parker_converter_drops_all_raises(spark):
 # ------------------------------------------- large-star/small-star CC
 
 def test_dup_clusters_star_matches_propagate(spark):
-    """Star edge-rewriting and label propagation must produce identical
-    component labels on chains, cliques, and singleton self-pairs."""
-    from xmlschema_spark.operators.dedup import dup_clusters_star
-    pairs = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(15)]     # chain
-        + [("z1", "z2"), ("z2", "z3"), ("z1", "z3")]            # clique
-        + [("solo", "solo")],                                    # self-pair
-        "id_a string, id_b string")
-    a = sorted((r.member, r.cluster)
-               for r in dup_clusters(pairs).collect())
+    """Large-star/small-star edge rewriting must produce the component
+    labels of a union-find over the same pairs on chains, cliques, and
+    singleton self-pairs."""
+    from components_reference import component_labels
+    edges = ([(f"n{i:02d}", f"n{i + 1:02d}") for i in range(15)]  # chain
+             + [("z1", "z2"), ("z2", "z3"), ("z1", "z3")]         # clique
+             + [("solo", "solo")])                                # self-pair
+    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
     b = sorted((r.member, r.cluster)
-               for r in dup_clusters_star(pairs).collect())
-    assert a == b
+               for r in dup_clusters(pairs).collect())
+    assert b == component_labels(edges)
     assert ("solo", "solo") in b
 
 
 def test_dup_clusters_star_descending_chain_checkpointed(spark, tmp_path):
     """Worst-ish ordering (ids descending along the chain) with
     reliable checkpointing enabled."""
-    from xmlschema_spark.operators.dedup import dup_clusters_star
     n = 24
     pairs = spark.createDataFrame(
         [(f"n{n - i:02d}", f"n{n - i - 1:02d}") for i in range(n)],
         "id_a string, id_b string")
-    out = dup_clusters_star(pairs,
-                            checkpoint_dir=str(tmp_path / "ck")).collect()
+    out = dup_clusters(pairs,
+                       checkpoint_dir=str(tmp_path / "ck")).collect()
     assert all(r.cluster == "n00" for r in out)
     assert len(out) == n + 1
 
 
 def test_dup_clusters_star_parallelism_invariant(spark):
-    from xmlschema_spark.operators.dedup import dup_clusters_star
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r")],
         "id_a string, id_b string")
@@ -280,7 +276,7 @@ def test_dup_clusters_star_parallelism_invariant(spark):
         for nshuf in ("2", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", nshuf)
             outs.append(sorted((r.member, r.cluster)
-                               for r in dup_clusters_star(pairs).collect()))
+                               for r in dup_clusters(pairs).collect()))
         assert outs[0] == outs[1]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -8,8 +8,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from components_reference import component_labels
 from xmlschema_spark.operators.dedup import (dup_clusters,
-                                             dup_clusters_star,
                                              incremental_deduplicate)
 
 
@@ -87,18 +87,16 @@ def test_fp_store_bucket_spec_mismatch_raises(spark, tmp_path):
 # ------------------------------------------- star digest fixed point
 
 def test_dup_clusters_star_digest_matches_label_prop(spark):
-    """Digest-based fixed point must land on the same components as
-    the exceptAll-based check did: star output == label-prop output on
-    a graph with chains, a clique and singleton self-loop."""
+    """The digest-based fixed point must land on the true components:
+    dup_clusters output == a union-find over the same pairs on a graph
+    with chains, a clique and singleton self-loop."""
     edges = ([(f"c{i:02d}", f"c{i + 1:02d}") for i in range(12)]
              + [("k1", "k2"), ("k1", "k3"), ("k2", "k3"), ("k3", "k4")]
              + [("solo", "solo")])
     pairs = spark.createDataFrame(edges, "id_a string, id_b string")
     star = sorted((r.member, r.cluster)
-                  for r in dup_clusters_star(pairs).collect())
-    prop = sorted((r.member, r.cluster)
                   for r in dup_clusters(pairs).collect())
-    assert star == prop
+    assert star == component_labels(edges)
     assert ("solo", "solo") in star
 
 

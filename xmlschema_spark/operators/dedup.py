@@ -253,27 +253,46 @@ def deduplicate(df: DataFrame, text_col: str, id_col: str,
     raise ValueError(f"unknown dedup method {method!r}")
 
 
-def dup_clusters_star(pairs: DataFrame, max_iters: int = 30,
-                      checkpoint_dir: str | None = None) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    edge rewriting (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — the 10^12-edge variant of dup_clusters:
-    instead of propagating labels over a FIXED edge set, each round
-    REWRITES the edges toward a star forest, so the working set shrinks
-    as components contract and the round count is O(log^2 n) worst
-    case, 2-4 in practice for near-clique duplicate clusters.
+def dup_clusters(pairs: DataFrame, max_iters: int = 30,
+                 checkpoint_dir: str | None = None) -> DataFrame:
+    """Connected components over a duplicate-pair graph: (member,
+    cluster) with cluster = the MIN member id of the component — the
+    exact transitive closure the star approximation in deduplicate()
+    skips ("iterate for full closure").
+
+    Algorithm: alternating LARGE-STAR / SMALL-STAR edge rewriting
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14). Each round REWRITES the edges toward a star forest, so the
+    working set shrinks as components contract and the round count is
+    O(log^2 n) worst case whatever the id order along a chain, 2-4 in
+    practice for near-clique duplicate clusters:
 
       large-star(u): every neighbor v > u re-attaches to
                      m = min(N(u) + {u});
       small-star(u): every neighbor v <= u (and u) attaches to m.
 
-    Both are one groupBy (min) + one join per round — the same physical
-    shape as dup_clusters' propagation, but on a shrinking frame.
-    Fixed point = the edge set is a star forest; labels read off as
-    least(node, min neighbor). Same output contract as dup_clusters:
-    (member, cluster=component min), deterministic at any parallelism.
-    Checkpointing semantics identical to dup_clusters (localCheckpoint
-    by default, reliable checkpoint() with `checkpoint_dir`)."""
+    Each is one groupBy (min) + one join. Fixed point = the edge set is
+    a star forest, detected by an edge-set digest; labels read off as
+    least(node, min neighbor). A run that has not converged after
+    max_iters rounds raises instead of returning labels where one
+    component carries several representatives.
+
+    Checkpointing: each round's edges are checkpointed (DAG truncation
+    — iterative plans grow their lineage geometrically and a 10+-round
+    loop overflows plan compilation). With `checkpoint_dir=None` this
+    is localCheckpoint: executor-local blocks, fast, but (a) a lost
+    executor on a real cluster loses lineage-truncated blocks and fails
+    the job, and (b) superseded rounds' blocks are freed by the JVM
+    block-manager GC, not eagerly — up to max_iters edge frames can be
+    live at once. With `checkpoint_dir` set, rounds use RELIABLE
+    .checkpoint() into that directory: executor-loss-safe (the
+    10^12-edge / real-cluster mode); superseded rounds' files are
+    reclaimed by the ContextCleaner when
+    spark.cleaner.referenceTracking.cleanCheckpoints=true, otherwise
+    they persist until the checkpoint dir is dropped with the run.
+
+    Deterministic: min over ids at any parallelism; no shuffle-order
+    dependence."""
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -342,8 +361,8 @@ def dup_clusters_star(pairs: DataFrame, max_iters: int = 30,
             prev = cur
         if not converged:
             raise RuntimeError(
-                f"dup_clusters_star did not converge in {max_iters} "
-                "rounds; raise max_iters")
+                f"dup_clusters did not converge in {max_iters} rounds; "
+                "raise max_iters")
         labs = (E.groupBy("a").agg(F.min("b").alias("_mb"))
                 .select(F.col("a").alias("node"),
                         F.least(F.col("_mb"), F.col("a")).alias("lab")))
@@ -357,105 +376,6 @@ def dup_clusters_star(pairs: DataFrame, max_iters: int = 30,
         nodes.unpersist()
 
 
-def dup_clusters(pairs: DataFrame, max_iters: int = 20,
-                 checkpoint_dir: str | None = None) -> DataFrame:
-    """Connected components over a duplicate-pair graph: (member,
-    cluster) with cluster = the MIN member id of the component — the
-    exact transitive closure the star approximation in deduplicate()
-    skips ("iterate for full closure").
-
-    Algorithm: iterative min-label propagation COMPOSED WITH pointer
-    jumping (lab <- lab(lab)) and early stop — per round every node
-    takes min(own, neighbors' labels), then hops once through its
-    label's label, so chain depth halves per round: O(log diameter)
-    rounds (the large-star/small-star bound), and duplicate clusters
-    being near-cliques (LSH blocks + verified pairs) close in 2-3;
-    max_iters bounds adversarial chains (a path of 2^20 nodes still
-    converges in ~20 rounds). Each round is one join + one partial+final min
-    aggregate (shuffle on node id).
-
-    Checkpointing: each round's labels are checkpointed (DAG truncation
-    — iterative plans grow their lineage geometrically and a 10+-round
-    loop overflows plan compilation). With `checkpoint_dir=None` this
-    is localCheckpoint: executor-local blocks, fast, but (a) a lost
-    executor on a real cluster loses lineage-truncated blocks and fails
-    the job, and (b) superseded rounds' blocks are freed by the JVM
-    block-manager GC, not eagerly — up to max_iters label frames can be
-    live at once (bounded by max_iters * |nodes|, small next to the
-    edge set, but not single-frame). With `checkpoint_dir` set, rounds
-    use RELIABLE .checkpoint() into that directory: executor-loss-safe
-    (the 10^12-edge / real-cluster mode); superseded rounds' files are
-    reclaimed by the ContextCleaner when
-    spark.cleaner.referenceTracking.cleanCheckpoints=true, otherwise
-    they persist until the checkpoint dir is dropped with the run.
-
-    Deterministic: min over ids at any parallelism; no shuffle-order
-    dependence."""
-    spark = pairs.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(frame: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return frame.checkpoint(eager=True)
-        return frame.localCheckpoint(eager=True)
-
-    edges = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    edges = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
-    labels = _ckpt(edges.select(F.col("a").alias("node")).distinct()
-                   .withColumn("lab", F.col("node")))
-    try:
-        converged = False
-        for _ in range(max_iters):
-            nbr = (edges.join(labels.select(F.col("node").alias("b"),
-                                            F.col("lab").alias("nlab")),
-                              on="b")
-                   .groupBy("a").agg(F.min("nlab").alias("nlab")))
-            # materialize BEFORE the self-join below: otherwise the
-            # neighbor-min join+aggregate subtree appears twice in one
-            # plan and may execute twice if exchange reuse doesn't kick
-            # in (it is the dominant per-round cost)
-            new = _ckpt(labels.join(nbr, labels["node"] == nbr["a"], "left")
-                        .select(F.col("node"),
-                                F.least(F.col("lab"),
-                                        F.coalesce(F.col("nlab"),
-                                                   F.col("lab")))
-                                .alias("lab")))
-            # pointer jumping: lab <- lab(lab). Plain neighbor-min needs
-            # diameter rounds on a path graph; composing each round with
-            # one label-of-label hop halves chain depth, giving
-            # O(log diameter) rounds total (the same bound as
-            # large-star/small-star contraction, one extra self-join per
-            # round instead of a rewritten edge set)
-            hop = new.select(F.col("node").alias("_n2"),
-                             F.col("lab").alias("_l2"))
-            new = _ckpt(new.join(hop, new["lab"] == hop["_n2"], "left")
-                        .select(F.col("node"),
-                                F.least(F.col("lab"),
-                                        F.coalesce(F.col("_l2"),
-                                                   F.col("lab")))
-                                .alias("lab")))
-            changed = (new.join(labels.withColumnRenamed("lab", "old"),
-                                on="node")
-                       .where(F.col("lab") != F.col("old"))
-                       .limit(1).count())
-            labels = new
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            # silent non-convergence would hand back labels where one
-            # component carries several "representatives" — fail loudly
-            # instead (the contract is cluster == component min)
-            raise RuntimeError(
-                f"dup_clusters did not converge in {max_iters} rounds "
-                "(component diameter exceeds max_iters); raise max_iters "
-                "or pre-contract chains with large-star/small-star")
-        return labels.select(F.col("node").alias("member"),
-                             F.col("lab").alias("cluster"))
-    finally:
-        edges.unpersist()
 
 
 _RUN_ID_RE = re.compile(r"^[A-Za-z0-9_.-]{1,128}$")

@@ -8,14 +8,16 @@
   ±1 weights derived from md5 first-byte parity (plane_weight), so the
   exact buckets are reproducible by ANY engine — the DuckDB oracles
   recompute them bit-for-bit.
-- all-pairs near-dup: LSH-bucket join, exact cosine verify inside
-  buckets only.
+- all-pairs near-dup: sign-LSH buckets, exact cosine verify inside
+  each bucket by one blocked BLAS gemm (one applyInPandas, no join).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -119,54 +121,66 @@ def ann_topk_lsh(df: DataFrame, vec_col: str, id_col: str,
     return cosine_topk(cand, vec_col, id_col, query_vec, k, decimals)
 
 
+# one gemm block of the LSH near-dup kernel holds at most this many
+# float64 cosines (32 MB), whatever the bucket size
+_BLOCK_DOUBLES = 1 << 22
+
+
+def cosine_pair_blocks(ids: np.ndarray, m: np.ndarray, floor: float):
+    """The near-dup pairs of one bucket: `ids` (at least one) sorted
+    ascending, `m` their unit rows. Returns index arrays (a, b) and the unrounded cosines of
+    every pair with ids[a] < ids[b] (strictly: no self-pair, no pair of
+    duplicate ids) and cosine >= floor. The gemm runs in row blocks,
+    m[i:i+B] @ m[i:].T with B = 2^22 // n, so one block holds at most
+    about 2^22 cosines: memory is O(n * dims + pairs kept), never the
+    O(n^2) of a whole-bucket m @ m.T."""
+    step = max(1, _BLOCK_DOUBLES // len(ids))
+    a, b, sims = [], [], []
+    for i in range(0, len(ids), step):
+        block = m[i:i + step] @ m[i:].T
+        r, c = np.nonzero(block >= floor)
+        s = block[r, c]
+        r += i
+        c += i
+        # sorted ids: ids[r] < ids[c] also drops the diagonal and the
+        # block's lower triangle
+        keep = ids[r] < ids[c]
+        a.append(r[keep])
+        b.append(c[keep])
+        sims.append(s[keep])
+    return np.concatenate(a), np.concatenate(b), np.concatenate(sims)
+
+
 def cosine_near_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
                           threshold: float = 0.95, n_planes: int = 6,
                           decimals: int = 4,
                           brute_force: bool = False,
                           max_bucket: int = 20_000,
                           dims: int | None = None) -> DataFrame:
-    """All-pairs near-duplicates by cosine >= threshold.
+    """All-pairs near-duplicates (id_a < id_b, sim) by cosine >= threshold.
 
-    brute_force=True: exact O(n^2) within-join (oracle-comparable);
-    default: sign-LSH blocked — pairs must share the full bucket, then
-    exact cosine verify (the 100TB path; recall < 1 by design). Hot
-    buckets are capped at max_bucket rows (deterministic, smallest ids
-    survive) BEFORE the self-join, same as the vectorized path — a
-    degenerate bucket (e.g. many identical embeddings) is otherwise
-    quadratic in the join."""
-    # pre-normalize ONCE PER ROW before the join: computing norm() per
-    # PAIR re-traverses both arrays O(pairs) times (measured 3x on the
-    # LSH-blocked path). After this, each pair costs exactly one dot.
-    # The bucket is computed from the RAW vector (same sign bits as the
-    # unit vector mathematically, and bit-identical to an external
-    # engine that sees only the raw floats — oracle parity).
-    base = df.select(F.col(id_col).alias("_id"),
-                     unit_vector(F.col(vec_col)).alias("_u"),
-                     F.col(vec_col).alias("_raw"))
+    brute_force=True: exact O(n^2) crossJoin (oracle-comparable) that
+    thresholds the UNROUNDED cosine. Default: sign-LSH blocked — pairs
+    must share the full bucket, verified by one BLAS gemm per bucket
+    (cosine_pair_blocks) in one applyInPandas, and thresholded on the
+    cosine ROUNDED by Spark (the 100TB path; recall < 1 by design).
+    Pairs are oriented by the id column's own type: numeric ids in
+    numeric order, string ids lexicographically. NULL ids and NULL
+    vectors never pair. Hot buckets are capped at max_bucket rows
+    before the groupBy ships them to Python (deterministic: the
+    smallest string-cast ids survive).
+
+    dims: the embedding dimensionality (for the literal hyperplane
+    arrays). Pass it when known — the None fallback probes the frame
+    with first(), an extra driver job that re-executes everything below
+    `df` (r8: on a repartitioned input that is a full shuffle for one
+    row)."""
     if brute_force:
+        base = df.select(F.col(id_col).alias("_id"),
+                         unit_vector(F.col(vec_col)).alias("_u"))
         left = base.select(F.col("_id").alias("id_a"), F.col("_u").alias("va"))
         right = base.select(F.col("_id").alias("id_b"), F.col("_u").alias("vb"))
-        j = left.crossJoin(right).where(F.col("id_a") < F.col("id_b"))
-    else:
-        from .dedup import _cap_buckets
-        if dims is None:
-            # extra driver job re-executing the frame below `df`; pass
-            # dims when known (r8)
-            dims = len(df.select(vec_col).first()[0])
-        # bucket ONCE on the shared base, cap, then derive both join
-        # sides from the SAME capped frame so left/right survivors
-        # agree row-for-row. Cap order = STRING-cast id, matching the
-        # vectorized path (which works on string ids throughout), so
-        # an over-cap bucket keeps the identical survivor set on both
-        # paths regardless of the caller's id type.
-        bb = base.withColumn("_b", lsh_bucket(F.col("_raw"), n_planes, dims))
-        bb = _cap_buckets(bb, ["_b"], F.col("_id").cast("string"),
-                          max_bucket)
-        lb = bb.select(F.col("_id").alias("id_a"), F.col("_u").alias("va"), "_b")
-        rb = bb.select(F.col("_id").alias("id_b"), F.col("_u").alias("vb"), "_b")
-        j = lb.join(rb, on="_b", how="inner").where(F.col("id_a") < F.col("id_b"))
-    sim = dot(F.col("va"), F.col("vb"))
-    if brute_force:
+        sim = dot(F.col("va"), F.col("vb"))
         # the brute path's oracle contract thresholds the UNROUNDED
         # cosine (the rounded value is presentation only); filtering on
         # the rounded alias admitted pairs in
@@ -174,72 +188,48 @@ def cosine_near_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
         # (r8): exact cosine 0.2999924… rounds to 0.3000 and slipped
         # through. The LSH path below keeps the rounded-threshold
         # semantics its own oracles pin.
-        return (j.where(sim >= threshold)
-                .select("id_a", "id_b",
-                        F.round(sim, decimals).alias("sim")))
-    return (j.select("id_a", "id_b", F.round(sim, decimals).alias("sim"))
-            .where(F.col("sim") >= threshold))
+        return (left.crossJoin(right)
+                .where((F.col("id_a") < F.col("id_b")) & (sim >= threshold))
+                .select("id_a", "id_b", F.round(sim, decimals).alias("sim")))
 
-
-def cosine_near_dup_pairs_vectorized(df: DataFrame, vec_col: str,
-                                     id_col: str, threshold: float = 0.95,
-                                     n_planes: int = 8,
-                                     decimals: int = 4,
-                                     max_bucket: int = 20_000,
-                                     dims: int | None = None) -> DataFrame:
-    """Scale path: sign-LSH bucketing + per-bucket numpy MATMUL via
-    applyInPandas — one BLAS gemm per bucket instead of per-pair HOF
-    array traversals (~100x on the dot products). Buckets above
-    max_bucket are truncated deterministically (sorted by id) so one
-    degenerate bucket cannot OOM an executor; log-scale estimate:
-    20k x 20k x 64 dims = 25 GFLOP ~ seconds.
-
-    dims: the embedding dimensionality (for the literal hyperplane
-    arrays). Pass it when known — the None fallback probes the frame
-    with first(), an extra driver job that re-executes everything
-    below `df` (r8: on a repartitioned input that is a full shuffle
-    for one row)."""
-    import numpy as np
     import pandas as pd
 
     from ..distribute import ensure_distributed, worker_kernel
-    ensure_distributed(df.sparkSession)
-
+    from .dedup import _cap_buckets
+    ensure_distributed(df.sparkSession)   # the kernel references this
+    # module by name; workers outside the repo need the pkg shipped
     if dims is None:
         dims = len(df.select(vec_col).first()[0])
-    base = df.select(
-        F.col(id_col).cast("string").alias("id"),
-        unit_vector(F.col(vec_col)).alias("u"),
-        lsh_bucket(F.col(vec_col), n_planes, dims).alias("b"))
-    # bound hot buckets BEFORE the groupBy ships them to Python: the
-    # row_number window caps the shuffle and the Arrow transfer (a
-    # .head() inside per_bucket would receive the full degenerate bucket
-    # first — unbounded transfer). Window + applyInPandas share the same
-    # hash partitioning on `b`, so the cap costs a sort, not a shuffle.
-    from .dedup import _cap_buckets
-    base = _cap_buckets(base, ["b"], "id", max_bucket)
-
-    out_schema = "id_a string, id_b string, sim double"
+    # normalize once per row; the bucket comes from the RAW vector (the
+    # unit vector's sign bits, bit-identical to an external engine that
+    # sees only the raw floats — oracle parity)
+    base = (df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
+            .select(F.col(id_col).alias("id"),
+                    unit_vector(F.col(vec_col)).alias("u"),
+                    lsh_bucket(F.col(vec_col), n_planes, dims).alias("b")))
+    # bound hot buckets BEFORE the groupBy: the window shares the
+    # groupBy's hash partitioning on `b`, so the cap costs a sort, not a
+    # shuffle
+    base = _cap_buckets(base, ["b"], F.col("id").cast("string"), max_bucket)
+    schema = StructType([StructField("id_a", base.schema["id"].dataType),
+                         StructField("id_b", base.schema["id"].dataType),
+                         StructField("sim", DoubleType())])
+    # the kernel keeps a margin below the threshold; rounding and the
+    # threshold itself are Spark's, as in the oracles
+    floor = threshold - 10 ** -decimals
 
     @worker_kernel
     def per_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy()
-        m = np.vstack(pdf["u"].to_numpy())          # (n, dims) unit rows
-        sims = m @ m.T                              # one gemm
-        iu = np.triu_indices(len(ids), k=1)
-        s = np.round(sims[iu], decimals)
-        keep = s >= threshold
-        return pd.DataFrame({"id_a": ids[iu[0][keep]],
-                             "id_b": ids[iu[1][keep]],
-                             "sim": s[keep]})
+        a, b, sim = cosine_pair_blocks(ids, np.vstack(pdf["u"].to_numpy()),
+                                       floor)
+        return pd.DataFrame({"id_a": ids[a], "id_b": ids[b], "sim": sim})
 
-    pairs = base.groupBy("b").applyInPandas(per_bucket, out_schema)
-    # id_a/id_b order within numpy triu follows sorted ids already
-    return pairs.select(
-        F.least("id_a", "id_b").alias("id_a"),
-        F.greatest("id_a", "id_b").alias("id_b"),
-        "sim").distinct()
+    return (base.groupBy("b").applyInPandas(per_bucket, schema)
+            .select("id_a", "id_b", F.round("sim", decimals).alias("sim"))
+            .where(F.col("sim") >= threshold)
+            .distinct())
 
 
 # above this many centroids the unrolled argmin expression (k branches

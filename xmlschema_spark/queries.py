@@ -1064,8 +1064,9 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
   SELECT id_a, id_b, sim FROM pairs WHERE sim >= 0.3
 """)
 def embedding_near_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-blocked near-dup pairs (the 100TB path: bucket join instead of
-    cross join). Fully oracle-checked: md5-portable hyperplanes let
+    """LSH-blocked near-dup pairs (the 100TB path: one BLAS gemm per
+    bucket instead of a cross join; native bigint ids, so pairs are in
+    numeric order). Fully oracle-checked: md5-portable hyperplanes let
     DuckDB reproduce the exact bucket blocking, i.e. the brute result
     RESTRICTED TO SHARED BUCKETS — recall<1 vs brute is by design, but
     the blocked result itself is deterministic and exact."""
@@ -1314,24 +1315,22 @@ def ngram_jaccard_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
   SELECT id_a, id_b, sim FROM pairs WHERE sim >= 0.3
 """)
 def embedding_near_dups_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-bucket BLAS-matmul near-dups (applyInPandas) — the 100TB
-    compute path for embedding dedup. Fully oracle-checked against the
-    same bucket-restricted exact SQL as the HOF path (md5-portable
-    planes), plus the vectorized==HOF equivalence pytest. Residual
-    rounding caveat: numpy's round is half-even vs ROUND's half-away;
-    a pair whose cosine lands exactly on a 0.00005 boundary could
-    diverge — none do at any tested SF, and the pairs themselves are
-    rounding-independent."""
-    from .operators.similarity import cosine_near_dup_pairs_vectorized
+    """The LSH near-dup core (cosine_near_dup_pairs: one BLAS gemm per
+    bucket, rounded in Spark) over a fanned-out scan with STRING ids, so
+    pairs are in lexicographic order. Oracle: the same bucket-restricted
+    exact SQL as embedding_near_dups_lsh with a VARCHAR id comparison;
+    tests/test_pipeline_ops.py checks the core against the brute path
+    for both id types."""
+    from .operators.similarity import cosine_near_dup_pairs
     # fan=True: the per-row unit_vector/lsh_bucket HOFs run map-side —
     # a single-row-group embeddings file serializes them (guide §2.6).
     # dims probed from the RAW scan (one-row parquet read); probing the
     # fanned frame would run the whole repartition shuffle for one row.
     raw = _load(spark, sf_dir, "embeddings")
     dims = len(raw.select("embedding").first()[0])
-    return cosine_near_dup_pairs_vectorized(_fan_out(raw), "embedding",
-                                            "vec_id", threshold=0.3,
-                                            n_planes=4, dims=dims)
+    e = _fan_out(raw).withColumn("vec_id", F.col("vec_id").cast("string"))
+    return cosine_near_dup_pairs(e, "embedding", "vec_id", threshold=0.3,
+                                 n_planes=4, dims=dims)
 
 
 # full DuckDB replication of the IVF pipeline: deterministic seeds
@@ -2406,8 +2405,8 @@ def gyear_facet_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE transitive closure of the near-dup graph (LSH candidates
     verified at jaccard >= 0.5): (member, cluster) with cluster = min
-    member id per connected component, via iterative min-label
-    propagation (operators/dedup.dup_clusters). The oracle computes the
+    member id per connected component, via large-star/small-star edge
+    rewriting (operators/dedup.dup_clusters). The oracle computes the
     same components with a recursive CTE — full pipeline parity from
     raw text to cluster labels."""
     from .operators.dedup import dup_clusters, lsh_bucket_pairs, ngram_jaccard
@@ -3060,19 +3059,9 @@ def decode_unordered_documents(spark: SparkSession,
 @register("dup_clusters_star_documents", ORACLES["dup_clusters_documents"])
 def dup_clusters_star_documents(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    """Same component labels as dup_clusters_documents, computed by the
-    alternating large-star/small-star edge-rewriting variant
-    (operators/dedup.dup_clusters_star — the 10^12-edge contraction
-    path). Identical oracle: both algorithms must produce the same
-    (member, cluster=component-min) map."""
-    from .operators.dedup import (dup_clusters_star, lsh_bucket_pairs,
-                                  ngram_jaccard)
-    d = _load(spark, sf_dir, "documents", fan=True) \
-        .withColumn("doc_id", F.col("doc_id").cast("string"))
-    cand = lsh_bucket_pairs(d, "text", "doc_id", n_hashes=4, band_size=2)
-    verified = ngram_jaccard(d, "text", "doc_id", cand, threshold=0.5) \
-        .select("id_a", "id_b")
-    return dup_clusters_star(verified)
+    """dup_clusters_documents under its second registered name: the
+    same pipeline, operator (operators/dedup.dup_clusters) and oracle."""
+    return dup_clusters_documents(spark, sf_dir)
 
 
 @register("decode_abdera_documents", """
