@@ -36,11 +36,11 @@ OPS = ["lsh", "simhash", "hamming"]
 
 @pytest.mark.parametrize("op", OPS)
 def test_banded_plan_one_bucket_shuffle_no_join(spark, op):
-    """The scale property of the whole family: the window cap reuses the
-    bucket groupBy's hash partitioning, so the plan holds exactly the
-    bucket Exchange plus the final distinct's, never a Join, and the
-    cap runs map-side too (WindowGroupLimit Partial below the bucket
-    Exchange, Final above it)."""
+    """The scale property of the whole family: the window cap and the
+    pair kernel share the bucket Exchange's hash partitioning, so the
+    plan holds exactly the bucket Exchange plus the final distinct's,
+    never a Join, and the cap runs map-side too (WindowGroupLimit
+    Partial below the bucket Exchange, Final above it)."""
     p = _run(spark, op, _same_rows(op, 4)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in p, p
@@ -52,18 +52,19 @@ def test_banded_plan_one_bucket_shuffle_no_join(spark, op):
     assert len(wgl) == 2, p
     assert "Partial" in lines[max(wgl)] and max(wgl) > bucket, p
     assert "Final" in lines[min(wgl)] and min(wgl) < bucket, p
-    if op == "lsh":
-        return
-    # the Hamming verify runs in the member array, before any pair row:
-    # a filter() inside the pair Generate, no Filter on hamming above it
-    gen = next(i for i, s in enumerate(lines)
-               if "Generate" in s and "flatten(transform(" in s)
-    pair_gen = lines[gen]
-    assert "filter(slice(" in pair_gen, p
-    pred = pair_gen[pair_gen.index("filter(slice("):
-                    pair_gen.index(", lambdafunction(struct(")]
-    assert "bit_count(" in pred, p
-    assert not [s for s in lines[:gen] if "Filter" in s and "hamming" in s], p
+    # the pairs come from one Arrow kernel over the window's output: no
+    # member-array aggregate, no pair Generate above the bucket Exchange
+    window = next(i for i, s in enumerate(lines) if "Window [" in s)
+    kernels = [i for i, s in enumerate(lines) if "MapInArrow" in s]
+    assert len([i for i in kernels if i < window]) == 1, p
+    assert "ObjectHashAggregate" not in p and "collect_list" not in p, p
+    assert not [s for s in lines[:bucket] if "Generate" in s], p
+    # the kernel's (band, key, doc) order is the window's own sort: the
+    # only Sorts are the two under the WindowGroupLimits
+    sorts = [i for i, s in enumerate(lines) if "Sort [" in s]
+    assert sorts == [i + 1 for i in sorted(wgl)], p
+    # the Hamming verify runs in the kernel, before any pair row
+    assert not [s for s in lines if "Filter" in s and "hamming" in s], p
 
 
 @pytest.mark.parametrize("op", OPS)
@@ -182,3 +183,91 @@ def test_hamming_near_dups_matches_brute_force(spark, bands, max_hamming):
                max_hamming=max_hamming).collect()
     assert len(got) == len(want)
     assert {tuple(r) for r in got} == want
+
+
+def test_simhash_near_dups_matches_brute_force(spark):
+    """simhash_near_dups against all pairs of the same simhash48 values
+    within the 4-band recall bound: planted texts with 1..8 words
+    replaced, random texts, and two NULL texts (hash 0, so they pair at
+    distance 0, as the oracles' hash contract says)."""
+    from xmlschema_spark.operators.text import simhash48_fast
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(300)]
+    texts = []
+    for _ in range(8):
+        base = [rng.choice(vocab) for _ in range(60)]
+        texts.append(" ".join(base))
+        for e in range(1, 9):
+            v = list(base)
+            for p in rng.sample(range(60), e):
+                v[p] = rng.choice(vocab)
+            texts.append(" ".join(v))
+    texts += [" ".join(rng.choice(vocab) for _ in range(30))
+              for _ in range(100)]
+    texts += [None, None]
+    df = spark.createDataFrame([(f"d{i:04d}", t) for i, t in enumerate(texts)],
+                               "doc string, text string")
+    hashes = [(r.doc, r.sh48)
+              for r in simhash48_fast(df, "text", "doc").collect()]
+    want = {(a, b, bin(ha ^ hb).count("1"))
+            for a, ha in hashes for b, hb in hashes
+            if a < b and bin(ha ^ hb).count("1") <= 3}
+    assert {d for *_, d in want} == {0, 1, 2, 3}
+    got = simhash_near_dups(df, "text", "doc").collect()
+    assert len(got) == len(want)
+    assert {tuple(r) for r in got} == want
+
+
+@pytest.mark.parametrize("bands", [1, 8])
+def test_null_hashes_never_pair(spark, bands):
+    """A NULL hash has no distance to anything: its doc never pairs, not
+    even with another NULL-hash doc (the parent verify's bit_count(NULL)
+    was NULL, so never true)."""
+    rows = [("a", None), ("b", None), ("c", 5), ("d", 5), ("e", None)]
+    got = _run(spark, "hamming", rows, bands=bands, max_hamming=0).collect()
+    assert [tuple(r) for r in got] == [("c", "d", 0)]
+
+
+def _hot_bucket_rows(op):
+    """Twelve identical docs h00..h11 (one 12-member bucket per band)
+    among planted near-dups and random singletons."""
+    if op == "hamming":
+        hot = [(f"h{i:02d}", 0x5DEECE66D) for i in range(12)]
+        rest = [(d, h - (1 << 64) if h >> 63 else h)
+                for d, h in _planted_hashes(n_clusters=3, n_random=40)]
+        return hot + rest
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(200)]
+    rest = []
+    for c in range(4):
+        base = [rng.choice(words) for _ in range(12)]
+        for e in range(4):
+            v = list(base)
+            v[rng.randrange(12)] = rng.choice(words)
+            rest.append((f"c{c}{e}", " ".join(v if e else base)))
+    rest += [(f"r{i:02d}", " ".join(rng.choice(words) for _ in range(8)))
+             for i in range(30)]
+    return [(f"h{i:02d}", SPAM) for i in range(12)] + rest
+
+
+@pytest.mark.parametrize("op", OPS)
+def test_pairs_independent_of_arrow_batch_size(spark, op):
+    """The pair kernel sees each partition as Arrow batches; a bucket cut
+    by a batch boundary is carried into the next batch. With 3 rows per
+    batch the 12-member bucket spans at least 4 batches, and every pair
+    set equals the one at the default batch size."""
+    from itertools import combinations
+    rows = _hot_bucket_rows(op)
+    want = {tuple(r) for r in _run(spark, op, rows).collect()}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = {tuple(r) for r in _run(spark, op, rows).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    hot = sorted(d for d, _ in rows[:12])
+    assert {(a, b) for a, b, *_ in got
+            if a in hot and b in hot} == set(combinations(hot, 2))
+    assert len(got) > 66

@@ -9,24 +9,29 @@ Scale notes (the whole point of these shapes):
 - near-dup candidates: lsh_bucket_pairs (md5 band keys over a MinHash
   signature computed by one mapInArrow pass), simhash_near_dups and
   hamming_near_dups (Hamming slices of a 48- or 64-bit hash, verified by
-  bit_count(xor)) all run ONE banded core, _banded_pairs: explode each
+  popcount(xor)) all run ONE banded core, _banded_pairs: explode each
   doc once per band, one bucket shuffle that first caps hot buckets to
   their lexicographically-first max_bucket members (a row_number()
-  window, so a degenerate boilerplate bucket never reaches the
-  collect_list buffer), then pairs generated inside each bucket's member
-  array and a final distinct. The Hamming verify runs in that member
-  array too: a member pair beyond max_hamming is dropped before any pair
-  row exists. Never an all-pairs self-join.
+  window, so a degenerate boilerplate bucket never reaches the pair
+  kernel), then one mapInArrow kernel that walks each bucket's sorted
+  run and enumerates its pairs in bounded row blocks
+  (banded_pair_blocks), and a final distinct. The Hamming verify runs
+  in that kernel too: a pair beyond max_hamming is dropped before any
+  pair row exists. Never an all-pairs self-join.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import sys
 import zlib
 
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .text import (fingerprint, minhash_signatures, shingles,
                    simhash48_fast)
@@ -50,54 +55,184 @@ def _cap_buckets(df: DataFrame, keys: list[str], order_col,
                  max_bucket: int) -> DataFrame:
     """Keep the first max_bucket rows per bucket, ordered by order_col —
     (a column name or a Column expression) — deterministic at any
-    parallelism, and BOUNDED BEFORE any
-    collect_list/applyInPandas materializes the bucket. The window's
-    hash partitioning is reused by a following groupBy on the same keys
-    (no extra Exchange — asserted in tests/test_banded_near_dups.py)."""
+    parallelism, and BOUNDED BEFORE a Python kernel (the banded pair
+    mapInArrow, the cosine applyInPandas) sees the bucket. The window's
+    hash partitioning and sort are reused by what follows on the same
+    keys (no extra Exchange or Sort — asserted in
+    tests/test_banded_near_dups.py)."""
     w = Window.partitionBy(*keys).orderBy(order_col)
     return (df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= max_bucket).drop("_rn"))
 
 
+# The banded pair kernel. This module pickles by value, so the Python
+# workers run it without importing the package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+# one block of the kernel enumerates at most about this many candidate
+# pairs, whatever the bucket size
+_BLOCK_PAIRS = 1 << 20
+
+
+def _popcount16() -> np.ndarray:
+    """Set bits of every 16-bit value, as a 2^16-entry uint8 table."""
+    v = np.arange(1 << 16, dtype=">u2").view(np.uint8)
+    return np.unpackbits(v).reshape(-1, 16).sum(1, dtype=np.uint8)
+
+
+def banded_pair_blocks(keys: np.ndarray, sh: np.ndarray | None = None,
+                       max_hamming: int = 64, table: np.ndarray | None = None):
+    """The candidate pairs of sorted bucket runs: adjacent rows with
+    equal `keys` form one bucket, in doc order. Returns index arrays
+    (a, b) of every pair a < b inside a bucket and, given the 64-bit
+    hashes `sh`, keeps only the pairs with popcount(sh[a] ^ sh[b]) <=
+    max_hamming and returns those distances (int32) as the third array;
+    without `sh` every pair is kept and the third value is None. Pairs
+    are enumerated in row blocks of about _BLOCK_PAIRS candidates, so
+    memory is O(rows + pairs kept), never O(bucket^2). `table` is
+    _popcount16(), built here when not passed."""
+    n = len(keys)
+    if sh is not None:
+        sh = np.ascontiguousarray(sh).view(np.uint64)
+        if table is None:
+            table = _popcount16()
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    ends = np.repeat(np.r_[starts[1:], n], np.diff(np.r_[starts, n]))
+    rows = np.arange(n)
+    partners = ends - rows - 1
+    before = np.cumsum(partners) - partners     # pairs of earlier rows
+    none = np.empty(0, np.intp)
+    a_out, b_out, d_out = [none], [none], [np.empty(0, np.int32)]
+    r0 = 0
+    while r0 < n:
+        r1 = max(r0 + 1, int(np.searchsorted(
+            before, before[r0] + _BLOCK_PAIRS, side="left")))
+        c = partners[r0:r1]
+        # pair k of row r pairs it with row r + 1 + (k - before[r])
+        b = np.arange(before[r0], before[r1 - 1] + c[-1])
+        b += np.repeat(rows[r0:r1] + 1 - before[r0:r1], c)
+        if sh is None:
+            a = np.repeat(rows[r0:r1], c)
+        else:
+            x = np.repeat(sh[r0:r1], c)
+            x ^= sh[b]
+            # popcount by 16-bit table lookups. Half the hash first: its
+            # count is a lower bound that already rules out nearly every
+            # pair, so the other half is counted only for the rest
+            q = x.view(np.uint16).reshape(-1, 4)
+            d = np.take(table, q[:, 0])
+            d += np.take(table, q[:, 1])
+            k = np.flatnonzero(d <= max_hamming)
+            d = d[k]
+            d += np.take(table, q[k, 2])
+            d += np.take(table, q[k, 3])
+            keep = d <= max_hamming
+            k, d = k[keep], d[keep]
+            d_out.append(d.astype(np.int32))
+            b = b[k]
+            a = r0 + np.searchsorted(before[r0:r1], k + before[r0],
+                                     side="right") - 1
+        a_out.append(a)
+        b_out.append(b)
+        r0 = r1
+    return (np.concatenate(a_out), np.concatenate(b_out),
+            None if sh is None else np.concatenate(d_out))
+
+
+def _bucket_runs(rows) -> np.ndarray:
+    """Run labels of an Arrow batch sorted by (band, key): equal labels
+    for the rows of one bucket."""
+    import pyarrow.compute as pc
+    n = rows.num_rows
+    new = pc.or_(*(pc.not_equal(rows[c].slice(1), rows[c].slice(0, n - 1))
+                   for c in ("band", "key")))
+    return np.r_[0, np.cumsum(new.to_numpy(zero_copy_only=False))]
+
+
+def _last_bucket(batch) -> tuple:
+    """(band, key) of an Arrow batch's last row."""
+    return tuple(batch[c][batch.num_rows - 1].as_py() for c in ("band", "key"))
+
+
+def _concat_batches(batches: list):
+    """One Arrow record batch holding the rows of `batches` in order."""
+    import pyarrow as pa
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
 def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
-                  carry: tuple = (), keep: str | None = None,
-                  verify: str | None = None) -> DataFrame:
-    """The one banded near-dup pipeline: ordered pairs (id_a < id_b
-    [, verify]) of `doc`s that share a bucket in a band and pass `keep`,
-    one row per shared band; callers end with the distinct.
+                  max_hamming: int | None = None) -> DataFrame:
+    """The one banded near-dup pipeline: pairs (id_a, id_b) of `doc`s
+    that share a bucket in a band, id_a before id_b in doc order, one row
+    per shared band; callers end with the distinct. Given max_hamming,
+    df also holds the 64-bit hash `sh`, a pair is kept only when
+    popcount(sh_a ^ sh_b) <= max_hamming, and that distance is its
+    `hamming` (int); rows with a NULL hash never pair.
 
     `keys[b]` is band b's bucket key, a Column over df. Each doc is
-    exploded once per band into (doc, carry..., band, key); ONE shuffle
-    on (band, key) feeds both the _cap_buckets window and the
-    collect_list aggregate, so a hot bucket is cut to its first
-    max_bucket docs before any buffer holds it. Singleton buckets die in
-    the HAVING, and pairs are generated inside the sorted member array:
-    never a self-join. `keep` and `verify` are SQL over the two members
-    `a` and `b` (structs of doc and `carry`): `keep` is a predicate
-    checked in the member array, so a pair it rejects never becomes a
-    struct or a row, and `verify` is an extra output field, e.g. a
-    Hamming distance. With the callers' distinct the plan has exactly
-    two Exchanges (pinned by tests/test_banded_near_dups.py)."""
+    exploded once per band into (doc, [sh,] band, key); ONE shuffle on
+    (band, key) feeds the _cap_buckets window, so a hot bucket is cut to
+    its first max_bucket docs, and the window's (band, key, doc) order
+    hands each bucket to one mapInArrow kernel as a contiguous run. The
+    kernel carries a bucket split across Arrow batches into the next
+    batch and enumerates and verifies its pairs with banded_pair_blocks:
+    never a self-join, never a materialized member array. With the
+    callers' distinct the plan has exactly two Exchanges (pinned by
+    tests/test_banded_near_dups.py)."""
+    from ..distribute import worker_kernel
+    hamming = max_hamming is not None
+    carry = ["sh"] if hamming else []
+    live = F.col("doc").isNotNull()       # pairs satisfy id_a < id_b
+    if hamming:
+        live &= F.col("sh").isNotNull()
     bands = F.array(*(F.struct(F.lit(b).alias("band"), k.alias("key"))
                       for b, k in enumerate(keys)))
-    # a NULL doc is never paired: pairs satisfy id_a < id_b
-    blocks = (df.where(F.col("doc").isNotNull())
+    blocks = (df.where(live)
               .select("doc", *carry, F.explode(bands).alias("bb"))
               .select("doc", *carry, "bb.band", "bb.key"))
-    capped = _cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
-    grouped = (capped.groupBy("band", "key")
-               .agg(F.array_sort(F.collect_list(F.struct("doc", *carry)))
-                    .alias("ms"),
-                    F.count(F.lit(1)).alias("bn"))
-               .where(F.col("bn") > 1))
-    rest = "slice(ms, i + 2, size(ms))"
-    if keep:
-        rest = f"filter({rest}, b -> {keep})"
-    fields = "a.doc AS id_a, b.doc AS id_b" + (f", {verify}" if verify else "")
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        f"transform({rest}, b -> struct({fields}))))")
-    return grouped.select(F.explode(pairs_arr).alias("p")).select("p.*")
+    capped = (_cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
+              .sortWithinPartitions("band", "key", "doc"))
+    doc_type = capped.schema["doc"].dataType
+    fields = [StructField("id_a", doc_type), StructField("id_b", doc_type)]
+    if hamming:
+        fields.append(StructField("hamming", IntegerType()))
+    names = [f.name for f in fields]
+
+    @worker_kernel
+    def run(batches):
+        import pyarrow as pa
+        table = _popcount16() if hamming else None
+
+        def pairs(rows, runs):
+            a, b, d = banded_pair_blocks(
+                runs, rows["sh"].to_numpy() if hamming else None,
+                max_hamming, table)
+            cols = [rows["doc"].take(a), rows["doc"].take(b)]
+            if hamming:
+                cols.append(pa.array(d, pa.int32()))
+            return pa.record_batch(cols, names=names)
+
+        # batches whose last bucket may continue in the next batch
+        pending = []
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            if pending and _last_bucket(batch) == _last_bucket(pending[-1]):
+                pending.append(batch)    # all of it is the open bucket
+                continue
+            rows = _concat_batches(pending + [batch])
+            runs = _bucket_runs(rows)
+            last = int(np.searchsorted(runs, runs[-1]))
+            if last:
+                yield pairs(rows.slice(0, last), runs[:last])
+            pending = [rows.slice(last)]
+        if pending:
+            rows = _concat_batches(pending)
+            yield pairs(rows, np.zeros(rows.num_rows, np.intp))
+
+    return capped.mapInArrow(run, StructType(fields))
 
 
 def lsh_bucket_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -141,8 +276,8 @@ def _hamming_pairs(h: DataFrame, n_bits: int, bands: int,
                    max_hamming: int, max_bucket: int) -> DataFrame:
     """Banded-Hamming near-dups over h = (doc, sh bigint): block on the
     `bands` equal slices of sh's low n_bits, then verify
-    bit_count(a.sh ^ b.sh) <= max_hamming exactly inside each bucket's
-    member array, before any pair row exists.
+    popcount(sh_a ^ sh_b) <= max_hamming exactly in the bucket kernel of
+    _banded_pairs, before any pair row exists.
 
     Recall (pigeonhole): a pair within distance d shares at least one
     slice iff d <= bands-1, so blocking is exact up to there; beyond it
@@ -165,10 +300,7 @@ def _hamming_pairs(h: DataFrame, n_bits: int, bands: int,
     keys = [F.shiftrightunsigned(F.col("sh"), b * width) for b in range(bands)]
     if width < 64:
         keys = [k.bitwiseAND(F.lit((1 << width) - 1)) for k in keys]
-    dist = "bit_count(a.sh ^ b.sh)"
-    return _banded_pairs(h, keys, max_bucket, carry=("sh",),
-                         keep=f"{dist} <= {max_hamming}",
-                         verify=f"{dist} AS hamming")
+    return _banded_pairs(h, keys, max_bucket, max_hamming)
 
 
 def simhash_near_dups(df: DataFrame, text_col: str, id_col: str,

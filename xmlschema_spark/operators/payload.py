@@ -93,10 +93,12 @@ def _pa_schema():
 
 def _expected_id_index(image_id: str) -> Optional[int]:
     """Row index recovered from the fixture id pattern img-NNN...; None
-    when ids are not fixture-shaped (pixel parity then skipped)."""
+    when ids are not fixture-shaped (pixel parity then skipped). The
+    tail must be decimal digits (any script), exactly what int() reads:
+    isdigit() also admits superscripts such as '²', which int() rejects."""
     if image_id and image_id.startswith("img-"):
         tail = image_id[4:]
-        if tail.isdigit():
+        if tail.isdecimal():
             return int(tail)
     return None
 

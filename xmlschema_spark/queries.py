@@ -2604,7 +2604,7 @@ def hamming_near_dups_documents(spark: SparkSession,
     The bucket cap (8192) is above the whole documents table at every
     scale factor the oracle runs (5000 rows at sf0.1, whose SimHash
     bands put up to 1338 docs in one bucket), so it never cuts a true
-    pair there; it still bounds a bucket's member array on larger
+    pair there; it still bounds a bucket's candidate pairs on larger
     inputs."""
     from .operators.dedup import hamming_near_dups
     from .operators.text import simhash64_fast
