@@ -168,17 +168,23 @@ def _planted_hashes(seed=7, n_clusters=8, n_random=150):
                          [(1, 0), (2, 1), (4, 3), (8, 0), (8, 7)])
 def test_hamming_near_dups_matches_brute_force(spark, bands, max_hamming):
     """Within the pigeonhole recall bound and with every bucket under
-    max_bucket, the banded pairs are exactly the all-pairs answer."""
+    max_bucket, the banded pairs are exactly the all-pairs answer. Two
+    doc ids are listed twice (once with their own hash, once with
+    another doc's) and two hashes are NULL: a doc never pairs with
+    itself and a NULL hash never pairs."""
     docs = _planted_hashes()
+    docs += [docs[0], (docs[1][0], docs[155][1]), ("n0", None), ("n1", None)]
     width = 64 // bands
     sizes = Counter((b, h >> (b * width) & ((1 << width) - 1))
-                    for _, h in docs for b in range(bands))
+                    for _, h in docs if h is not None for b in range(bands))
     assert max(sizes.values()) < 64            # no bucket is capped
+    live = [(d, h) for d, h in docs if h is not None]
     want = {(a, b, bin(ha ^ hb).count("1"))
-            for a, ha in docs for b, hb in docs
+            for a, ha in live for b, hb in live
             if a < b and bin(ha ^ hb).count("1") <= max_hamming}
     assert {d for *_, d in want} == set(range(max_hamming + 1))
-    signed = [(d, h - (1 << 64) if h >> 63 else h) for d, h in docs]
+    signed = [(d, h - (1 << 64) if h is not None and h >> 63 else h)
+              for d, h in docs]
     got = _run(spark, "hamming", signed, bands=bands,
                max_hamming=max_hamming).collect()
     assert len(got) == len(want)
@@ -188,8 +194,10 @@ def test_hamming_near_dups_matches_brute_force(spark, bands, max_hamming):
 def test_simhash_near_dups_matches_brute_force(spark):
     """simhash_near_dups against all pairs of the same simhash48 values
     within the 4-band recall bound: planted texts with 1..8 words
-    replaced, random texts, and two NULL texts (hash 0, so they pair at
-    distance 0, as the oracles' hash contract says)."""
+    replaced, random texts, two NULL texts (hash 0, so they pair at
+    distance 0, as the oracles' hash contract says), texts of fewer than
+    3 tokens, and doc ids listed twice, which never pair with
+    themselves."""
     from xmlschema_spark.operators.text import simhash48_fast
     rng = random.Random(11)
     vocab = [f"w{i}" for i in range(300)]
@@ -204,9 +212,10 @@ def test_simhash_near_dups_matches_brute_force(spark):
             texts.append(" ".join(v))
     texts += [" ".join(rng.choice(vocab) for _ in range(30))
               for _ in range(100)]
-    texts += [None, None]
-    df = spark.createDataFrame([(f"d{i:04d}", t) for i, t in enumerate(texts)],
-                               "doc string, text string")
+    texts += [None, None, "w1 w2", "w1 w2", "w7"]
+    rows = [(f"d{i:04d}", t) for i, t in enumerate(texts)]
+    rows += [rows[0], (rows[1][0], texts[2]), (rows[-1][0], None)]
+    df = spark.createDataFrame(rows, "doc string, text string")
     hashes = [(r.doc, r.sh48)
               for r in simhash48_fast(df, "text", "doc").collect()]
     want = {(a, b, bin(ha ^ hb).count("1"))
@@ -214,6 +223,40 @@ def test_simhash_near_dups_matches_brute_force(spark):
             if a < b and bin(ha ^ hb).count("1") <= 3}
     assert {d for *_, d in want} == {0, 1, 2, 3}
     got = simhash_near_dups(df, "text", "doc").collect()
+    assert len(got) == len(want)
+    assert {tuple(r) for r in got} == want
+
+
+def test_lsh_bucket_pairs_matches_brute_force(spark):
+    """lsh_bucket_pairs against all pairs whose MinHash signatures agree
+    on every hash of some band: near-copies of a few texts, random
+    texts, NULL texts and texts of fewer than 3 tokens (NULL signature:
+    they never pair, not even with each other), and doc ids listed
+    twice, which never pair with themselves."""
+    from xmlschema_spark.operators.text import minhash_signatures
+    rng = random.Random(3)
+    vocab = [f"w{i}" for i in range(40)]
+    texts = []
+    for _ in range(6):
+        base = [rng.choice(vocab) for _ in range(8)]
+        for e in range(4):
+            v = list(base)
+            for p in rng.sample(range(8), e):
+                v[p] = rng.choice(vocab)
+            texts.append(" ".join(v))
+    texts += [" ".join(rng.choice(vocab) for _ in range(6))
+              for _ in range(30)]
+    texts += [None, None, "x y", "x y", "p"]
+    rows = [(f"d{i:04d}", t) for i, t in enumerate(texts)]
+    rows += [rows[0], (rows[1][0], texts[2]), (rows[-1][0], None)]
+    df = spark.createDataFrame(rows, "doc string, text string")
+    sigs = [(r.doc, tuple(r[f"h{i}"] for i in range(4)))
+            for r in minhash_signatures(df, "text", "doc", 4).collect()]
+    want = {(a, b) for a, sa in sigs for b, sb in sigs
+            if a < b and any(None not in sa[i:i + 2] and sa[i:i + 2]
+                             == sb[i:i + 2] for i in (0, 2))}
+    assert want
+    got = lsh_bucket_pairs(df, "text", "doc").collect()
     assert len(got) == len(want)
     assert {tuple(r) for r in got} == want
 

@@ -69,6 +69,31 @@ def test_pairs_match_combinations(max_hamming):
     assert seen
 
 
+@pytest.mark.parametrize("max_hamming", [None, 0, 3, 7])
+def test_a_doc_listed_twice_never_pairs_with_itself(max_hamming):
+    """Given doc labels, the pairs are the reference's minus those whose
+    two rows carry one doc id."""
+    rng = random.Random(7 if max_hamming is None else max_hamming)
+    dropped = 0
+    for _ in range(60):
+        keys, docs, hashes = _random_runs(rng)
+        labels = np.unique(np.array(docs, dtype=object),
+                           return_inverse=True)[1] if docs else None
+        want = _reference(keys, docs, hashes, max_hamming)
+        kept = [p for p in want if p[0] != p[1]]
+        dropped += len(want) - len(kept)
+        if max_hamming is None:
+            a, b, d = banded_pair_blocks(keys, docs=labels)
+            d = [None] * len(a)
+        else:
+            a, b, d = banded_pair_blocks(keys, hashes, max_hamming,
+                                         docs=labels)
+            d = d.tolist()
+        assert sorted((docs[i], docs[j], x)
+                      for i, j, x in zip(a, b, d)) == kept
+    assert dropped
+
+
 @pytest.mark.parametrize("block", [1, 2, 7, 50])
 def test_row_blocks_split_buckets_anywhere(monkeypatch, block):
     """Blocks far smaller than a bucket cut it mid-run; the pairs are

@@ -176,3 +176,64 @@ def test_xsd_temporal_dtypes(spark):
     got = run_one(spark, ColumnSpec("v", "xsd:gYear"),
                   [("a", "2024"), ("b", "24")])
     assert got == {("b", "facet:pattern:v")}
+
+
+# An item or a union member compiles through the same facet compiler as
+# a column, so each facet gives it the verdict it gives a scalar value.
+# (case, item or member spec, value, kinds the scalar column reports)
+_NESTED_CASES = [
+    ("item-length", "item", ColumnSpec("v", "string", length=3), "ab",
+     {"length"}),
+    ("item-totalDigits-decimal", "item",
+     ColumnSpec("v", "decimal(10,2)", total_digits=2), "123.5",
+     {"totalDigits"}),
+    ("item-totalDigits-xsd-decimal", "item",
+     ColumnSpec("v", "xsd:decimal", total_digits=2), "123.5",
+     {"totalDigits"}),
+    ("item-collapse-pattern", "item",
+     ColumnSpec("v", "string", whitespace="collapse", pattern=["[a-z]+"]),
+     " ab ", set()),
+    ("item-union-of", "item", ColumnSpec("v", union_of=["int", "date"]),
+     "zz", {"union"}),
+    ("item-fixed", "item", ColumnSpec("v", "string", fixed="a"), "b",
+     {"fixed"}),
+    ("member-length", "member", ColumnSpec("v", "string", length=3), "ab",
+     {"length"}),
+    ("member-totalDigits", "member",
+     ColumnSpec("v", "int", total_digits=1), "12", {"totalDigits"}),
+    ("member-xsd-decimal-valid", "member", ColumnSpec("v", "xsd:decimal"),
+     "1.5", set()),
+    ("member-xsd-decimal-invalid", "member", ColumnSpec("v", "xsd:decimal"),
+     "1e2", {"pattern"}),
+    ("member-xsd-boolean-valid", "member", ColumnSpec("v", "xsd:boolean"),
+     "1", set()),
+    ("member-xsd-boolean-invalid", "member", ColumnSpec("v", "xsd:boolean"),
+     "yes", {"decode", "pattern"}),
+]
+
+
+@pytest.mark.parametrize("where,nested,value,scalar_kinds", [
+    c[1:] for c in _NESTED_CASES], ids=[c[0] for c in _NESTED_CASES])
+def test_item_and_member_facets_match_scalar(spark, where, nested, value,
+                                             scalar_kinds):
+    scalar = run_one(spark, nested, [("a", value)])
+    assert {c.split(":")[1] for _, c in scalar} == scalar_kinds
+    if where == "item":
+        got = run_one(spark, ColumnSpec("v", "array<string>", item=nested),
+                      [("a", [value])], "v array<string>")
+        assert got == {("a", f"facet:item:{k}:v") for k in scalar_kinds}
+    else:
+        got = run_one(spark, ColumnSpec("v", union_members=[nested]),
+                      [("a", value)])
+        assert got == ({("a", "facet:union:v")} if scalar_kinds else set())
+
+
+@pytest.mark.parametrize("where", ["item", "lexical_list", "member"])
+def test_assertion_on_item_or_member_raises_at_compile(spark, where):
+    nested = ColumnSpec("v", "int", assertion="value > 0")
+    cs = (ColumnSpec("v", "array<int>", item=nested) if where == "item"
+          else ColumnSpec("v", lexical_list=True, item=nested)
+          if where == "lexical_list"
+          else ColumnSpec("v", union_members=[nested]))
+    with pytest.raises(ValueError, match="assertion cannot apply"):
+        compile_plan(TableSpec(name="t", key_column="k", columns=[cs]))

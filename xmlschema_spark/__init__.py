@@ -9,7 +9,7 @@ per-partition lineage manifests, and training-data pipeline operators.
 """
 
 from .specs import (AssertSpec, ColumnSpec, ConditionalSpec,
-                    ContentModelSpec, DriftSpec, KeyrefSpec, OccursSpec,
+                    ContentModelSpec, KeyrefSpec, OccursSpec,
                     OpenContentSpec, ParticleSpec, PayloadSpec,
                     TableSpec, UniqueSpec)
 from .plans.compiler import ValidationPlan, compile_plan
@@ -22,7 +22,7 @@ from .sources.xsd_import import spec_from_xsd
 __version__ = "0.1.0"
 __all__ = [
     "AssertSpec", "ColumnSpec", "ConditionalSpec", "ContentModelSpec",
-    "DriftSpec", "OpenContentSpec", "ParticleSpec",
+    "OpenContentSpec", "ParticleSpec",
     "KeyrefSpec", "OccursSpec", "apply_defaults", "schema_violations",
     "PayloadSpec", "TableSpec", "UniqueSpec", "ValidationPlan",
     "compile_plan", "ValidationResult", "XmlSchemaSparkValidationError",

@@ -81,16 +81,21 @@ def _popcount16() -> np.ndarray:
 
 
 def banded_pair_blocks(keys: np.ndarray, sh: np.ndarray | None = None,
-                       max_hamming: int = 64, table: np.ndarray | None = None):
+                       max_hamming: int = 64, table: np.ndarray | None = None,
+                       docs: np.ndarray | None = None):
     """The candidate pairs of sorted bucket runs: adjacent rows with
     equal `keys` form one bucket, in doc order. Returns index arrays
     (a, b) of every pair a < b inside a bucket and, given the 64-bit
     hashes `sh`, keeps only the pairs with popcount(sh[a] ^ sh[b]) <=
     max_hamming and returns those distances (int32) as the third array;
-    without `sh` every pair is kept and the third value is None. Pairs
-    are enumerated in row blocks of about _BLOCK_PAIRS candidates, so
-    memory is O(rows + pairs kept), never O(bucket^2). `table` is
-    _popcount16(), built here when not passed."""
+    without `sh` every pair is kept and the third value is None. Given
+    `docs`, row labels that are equal exactly for rows of one doc id, a
+    pair of rows with equal labels is dropped: a doc id listed twice in
+    a bucket never pairs with itself, though each of its rows still
+    took one of the bucket's max_bucket slots. Pairs are enumerated in
+    row blocks of about _BLOCK_PAIRS candidates, so memory is O(rows +
+    pairs kept), never O(bucket^2). `table` is _popcount16(), built here
+    when not passed."""
     n = len(keys)
     if sh is not None:
         sh = np.ascontiguousarray(sh).view(np.uint64)
@@ -128,10 +133,16 @@ def banded_pair_blocks(keys: np.ndarray, sh: np.ndarray | None = None,
             d += np.take(table, q[k, 3])
             keep = d <= max_hamming
             k, d = k[keep], d[keep]
-            d_out.append(d.astype(np.int32))
             b = b[k]
             a = r0 + np.searchsorted(before[r0:r1], k + before[r0],
                                      side="right") - 1
+        if docs is not None:
+            k = np.flatnonzero(docs[a] != docs[b])
+            a, b = a[k], b[k]
+            if sh is not None:
+                d = d[k]
+        if sh is not None:
+            d_out.append(d.astype(np.int32))
         a_out.append(a)
         b_out.append(b)
         r0 = r1
@@ -147,6 +158,20 @@ def _bucket_runs(rows) -> np.ndarray:
     new = pc.or_(*(pc.not_equal(rows[c].slice(1), rows[c].slice(0, n - 1))
                    for c in ("band", "key")))
     return np.r_[0, np.cumsum(new.to_numpy(zero_copy_only=False))]
+
+
+def _doc_runs(rows, runs: np.ndarray) -> np.ndarray | None:
+    """Labels equal exactly for the rows of one doc id inside one
+    bucket of an Arrow batch in (band, key, doc) order, or None when no
+    bucket lists a doc id twice."""
+    import pyarrow.compute as pc
+    n = rows.num_rows
+    doc = rows["doc"]
+    same = pc.equal(doc.slice(1), doc.slice(0, n - 1)).to_numpy(
+        zero_copy_only=False) & (runs[1:] == runs[:-1])
+    if not same.any():
+        return None
+    return np.r_[0, np.cumsum(~same)]
 
 
 def _last_bucket(batch) -> tuple:
@@ -169,7 +194,8 @@ def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
     per shared band; callers end with the distinct. Given max_hamming,
     df also holds the 64-bit hash `sh`, a pair is kept only when
     popcount(sh_a ^ sh_b) <= max_hamming, and that distance is its
-    `hamming` (int); rows with a NULL hash never pair.
+    `hamming` (int); rows with a NULL hash never pair. A doc never
+    pairs with itself, and a NULL bucket key puts its row in no bucket.
 
     `keys[b]` is band b's bucket key, a Column over df. Each doc is
     exploded once per band into (doc, [sh,] band, key); ONE shuffle on
@@ -191,7 +217,8 @@ def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
                       for b, k in enumerate(keys)))
     blocks = (df.where(live)
               .select("doc", *carry, F.explode(bands).alias("bb"))
-              .select("doc", *carry, "bb.band", "bb.key"))
+              .select("doc", *carry, "bb.band", "bb.key")
+              .where(F.col("key").isNotNull()))
     capped = (_cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
               .sortWithinPartitions("band", "key", "doc"))
     doc_type = capped.schema["doc"].dataType
@@ -208,7 +235,7 @@ def _banded_pairs(df: DataFrame, keys: list, max_bucket: int,
         def pairs(rows, runs):
             a, b, d = banded_pair_blocks(
                 runs, rows["sh"].to_numpy() if hamming else None,
-                max_hamming, table)
+                max_hamming, table, _doc_runs(rows, runs))
             cols = [rows["doc"].take(a), rows["doc"].take(b)]
             if hamming:
                 cols.append(pa.array(d, pa.int32()))
@@ -246,9 +273,15 @@ def lsh_bucket_pairs(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(f"band_size must be a positive divisor of "
                          f"n_hashes={n_hashes}, got {band_size!r}")
     sigs = minhash_signatures(df, text_col, id_col, n_hashes)
-    keys = [F.md5(F.concat_ws("|", *(f"h{b * band_size + j}"
-                                     for j in range(band_size))))
-            for b in range(n_hashes // band_size)]
+    # concat, not concat_ws: a NULL signature (NULL text, or fewer than
+    # k tokens) keeps NULL band keys, which _banded_pairs drops, instead
+    # of sharing md5('|') with every other NULL signature
+    keys = []
+    for b in range(0, n_hashes, band_size):
+        parts = [F.col(f"h{b}")]
+        for i in range(b + 1, b + band_size):
+            parts += [F.lit("|"), F.col(f"h{i}")]
+        keys.append(F.md5(F.concat(*parts)))
     return _banded_pairs(sigs.withColumnRenamed(id_col, "doc"), keys,
                          max_bucket).distinct()
 

@@ -2,23 +2,16 @@
 
 The slow path done right: bytes never cross per-row Python calls from
 the JVM — Arrow moves whole columnar batches, and the Python side stays
-cache-resident. Three generations of this stage were measured:
-
-  mapInPandas, per-row numpy       51.9s / 2M rows @ local[32]
-  mapInArrow, per-row numpy        26.5s             (round 1)
-  mapInArrow, scratch-buffer math  this module       (round 2)
-
-Round-2 structure (profiled: 106us/row -> ~35us/row single-core, and —
-the part that matters for N->4N scaling on a shared-memory box — DRAM
-traffic per row drops from ~75KB to ~12KB):
+cache-resident. Profiling chose this design over per-row numpy in the
+same mapInArrow stage: ~35us/row instead of 106us/row single-core, and
+~12KB instead of ~75KB of DRAM traffic per row (the part that matters
+for N->4N scaling on a shared-memory box):
   * bytes are read as ZERO-COPY memoryview slices over the Arrow data
     buffer (no per-row bytes objects; zlib.decompress accepts buffers);
   * per-row Python is header unpack + zlib.decompress (the codec call is
     inherently per-image — ~16us/row of irreducible zlib CPU) + four
     numpy ufuncs over PREALLOCATED scratch buffers sized to the largest
-    row in the batch, so the parity math runs in L1/L2 cache instead of
-    allocating ~8 arrays per row (gen_pixels + psnr cost 68us/row and
-    ~60KB/row of DRAM churn in round 1);
+    row in the batch, so the parity math runs in L1/L2 cache;
   * the expected deterministic pattern is SYNTHESIZED by one uint8
     np.add.outer of two L1-resident scanline vectors (it is separable:
     base + 5y + 3x + 17c) + an 8-byte stamp — near-zero DRAM reads (a
@@ -26,11 +19,9 @@ traffic per row drops from ~75KB to ~12KB):
   * pixel parity needs only the integer SSE: exact-compare for lossless
     is SSE != 0, and PSNR < psnr_min is the exact algebra
     SSE/n > 255^2 * 10^(-psnr_min/10); SSE is computed int16-diff ->
-    int32-square -> int64-sum, all exact. A batched variant over
-    concatenated buffers was tried and REJECTED: np.add.reduceat(int32)
-    runs 19us/row and the concat arrays (int16+int32 temporaries) push
-    ~19 bytes/pixel through DRAM — on a memory-bandwidth-limited box
-    that is the anti-scaling shape.
+    int32-square -> int64-sum, all exact, one row at a time
+    (np.add.reduceat over concatenated rows runs 19us/row and pushes
+    ~19 bytes/pixel through DRAM).
 
 Column pruning matters at 100 TB: this stage is the ONLY one that reads
 the `bytes` column; every other stage's scan prunes it away (verified in

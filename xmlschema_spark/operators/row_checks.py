@@ -38,6 +38,13 @@ def _part_col(plan: ValidationPlan) -> Column:
     return F.lit(0).cast("bigint").alias("part_key")
 
 
+def with_item_folds(df: DataFrame, plan: ValidationPlan) -> DataFrame:
+    """df plus the plan's list item folds, which its checks read by
+    name; df itself when the plan has none."""
+    return df.select("*", *plan.item_folds.values()) if plan.item_folds \
+        else df
+
+
 def row_projections(plan: ValidationPlan, keys: list[RowCheck] = ()
                     ) -> tuple[tuple | None, tuple | None]:
     """(row_violations' two select lists, validate()'s row pass). They
@@ -102,7 +109,7 @@ def row_violations(df: DataFrame, plan: ValidationPlan,
             [], "row_key string, part_key bigint, constraint string, "
                 "reason string, value string, occurs bigint")
     exploded, flat = projection
-    return df.select(*exploded).select(*flat)
+    return with_item_folds(df, plan).select(*exploded).select(*flat)
 
 
 def row_valid_mask(df: DataFrame, plan: ValidationPlan) -> DataFrame:
@@ -112,7 +119,8 @@ def row_valid_mask(df: DataFrame, plan: ValidationPlan) -> DataFrame:
     ok = F.lit(True)
     for chk in plan.row_checks:
         ok = ok & F.coalesce(chk.valid, F.lit(False))
-    return df.withColumn("_row_valid", ok)
+    return (with_item_folds(df, plan).withColumn("_row_valid", ok)
+            .drop(*plan.item_folds))
 
 
 def violation_summary(df: DataFrame, plan: ValidationPlan) -> DataFrame:
@@ -126,7 +134,7 @@ def violation_summary(df: DataFrame, plan: ValidationPlan) -> DataFrame:
         .cast("bigint").alias(str(i))
         for i, chk in enumerate(plan.row_checks)
     ]
-    row = df.agg(*aggs)
+    row = with_item_folds(df, plan).agg(*aggs)
     pairs = F.array(*[
         F.struct(F.lit(chk.constraint).alias("constraint"),
                  F.col(str(i)).alias("n"))

@@ -78,12 +78,6 @@ def stopword_ratio(col: Column, lang: str = "en") -> Column:
     return F.when(n > 0, stopword_count(col, lang) / n).otherwise(0.0)
 
 
-def mean_token_len(col: Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(0.0)
-
-
 def quality_score(col: Column, lang: str = "en") -> Column:
     """Composite quality in [0,1]: length band + low punctuation +
     stopword presence (heuristics in the C4/Gopher tradition)."""

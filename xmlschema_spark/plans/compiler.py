@@ -21,6 +21,7 @@ absence is governed solely by nullable/required
 from __future__ import annotations
 
 import copy
+import operator
 import re
 import threading
 from dataclasses import dataclass, field
@@ -258,8 +259,6 @@ def _spec_known_columns(spec: TableSpec) -> set[str]:
         known.update(kr.columns)
     for oc in spec.occurs:
         known.update(oc.group_by)
-    if spec.drift:
-        known.update(spec.drift.columns)
     return known
 
 
@@ -361,6 +360,11 @@ class ValidationPlan:
     spec: TableSpec
     row_checks: list[RowCheck] = field(default_factory=list)
     normalizations: dict[str, Column] = field(default_factory=dict)
+    # list columns' item folds by column name (compiler._compile_list):
+    # a row pass adds them to the frame first (operators/row_checks.
+    # with_item_folds), so each list's items are folded once per row
+    item_folds: dict[str, Column] = field(default_factory=dict,
+                                          repr=False)
     # repeated-record children: (array column, compiled element plan) —
     # the runner explodes the array (narrow, shuffle-free) and runs the
     # element plan over it; size/occurs bounds live in row_checks
@@ -379,10 +383,6 @@ class ValidationPlan:
     identity: Optional[IdentityColumns] = field(default=None, repr=False)
     # verdicts_frame's Columns (runner.verdict_columns)
     verdicts: Optional[VerdictColumns] = field(default=None, repr=False)
-
-    @property
-    def constraint_ids(self) -> list[str]:
-        return [c.constraint for c in self.row_checks]
 
 
 def _lit(dtype: str, v) -> Column:
@@ -519,15 +519,40 @@ def _pattern_groups_ok(val_s: Column,
     return ok
 
 
-def compile_column(cs: ColumnSpec,
-                   namespaces: Optional[dict] = None
+def compile_column(cs: ColumnSpec, value: Column,
+                   namespaces: Optional[dict] = None,
+                   nested: bool = False,
+                   folds: Optional[dict[str, Column]] = None
                    ) -> tuple[Optional[Column], list[RowCheck]]:
-    """Compile one ColumnSpec -> (normalization expr or None, checks).
+    """Compile one ColumnSpec over the Column `value` -> (normalization
+    expr or None, checks). The one facet compiler: a table column
+    passes F.col(cs.name), a list item the lambda variable of
+    _compile_list's fold, a union member the union's value — the
+    reference runs items and members through the same normalize,
+    decode and facet pipeline as a plain value (simple_types.py:705-785,
+    991-1019, 1178-1211).
+
+    nested=True compiles a list item or a union member: checks are named
+    facet:item:<kind>:<cs.name>, no required check is made (a NULL item
+    is not checked, like a NULL column value), the base type's lexical
+    check is a decode check, and an assertion raises — its expression
+    names a table column, which an item or a member does not have.
 
     namespaces: the spec's prefix->URI map (TableSpec.namespaces) —
     only consulted by xsd:QName / xsd:NOTATION columns for prefix
-    binding and expanded-name enumeration."""
+    binding and expanded-name enumeration.
+
+    folds: where a list column's item fold goes (ValidationPlan.
+    item_folds); None keeps it inside the checks, as it must be for a
+    list inside a lambda."""
+    if cs.item is not None:
+        return _compile_list(cs, value, namespaces, nested, folds)
     _validate_column_spec(cs)
+    if nested and cs.assertion:
+        raise ValueError(
+            f"column '{cs.name}': an assertion cannot apply to a list "
+            "item or a union member — its expression reads table "
+            "columns, and an item or a member is not one")
     if cs.dtype == "xsd:NOTATION" and not cs.enum:
         # reference attributes.py:246-252 wording
         raise ValueError(
@@ -715,7 +740,8 @@ def compile_column(cs: ColumnSpec,
                                "min_inclusive": None, "min_exclusive": None,
                                "max_inclusive": None, "max_exclusive": None})
     checks: list[RowCheck] = []
-    raw = F.col(cs.name)
+    prefix = "facet:item:" if nested else "facet:"
+    raw = value
     norm = None
     col = raw
     if cs.whitespace and cs.whitespace != "preserve":
@@ -733,13 +759,13 @@ def compile_column(cs: ColumnSpec,
         ok = valid_if_present if typed_guard is None \
             else typed_guard.isNull() | valid_if_present
         checks.append(RowCheck(
-            constraint=f"facet:{kind}:{cs.name}",
+            constraint=f"{prefix}{kind}:{cs.name}",
             reason=reason,
             valid=~present | ok,
             value_col=val_s,
         ))
 
-    if not cs.nullable:
+    if not cs.nullable and not nested:
         # nested-field column: required only where the parent struct is
         # itself present — an absent optional record (minOccurs=0) makes
         # all its fields absent without violating (ColumnSpec.parent)
@@ -757,9 +783,14 @@ def compile_column(cs: ColumnSpec,
         # decodes AND passes that member's own facets/patterns
         # (simple_types.py:1180-1207). Tried in declaration order; the
         # whole disjunction is one codegen expression — no data movement.
-        ok = _member_predicate(col, val_s, cs.union_members[0])
-        for m in cs.union_members[1:]:
-            ok = ok | _member_predicate(col, val_s, m)
+        # A member matches when every check of its own compile holds.
+        ok = None
+        for m in cs.union_members:
+            mok = None
+            for chk in compile_column(m, col, namespaces, nested=True)[1]:
+                mok = chk.valid if mok is None else mok & chk.valid
+            mok = F.lit(True) if mok is None else mok
+            ok = mok if ok is None else ok | mok
         add("union",
             "value does not match any union member (with member facets) "
             f"{[m.dtype for m in cs.union_members]}", ok)
@@ -844,8 +875,10 @@ def compile_column(cs: ColumnSpec,
         # the base type's lexical space ANDs with any user patterns
         # (separate derivation step). Named facet:pattern when it is the
         # only pattern-like check (back-compat), facet:lexical when a
-        # user pattern coexists so constraint ids stay unique.
-        add("pattern" if not _pgroups else "lexical",
+        # user pattern coexists so constraint ids stay unique. An item's
+        # lexical check is its decode check (facet:item:decode).
+        add("decode" if nested else "pattern" if not _pgroups
+            else "lexical",
             f"value is not a valid xsd:{xsd_kind}",
             val_s.rlike(translate_xsd_pattern(xsd_lex_pattern)))
 
@@ -1019,132 +1052,35 @@ def compile_column(cs: ColumnSpec,
     return norm, checks
 
 
-def _member_predicate(col: Column, val_s: Column,
-                      member: ColumnSpec) -> Column:
-    """TRUE when the value decodes as this union member AND satisfies the
-    member's own facets (member facet re-application after union decode,
-    reference: simple_types.py:1180-1196 — pushed patterns/facets are
-    checked against the member that actually decoded the value).
+def _compile_list(cs: ColumnSpec, value: Column,
+                  namespaces: Optional[dict], nested: bool,
+                  folds: Optional[dict[str, Column]]
+                  ) -> tuple[Optional[Column], list[RowCheck]]:
+    """A list column (XsdList, simple_types.py:991-1019): the column's
+    own facets, then every item through compile_column.
 
-    Patterns apply to the LEXICAL form (the original string), ordered
-    facets to the decoded member value — same split as the reference."""
-    if member.dtype and member.dtype.startswith("xsd:"):
-        return _xsd_member_predicate(col, val_s, member)
-    typed = col.try_cast(member.dtype) if member.dtype != "string" else col
-    ok = typed.isNotNull() if member.dtype != "string" else col.isNotNull()
-    mgroups = _collect_pattern_groups(member)
-    if mgroups:
-        ok = ok & _pattern_groups_ok(val_s, mgroups)
-    if member.enum is not None:
-        ok = ok & typed.isin(*member.enum)
-    if member.min_inclusive is not None:
-        ok = ok & (typed >= _lit(member.dtype, member.min_inclusive))
-    if member.min_exclusive is not None:
-        ok = ok & (typed > _lit(member.dtype, member.min_exclusive))
-    if member.max_inclusive is not None:
-        ok = ok & (typed <= _lit(member.dtype, member.max_inclusive))
-    if member.max_exclusive is not None:
-        ok = ok & (typed < _lit(member.dtype, member.max_exclusive))
-    if member.min_length is not None:
-        ok = ok & (_length_col(col, member.dtype) >= member.min_length)
-    if member.max_length is not None:
-        ok = ok & (_length_col(col, member.dtype) <= member.max_length)
-    return ok
-
-
-def _xsd_member_predicate(col: Column, val_s: Column,
-                          member: ColumnSpec) -> Column:
-    """Union-member predicate for XSD built-in member types — the
-    reference's memberTypes="xs:date xs:dateTime" shape
-    (simple_types.py:1178-1211; tests/validators/
-    test_simple_types.py:227-236): the member matches when the value is
-    in ITS lexical space and satisfies the member's own facets. Ordered
-    facets on temporal members go through the same partial-order
-    machinery as scalar columns."""
-    from ..functions import temporal_order as _TORD
-    from ..functions.temporal_lex import ALL as _XSD_LEX
-    kind = member.dtype[4:]
-    ordered = [("minInclusive", member.min_inclusive),
-               ("minExclusive", member.min_exclusive),
-               ("maxInclusive", member.max_inclusive),
-               ("maxExclusive", member.max_exclusive)]
-    if kind in _XSD_INT_TYPES:
-        phys, lo, hi = _XSD_INT_TYPES[kind]
-        t = val_s.try_cast(phys)
-        ok = val_s.rlike(translate_xsd_pattern(_XSD_INT_LEX)) \
-            & t.isNotNull()
-        if lo is not None:
-            ok = ok & (t >= _lit(phys, lo))
-        if hi is not None:
-            ok = ok & (t <= _lit(phys, hi))
-        for fname, v in ordered:
-            if v is None:
-                continue
-            _check_int_literal(kind, fname, v)
-            op = {"minInclusive": t >= _lit(phys, v),
-                  "minExclusive": t > _lit(phys, v),
-                  "maxInclusive": t <= _lit(phys, v),
-                  "maxExclusive": t < _lit(phys, v)}[fname]
-            ok = ok & op
-        if member.enum is not None:
-            eok = None
-            for e in member.enum:
-                eq = t == _lit(phys, e)
-                eok = eq if eok is None else eok | eq
-            ok = ok & eok
-    elif kind in _XSD_LEX:
-        ok = val_s.rlike(translate_xsd_pattern(_XSD_LEX[kind]))
-        for fname, v in ordered:
-            if v is None:
-                continue
-            if kind in _TORD.DURATION_KINDS:
-                _TORD.parse_duration_literal(str(v), kind)
-                ok = ok & _TORD.duration_ordered_valid(
-                    val_s, fname, str(v), kind)
-            elif kind in _TORD.TEMPORAL_KINDS:
-                _TORD.parse_temporal_literal(str(v), kind)
-                ok = ok & _TORD.temporal_ordered_valid(
-                    val_s, fname, str(v), kind)
-            else:
-                raise ValueError(
-                    f"ordered facet {fname} unsupported for union "
-                    f"member xsd:{kind}")
-        if member.enum is not None:
-            ok = ok & val_s.isin(*[str(e) for e in member.enum])
-    else:
-        raise ValueError(f"unknown xsd union member type "
-                         f"{member.dtype!r}")
-    mgroups = _collect_pattern_groups(member)
-    if mgroups:
-        ok = ok & _pattern_groups_ok(val_s, mgroups)
-    if member.length is not None:
-        ok = ok & (F.length(val_s) == member.length)
-    if member.min_length is not None:
-        ok = ok & (F.length(val_s) >= member.min_length)
-    if member.max_length is not None:
-        ok = ok & (F.length(val_s) <= member.max_length)
-    return ok
-
-
-def compile_item_checks(cs: ColumnSpec) -> list[RowCheck]:
-    """Array-element facets via exists() on the NEGATED element predicate.
-
-    Built with the Column API (F.exists + Column lambdas) so the whole
-    thing stays in codegen WITHOUT interpolating patterns/enums into SQL
-    literal syntax — Spark SQL string literals eat backslashes ('\\d'
-    parses as 'd'), so an F.expr-built item pattern silently validated
-    against the wrong regex; Column.rlike takes the pattern verbatim.
-
-    lexical_list columns (XsdList over a string column,
-    simple_types.py:991-1019) are whitespace-collapsed and split first;
-    items are then try_cast to the item dtype, with a dedicated
-    facet:item:decode check for non-castable members."""
-    item = cs.item
-    if item is not None:
-        _validate_column_spec(item)
-    col = F.col(cs.name)
+    A lexical_list column is a space-separated string: it is
+    whitespace-collapsed and split first, and its length facets count
+    items (facets.py:171-206 len() over the decoded list), not
+    characters. An array column's length facets count elements through
+    _length_col. The items' checks compile once, in one F.aggregate
+    that ORs a bitmask of failed checks over the items, one bit per
+    constraint id (the bounded integer kinds' cast and lexical decode
+    checks share facet:item:decode); a NULL valid counts as failed, as
+    in the row pass. Given `folds`, the fold becomes a named column
+    there and the checks read that name: inline, each check would carry
+    (and run) its own copy of the fold. Built with the Column API, so
+    patterns reach Column.rlike verbatim (Spark SQL string literals eat
+    backslashes)."""
+    base_fields = {**cs.__dict__, "item": None}
     if cs.lexical_list:
-        trimmed = F.trim(F.regexp_replace(col, r"\s+", " "))
+        base_fields.update(length=None, min_length=None, max_length=None)
+    norm, checks = compile_column(ColumnSpec(**base_fields), value,
+                                  namespaces, nested)
+    prefix = "facet:item:" if nested else "facet:"
+    present = value.isNotNull()
+    if cs.lexical_list:
+        trimmed = F.trim(F.regexp_replace(value, r"\s+", " "))
         # '' must decode to an EMPTY list, not ['']: the reference's
         # XsdList uses str.split() with no args (simple_types.py:994),
         # so whitespace-only input yields zero items; F.split('', ' ')
@@ -1152,282 +1088,43 @@ def compile_item_checks(cs: ColumnSpec) -> list[RowCheck]:
         arr = F.when(F.length(trimmed) == 0,
                      F.array().cast("array<string>")) \
                .otherwise(F.split(trimmed, " "))
-        value_col = col.cast("string")
-    else:
-        arr = col
-        value_col = F.to_json(col)
-    present = col.isNotNull()
-
-    # outer length facets of a lexical list bound the ITEM COUNT (XSD
-    # list-type length semantics, facets.py:171-206) — compile_plan
-    # strips them from the base string column so they land here
-    size_checks: list[RowCheck] = []
-    if cs.lexical_list:
+        value_col = value.cast("string")
         n_items = F.size(arr)
+        for kind, bound, op, cmp in (
+                ("length", cs.length, "must be", operator.eq),
+                ("minLength", cs.min_length, ">=", operator.ge),
+                ("maxLength", cs.max_length, "<=", operator.le)):
+            if bound is not None:
+                checks.append(RowCheck(
+                    constraint=f"{prefix}{kind}:{cs.name}",
+                    reason=f"list length {op} {bound}",
+                    valid=~present | cmp(n_items, bound),
+                    value_col=value_col))
+    else:
+        arr = value
+        value_col = F.to_json(value)
 
-        def _sz(kindname: str, reason: str, ok) -> None:
-            size_checks.append(RowCheck(
-                constraint=f"facet:{kindname}:{cs.name}",
-                reason=reason, valid=~present | ok, value_col=value_col))
+    item = ColumnSpec(**{**cs.item.__dict__, "name": cs.name})
+    bits: dict[str, tuple[int, str]] = {}   # constraint -> (bit, reason)
 
-        if cs.length is not None:
-            _sz("length", f"list length must be {cs.length}",
-                n_items == cs.length)
-        if cs.min_length is not None:
-            _sz("minLength", f"list length >= {cs.min_length}",
-                n_items >= cs.min_length)
-        if cs.max_length is not None:
-            _sz("maxLength", f"list length <= {cs.max_length}",
-                n_items <= cs.max_length)
+    def fold(failed: Column, x: Column) -> Column:
+        for chk in compile_column(item, x, namespaces, nested=True)[1]:
+            bit = bits.setdefault(chk.constraint,
+                                  (1 << len(bits), chk.reason))[0]
+            failed = failed.bitwiseOR(F.when(chk.valid, 0).otherwise(bit))
+        return failed
 
-    if item.dtype and item.dtype.startswith("xsd:"):
-        # list/array of XSD temporal items (e.g. xs:list of xs:gYear,
-        # simple_types.py:991-1019 with a temporal item type): each item
-        # is validated against the type's lexical pattern, and ordered
-        # facets compile per element through the same partial-order
-        # machinery as scalar columns (functions/temporal_order.py) —
-        # the lambda builds the comparison fresh per element, so no HOF
-        # re-inline hazard on a shared outer expression.
-        from ..functions import temporal_order as _TORD
-        from ..functions.temporal_lex import ALL as _XSD_LEX
-        kind = item.dtype[4:]
-        int_bounded = kind in _XSD_INT_TYPES
-        int_unbounded = kind in _XSD_INT_UNBOUNDED
-        # non-integer built-ins with pure lexical spaces (scalar path
-        # handles these via strict_* branches; per-item the lexical
-        # check IS the decode)
-        _ITEM_EXTRA_LEX = {"boolean": r"true|false|1|0",
-                           "decimal": _XSD_DECIMAL_LEX,
-                           "float": _XSD_FLOAT_LEX,
-                           "double": _XSD_FLOAT_LEX}
-        if int_bounded:
-            lex = translate_xsd_pattern(_XSD_INT_LEX)
-        elif int_unbounded:
-            lex = translate_xsd_pattern(_XSD_INT_UNBOUNDED[kind])
-        elif kind in _XSD_LEX:
-            lex = translate_xsd_pattern(_XSD_LEX[kind])
-        elif kind in _ITEM_EXTRA_LEX:
-            lex = translate_xsd_pattern(_ITEM_EXTRA_LEX[kind])
-        else:
-            raise ValueError(f"unknown xsd lexical item type {item.dtype!r}")
-        checks: list[RowCheck] = list(size_checks)
-
-        def addx(kind_name: str, reason: str, elem_valid) -> None:
-            bad = F.exists(arr, lambda x: x.isNotNull() & ~elem_valid(x))
-            checks.append(RowCheck(
-                constraint=f"facet:item:{kind_name}:{cs.name}",
-                reason=f"list item: {reason}",
-                valid=~present | ~bad,
-                value_col=value_col,
-            ))
-
-        if int_bounded:
-            # bounded integer item kinds: 'strict' decode = lexical
-            # pattern AND physical-type cast (mirrors the scalar
-            # xsd_int_decode == 'strict' branch) — a regex-only decode
-            # would accept '300' as xsd:byte / '99999' as
-            # xsd:unsignedByte, and every downstream numeric check
-            # passes on the try_cast NULL (reference value-space check:
-            # helpers.py:151-237 rejects out-of-range after decode).
-            _phys_strict = _XSD_INT_TYPES[kind][0]
-
-            def _strict_decode(x, _p=_phys_strict):
-                s = x.cast("string")
-                return s.rlike(lex) & s.try_cast(_p).isNotNull()
-            addx("decode", f"item is not a valid {item.dtype}",
-                 _strict_decode)
-        else:
-            addx("decode", f"item is not a valid {item.dtype}",
-                 lambda x: x.cast("string").rlike(lex))
-        if int_bounded or int_unbounded:
-            # integer item kinds: type bounds (bounded kinds) and user
-            # ordered facets compare numerically per element; overflow/
-            # non-integral casts are suppressed (decode reports them)
-            phys = _XSD_INT_TYPES[kind][0] if int_bounded \
-                else "decimal(38,0)"
-            bounds = []
-            if int_bounded:
-                _, lo, hi = _XSD_INT_TYPES[kind]
-                if item.min_inclusive is None and lo is not None:
-                    bounds.append(("minInclusive", lo,
-                                   lambda a, b: a >= b))
-                if item.max_inclusive is None and hi is not None:
-                    bounds.append(("maxInclusive", hi,
-                                   lambda a, b: a <= b))
-            for fname, lit_v, op in bounds + [
-                    ("minInclusive", item.min_inclusive,
-                     lambda a, b: a >= b),
-                    ("minExclusive", item.min_exclusive,
-                     lambda a, b: a > b),
-                    ("maxInclusive", item.max_inclusive,
-                     lambda a, b: a <= b),
-                    ("maxExclusive", item.max_exclusive,
-                     lambda a, b: a < b)]:
-                if lit_v is None:
-                    continue
-                _check_int_literal(kind, fname, lit_v)
-
-                def int_pred(x, p=phys, v=lit_v, o=op):
-                    xv = x.cast("string").try_cast(p)
-                    return xv.isNull() | o(xv, _lit(p, v))
-                addx(fname, f"item must satisfy {fname} {lit_v} "
-                            f"(xsd:{kind})", int_pred)
-            if item.enum is not None:
-                for e in item.enum:
-                    _check_int_literal(kind, "enum", e)
-
-                def int_enum_pred(x, p=phys):
-                    # VALUE-space comparison ('007' == 7); decode
-                    # failures suppressed (reported by item:decode)
-                    xv = x.cast("string").try_cast(p)
-                    ok = None
-                    for e in item.enum:
-                        eq = xv == _lit(p, e)
-                        ok = eq if ok is None else ok | eq
-                    return xv.isNull() | ok
-                addx("enumeration", f"item must be in {item.enum}",
-                     int_enum_pred)
-            xigroups = _collect_pattern_groups(item)
-            if xigroups:
-                xjg = [[translate_xsd_pattern(p) for p in g]
-                       for g in xigroups]
-
-                def xpat_pred(x):
-                    ok = None
-                    for g in xjg:
-                        gok = x.cast("string").rlike(g[0])
-                        for pp in g[1:]:
-                            gok = gok | x.cast("string").rlike(pp)
-                        ok = gok if ok is None else ok & gok
-                    return ok
-                addx("pattern", f"item must match {xigroups}",
-                     xpat_pred)
-            return checks
-        for fname, lit_v in (("minInclusive", item.min_inclusive),
-                             ("minExclusive", item.min_exclusive),
-                             ("maxInclusive", item.max_inclusive),
-                             ("maxExclusive", item.max_exclusive)):
-            if lit_v is None:
-                continue
-            if kind in _TORD.DURATION_KINDS:
-                _TORD.parse_duration_literal(str(lit_v), kind)
-
-                def ordered_pred(x, f=fname, v=str(lit_v), k=kind):
-                    return ~x.cast("string").rlike(lex) \
-                        | _TORD.duration_ordered_valid(x.cast("string"),
-                                                       f, v, k)
-            elif kind in _TORD.TEMPORAL_KINDS:
-                _TORD.parse_temporal_literal(str(lit_v), kind)
-
-                def ordered_pred(x, f=fname, v=str(lit_v), k=kind):
-                    return ~x.cast("string").rlike(lex) \
-                        | _TORD.temporal_ordered_valid(x.cast("string"),
-                                                       f, v, k)
-            else:
-                raise ValueError(
-                    f"ordered item facet {fname} unsupported for "
-                    f"xsd:{kind}")
-            addx(fname, f"item must satisfy {fname} {lit_v} "
-                        f"(xsd:{kind})", ordered_pred)
-        if item.enum is not None:
-            addx("enumeration", f"item must be in {item.enum}",
-                 lambda x: x.cast("string").isin(
-                     *[str(e) for e in item.enum]))
-        ligroups = _collect_pattern_groups(item)
-        if ligroups:
-            ljg = [[translate_xsd_pattern(p) for p in g]
-                   for g in ligroups]
-
-            def pat_pred(x):
-                ok = None
-                for g in ljg:
-                    gok = x.cast("string").rlike(g[0])
-                    for pp in g[1:]:
-                        gok = gok | x.cast("string").rlike(pp)
-                    ok = gok if ok is None else ok & gok
-                return ok
-            addx("pattern", f"item must match {ligroups}", pat_pred)
-        if item.length is not None:
-            addx("length", f"item length must be {item.length}",
-                 lambda x: F.length(x.cast("string")) == item.length)
-        if item.min_length is not None:
-            addx("minLength", f"item length >= {item.min_length}",
-                 lambda x: F.length(x.cast("string")) >= item.min_length)
-        if item.max_length is not None:
-            addx("maxLength", f"item length <= {item.max_length}",
-                 lambda x: F.length(x.cast("string")) <= item.max_length)
-        return checks
-
-    typed_items = item.dtype not in (None, "string")
-
-    def cast_item(x: Column) -> Column:
-        return x.try_cast(item.dtype) if typed_items else x
-
-    checks: list[RowCheck] = list(size_checks)
-
-    def add(kind: str, reason: str, elem_valid) -> None:
-        bad = F.exists(arr, lambda x: x.isNotNull() & ~elem_valid(x))
+    failed = F.aggregate(arr, F.lit(0).cast("bigint"), fold)
+    if folds is not None:
+        name = f"__item_fold{len(folds)}"
+        folds[name] = failed.alias(name)
+        failed = F.col(name)
+    for constraint, (bit, reason) in bits.items():
         checks.append(RowCheck(
-            constraint=f"facet:item:{kind}:{cs.name}",
-            reason=f"list item: {reason}",
-            valid=~present | ~bad,
-            value_col=value_col,
-        ))
-
-    if typed_items:
-        add("decode", f"item is not a valid {item.dtype}",
-            lambda x: cast_item(x).isNotNull())
-
-    def ordered(op, bound):
-        lit = _lit(item.dtype, bound)
-        # decode failures are reported by facet:item:decode only — a
-        # null cast must not double-fire the ordered facet (typed_guard
-        # semantics of compile_column, applied per element)
-        def pred(x):
-            xv = cast_item(x)
-            return xv.isNull() | op(xv, lit)
-        return pred
-
-    if item.min_inclusive is not None:
-        add("minInclusive", f"item must be >= {item.min_inclusive}",
-            ordered(lambda a, b: a >= b, item.min_inclusive))
-    if item.max_inclusive is not None:
-        add("maxInclusive", f"item must be <= {item.max_inclusive}",
-            ordered(lambda a, b: a <= b, item.max_inclusive))
-    if item.min_exclusive is not None:
-        add("minExclusive", f"item must be > {item.min_exclusive}",
-            ordered(lambda a, b: a > b, item.min_exclusive))
-    if item.max_exclusive is not None:
-        add("maxExclusive", f"item must be < {item.max_exclusive}",
-            ordered(lambda a, b: a < b, item.max_exclusive))
-    aigroups = _collect_pattern_groups(item)
-    if aigroups:
-        ajg = [[translate_xsd_pattern(p) for p in g] for g in aigroups]
-
-        def pat_pred(x):
-            ok = None
-            for g in ajg:
-                gok = x.rlike(g[0])
-                for p in g[1:]:
-                    gok = gok | x.rlike(p)
-                ok = gok if ok is None else ok & gok
-            return ok
-        add("pattern", f"item must match {aigroups}", pat_pred)
-    if item.enum is not None:
-        enum_vals = list(item.enum)
-
-        def enum_pred(x):
-            xv = cast_item(x)
-            guard = xv.isNull() if typed_items else F.lit(False)
-            return guard | xv.isin(*enum_vals)
-        add("enumeration", f"item must be in {item.enum}", enum_pred)
-    if item.min_length is not None:
-        add("minLength", f"item length >= {item.min_length}",
-            lambda x: F.length(x) >= item.min_length)
-    if item.max_length is not None:
-        add("maxLength", f"item length <= {item.max_length}",
-            lambda x: F.length(x) <= item.max_length)
-    return checks
+            constraint=constraint, reason=f"list item: {reason}",
+            valid=~present | (failed.bitwiseAND(bit) == 0),
+            value_col=value_col))
+    return norm, checks
 
 
 # compiled plans per SparkContext, kept as an attribute of the context:
@@ -1481,22 +1178,8 @@ def _compile(spec: TableSpec) -> ValidationPlan:
     spec = flatten_restrictions(spec)
     plan = ValidationPlan(spec=spec)
     for cs in spec.columns:
-        if cs.item is not None:
-            base_fields = {**cs.__dict__, "item": None}
-            if cs.lexical_list:
-                # XSD length facets on a LIST type count ITEMS
-                # (facets.py:171-206 len() over the decoded list), not
-                # characters of the undecoded string — the item compiler
-                # below adds size() checks over the split array instead
-                base_fields.update(length=None, min_length=None,
-                                   max_length=None)
-            base = ColumnSpec(**base_fields)
-            norm, checks = compile_column(
-                base, namespaces=getattr(spec, "namespaces", None))
-            checks.extend(compile_item_checks(cs))
-        else:
-            norm, checks = compile_column(
-                cs, namespaces=getattr(spec, "namespaces", None))
+        norm, checks = compile_column(cs, F.col(cs.name), spec.namespaces,
+                                      folds=plan.item_folds)
         if norm is not None:
             plan.normalizations[cs.name] = norm
         plan.row_checks.extend(checks)
@@ -1505,8 +1188,9 @@ def _compile(spec: TableSpec) -> ValidationPlan:
         # holds (xsi:type / type alternatives, elements.py:654-684)
         cond = F.coalesce(F.expr(c.when), F.lit(False))
         for cs in c.columns:
-            _norm, cchecks = compile_column(
-                cs, namespaces=getattr(spec, "namespaces", None))
+            _norm, cchecks = compile_column(cs, F.col(cs.name),
+                                            spec.namespaces,
+                                            folds=plan.item_folds)
             for chk in cchecks:
                 plan.row_checks.append(RowCheck(
                     constraint=f"cond:{c.name}:{chk.constraint}",

@@ -504,7 +504,6 @@ def _record_array_parts(df: DataFrame, plan, spec: TableSpec) -> list:
 
 def violation_parts(df: DataFrame, plan: ValidationPlan,
                     refs: dict[str, DataFrame] | None = None,
-                    include_payload: bool = True,
                     extra_validators: list | None = None) -> list[DataFrame]:
     """The violation sources as separate lazy frames, CHEAPEST FIRST
     (row checks — one shuffle-free codegen pass — before identity
@@ -544,7 +543,7 @@ def violation_parts(df: DataFrame, plan: ValidationPlan,
                                        broadcast_ref=k.broadcast))
     for o in spec.occurs:
         parts.append(occurs_violations(df, o, spec.part_key))
-    if include_payload and spec.payload is not None:
+    if spec.payload is not None:
         parts.append(payload_violations(df, spec.payload, spec.part_key))
     for ev in (extra_validators or []):
         parts.append(ev(df))
@@ -553,7 +552,6 @@ def violation_parts(df: DataFrame, plan: ValidationPlan,
 
 def violations_frame(df: DataFrame, plan: ValidationPlan,
                      refs: dict[str, DataFrame] | None = None,
-                     include_payload: bool = True,
                      extra_validators: list | None = None) -> DataFrame:
     """Union of all violation sources, lazily composed (one DAG).
 
@@ -561,8 +559,7 @@ def violations_frame(df: DataFrame, plan: ValidationPlan,
     analog of the reference extra_validator hook (validation.py:494-498;
     invoked at elements.py:843-851)."""
     return reduce(lambda a, b: a.unionByName(b),
-                  violation_parts(df, plan, refs, include_payload,
-                                  extra_validators))
+                  violation_parts(df, plan, refs, extra_validators))
 
 
 @dataclass

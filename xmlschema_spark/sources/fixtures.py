@@ -36,10 +36,6 @@ def caption_for(i: int) -> str:
     return f"caption {i}: " + " ".join(toks)
 
 
-def dims_for(i: int) -> tuple[int, int]:
-    return 16 + (i * 7) % 497, 16 + (i * 13) % 497
-
-
 def make_images(spark: SparkSession, n_rows: int,
                 rows_per_partition: int = 10_000,
                 dirty: bool = False,

@@ -394,8 +394,6 @@ def spec_to_xsd(spec: TableSpec, *, lossy: bool = False) -> str:
         unexportable(f"occurs spec {getattr(o, 'name', '')!r}")
     if spec.payload is not None:
         unexportable("payload spec")
-    if spec.drift is not None:
-        unexportable("drift spec")
 
     # ---- row element
     heads: dict = {}

@@ -49,10 +49,20 @@ class ColumnSpec:
       union_members — ordered member ColumnSpecs: a value is valid iff
                      SOME member decodes AND satisfies that member's own
                      facets/patterns (member facet re-application after
-                     union decode, simple_types.py:1180-1196). Overrides
-                     union_of when both are set.
-      item         — for array columns: ColumnSpec applied per element
-                     (XsdList, simple_types.py:845,991-1019)
+                     union decode, simple_types.py:1180-1196). A member
+                     takes every column facet, compiled by the column
+                     compiler over the union's value; `assertion` on a
+                     member raises at compile time. Overrides union_of
+                     when both are set.
+      item         — for array and lexical_list columns: ColumnSpec
+                     applied per element (XsdList,
+                     simple_types.py:845,991-1019). An item takes every
+                     column facet, with the verdict the facet gives a
+                     column value, reported as facet:item:<kind>:<column>
+                     (an XSD item type's lexical failure is
+                     facet:item:decode); `assertion` on an item raises at
+                     compile time. A NULL element is not checked, so
+                     `nullable` does not apply to items or members.
       lexical_list — the column is a SPACE-SEPARATED string list: it is
                      whitespace-collapsed and split before item facets
                      apply (XsdList lexical decode,
@@ -251,19 +261,6 @@ class PayloadSpec:
     phash_col: str = "phash"
     phash_mode: str = "exact"      # "exact" | "perceptual"
     phash_max_hamming: int = 0
-
-
-@dataclass
-class DriftSpec:
-    """Distribution-drift check: per-column histogram + KL divergence vs a
-    reference batch, and quantile sketch deltas. No reference analog —
-    Spark-scale addition (SURVEY.md section 2.5)."""
-
-    name: str
-    columns: list[str] = field(default_factory=list)
-    bins: int = 32
-    kl_threshold: float = 0.05
-    quantiles: list[float] = field(default_factory=lambda: [0.05, 0.25, 0.5, 0.75, 0.95])
 
 
 @dataclass
@@ -524,7 +521,6 @@ class TableSpec:
     content_models: list[ContentModelSpec] = field(default_factory=list)
     record_arrays: list[RecordArraySpec] = field(default_factory=list)
     payload: Optional[PayloadSpec] = None
-    drift: Optional[DriftSpec] = None
     part_key: Optional[str] = None        # data-derived partition column
     allow_extra_columns: bool = True      # xs:any wildcard (wildcards.py:33-99)
     # per-record attribute wildcards (xs:anyAttribute inside record
@@ -571,6 +567,12 @@ class TableSpec:
                 c["union_members"] = [col(m) for m in c["union_members"]]
             return ColumnSpec(**c)
 
+        if d.get("drift") is not None:
+            # validate() never checked a drift spec; the field is gone
+            # rather than silently dropped
+            raise ValueError(
+                f"spec {d['name']!r}: 'drift' is not a TableSpec field — "
+                "run operators.drift.drift_report on the two batches")
         return TableSpec(
             name=d["name"],
             key_column=d["key_column"],
@@ -602,7 +604,6 @@ class TableSpec:
             record_arrays=[_ras_from_dict(r, col)
                            for r in d.get("record_arrays", [])],
             payload=PayloadSpec(**d["payload"]) if d.get("payload") else None,
-            drift=DriftSpec(**d["drift"]) if d.get("drift") else None,
             part_key=d.get("part_key"),
             allow_extra_columns=d.get("allow_extra_columns", True),
             attr_wildcards=[AttrWildcardSpec(**w)

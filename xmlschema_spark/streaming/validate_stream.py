@@ -4,11 +4,9 @@ The reference's lazy iterparse (xml_resource.py:590-656) validates
 subtree-at-a-time with deferred identity merging (schemas.py:1386-1405).
 The streaming analog:
 
-- row-local facet checks apply directly on the streaming DataFrame
-  (stateless — pure projection, no watermark needed);
-- identity/keyref checks are deferred per micro-batch via foreachBatch
-  (batch-scoped, like the reference's per-document scope), appending
-  violations + manifest increments through the checkpoint module;
+- validate_stream runs the whole batch engine per micro-batch via
+  foreachBatch (identity checks batch-scoped, like the reference's
+  per-document scope), appending violations and verdicts;
 - cross-batch uniqueness would need stateful dropDuplicates with a
   watermark on an event-time column — exposed via
   streaming_unique_violations for tables that have one.
@@ -28,19 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState  # noqa: F401
 
 from ..distribute import worker_kernel
-from ..operators.row_checks import row_violations
 from ..operators.sketch import compress, leaf_rows
-from ..plans.compiler import ValidationPlan, compile_plan
 from ..specs import TableSpec
-
-
-def streaming_row_violations(stream_df: DataFrame,
-                             spec_or_plan: TableSpec | ValidationPlan) -> DataFrame:
-    """Stateless row-local violations on a streaming DataFrame — safe for
-    append-mode sinks, no state store, no watermark."""
-    plan = spec_or_plan if isinstance(spec_or_plan, ValidationPlan) \
-        else compile_plan(spec_or_plan)
-    return row_violations(stream_df, plan)
 
 
 def validate_stream(stream_df: DataFrame, spec: TableSpec,
